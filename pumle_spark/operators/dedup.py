@@ -308,7 +308,9 @@ def connected_components(
         if row["s"] is None:
             raise RuntimeError(
                 "connected_components: SUM(comp) observable returned NULL on "
-                f"{row['n']} rows — label sum overflow; cannot prove convergence"
+                f"{row['n']} rows — either the decimal(38,0) label sum overflowed "
+                "(non-ANSI mode; ANSI mode raises inside the job instead) or some "
+                "labels are NULL; cannot prove convergence"
             )
         prev_sum = row["s"]
     if not converged:

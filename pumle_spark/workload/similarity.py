@@ -529,7 +529,7 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12 negative result: pinning the LSH codes and the rank<=2 IVF
     # assignment as well probed 7.12 vs 5.26 s — two more serialized
     # barriers cost more than the re-run folds they save; only the decoded
-    # corpus and the 6-consumer exact pass stay pinned.
+    # corpus stays pinned (the exact pass above recomputes per consumer).
     codes = ann_lsh_codes(spark, sf_dir)
     qcodes = codes.join(F.broadcast(q.select("query_id")), codes.vec_id == F.col("query_id")).select(
         "query_id", "bucket_code"

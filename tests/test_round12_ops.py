@@ -133,9 +133,12 @@ def test_hll_setops_plan_shape(spark):
     # shape's checkpointed (tag, k) relation must be gone
     assert "Scan ExistingRDD[tag" not in plan
     # every branch reads the SAME pushed-filter orders rollup — the pre-
-    # execution AQE plan prints one copy per consumer and reuses the stage
-    # at runtime; no other table may appear
+    # execution AQE plan prints one copy per consumer (three) and reuses the
+    # stage at runtime; no other table may appear, and a fourth copy means
+    # a branch re-scans orders
     assert "lineitem" not in plan and "customer" not in plan
+    assert plan.count("FileScan parquet") == 3
+    assert plan.count("orders.parquet]") == 3
 
 
 def test_q4_prefilter_pushdown(spark):

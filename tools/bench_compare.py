@@ -8,7 +8,8 @@ Usage:
 
 Accepts either a raw bench line or a driver BENCH_r{N}.json whose "tail"
 holds (possibly truncated) bench output — truncated tails are parsed
-best-effort for whatever per-query numbers survive.
+best-effort for whatever per-query numbers survive. When both inputs are
+tools/probe.py records, PLAN-CHANGED marks each query whose plan changed.
 """
 
 from __future__ import annotations
@@ -43,6 +44,15 @@ def load_queries(path: str) -> dict[str, float]:
     return out
 
 
+def load_plans(path: str) -> dict[str, dict]:
+    """Per-query plan records of a tools/probe.py output; {} for other inputs."""
+    try:
+        with open(path) as fh:
+            return dict(json.load(fh).get("plans") or {})
+    except (json.JSONDecodeError, AttributeError):
+        return {}
+
+
 def _registry_names() -> frozenset[str] | None:
     """Query names the engine actually registers — salvaged pairs from a
     truncated tail are restricted to these so stray numeric fields in a
@@ -61,14 +71,14 @@ def _registry_names() -> frozenset[str] | None:
         return None
 
 
-def main() -> int:
+def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("before")
     ap.add_argument("after")
     ap.add_argument("--pct", type=float, default=20.0, help="regression threshold %%")
     ap.add_argument("--floor", type=float, default=0.3,
                     help="ignore deltas where both sides are under this many seconds")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     a, b = load_queries(args.before), load_queries(args.after)
     shared = sorted(set(a) & set(b))
@@ -88,6 +98,11 @@ def main() -> int:
         print(f"added ({len(added)}): {' '.join(added)}")
     if removed:
         print(f"removed ({len(removed)}): {' '.join(removed)}")
+
+    pa, pb = load_plans(args.before), load_plans(args.after)
+    for q in sorted(set(pa) & set(pb)):
+        if pa[q]["fingerprint"] != pb[q]["fingerprint"]:
+            print(f"PLAN-CHANGED {q}")
 
     regressions = []
     for q in shared:

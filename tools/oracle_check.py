@@ -250,6 +250,7 @@ def main() -> int:
                     "n_pass": n_pass,
                     "n_fail": n_fail,
                     "n_rows_only": n_rowsonly,
+                    **({"partial": True, "only": sorted(only)} if only else {}),
                     "queries": record,
                 },
                 fh,

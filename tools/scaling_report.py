@@ -1,4 +1,4 @@
-"""Scaling-exponent report between two bench_probe artifacts at different
+"""Scaling-exponent report between two tools/probe.py records at different
 scale factors: the mechanical super-linear detector (round-5 verdict item 7).
 
 For each query timed at both scales, the fitted exponent is
@@ -61,8 +61,8 @@ def _load(path: str) -> tuple[dict[str, float], dict[str, str]]:
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("lo", help="bench_probe JSON at the smaller scale")
-    ap.add_argument("hi", help="bench_probe JSON at the larger scale")
+    ap.add_argument("lo", help="probe.py JSON at the smaller scale")
+    ap.add_argument("hi", help="probe.py JSON at the larger scale")
     ap.add_argument("--sf-lo", type=float, default=0.1)
     ap.add_argument("--sf-hi", type=float, default=1.0)
     ap.add_argument("--alpha", type=float, default=1.3,
