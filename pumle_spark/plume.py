@@ -17,7 +17,8 @@ from pyspark.sql.functions import broadcast
 def plume_predicate(threshold: float = 0.05) -> F.Column:
     """The single source of truth for "cell is in the plume": sg strictly
     above threshold, NaN/NULL-aware. Shared by the batch plume queries and
-    the streaming monitor so the two paths cannot drift at the boundary."""
+    (through plume_size_over_time) the streaming monitor, so the two paths
+    cannot drift at the boundary."""
     return F.col("sg").isNotNull() & ~F.isnan("sg") & (F.col("sg") > threshold)
 
 

@@ -52,10 +52,19 @@ _HASH_FROM_GRDECL = r"grdecl_[^_/]+_([0-9a-f]+)\.json$"
 def read_states(spark: SparkSession, glob: str) -> DataFrame:
     """S2: states scan → (sim_hash, t, pressure array, s array-of-pairs).
 
-    wholetext read (one row per file) → from_json with the explicit element
-    schema → posexplode for the exact timestep index t.
+    wholetext read (one row per file) → parse_states.
     """
-    raw = spark.read.text(glob, wholetext=True).select(
+    return parse_states(spark.read.text(glob, wholetext=True))
+
+
+def parse_states(raw_text: DataFrame) -> DataFrame:
+    """How a bronze states file becomes rows, for the batch scan and the
+    file stream alike: ``raw_text`` holds one whole file per row in
+    ``value``; the file name gives sim_hash, from_json with the explicit
+    element schema parses the series, and posexplode gives the exact
+    timestep index t.
+    """
+    raw = raw_text.select(
         F.regexp_extract(F.input_file_name(), _HASH_FROM_STATES, 1).alias("sim_hash"),
         F.from_json("value", ArrayType(STATE_SCHEMA)).alias("states"),
     )

@@ -1,9 +1,11 @@
 """Streaming pipelines: file-arrival bronze ingest and event analytics.
 
-Two streams mirror the batch engine:
+A stream here is the batch query run incrementally, so each stream reuses
+its batch code:
 
-1. ``stream_bronze_states``: readStream over the bronze landing directory —
-   the streaming twin of sources.bronze.read_states. Each arriving
+1. ``stream_bronze_states``: readStream over the bronze landing directory,
+   parsed by sources.bronze.parse_states and zipped by ingest.states_long,
+   exactly as the batch read_states + states_long. Each arriving
    states_*.json file becomes long (sim_hash, t, row_idx, pressure, sw, sg)
    rows; the query appends to golden Parquet, turning the reference's
    "menu option 2" manual persist (main.py:108-122) into a continuous,
@@ -14,19 +16,91 @@ Two streams mirror the batch engine:
    (same results on the same closed windows, late data dropped past the
    watermark).
 
+``closed_stream`` runs a stream over a closed input to completion; the
+registered ``stream_*_final`` queries all go through it.
+
 Tests drive both with real micro-batches (file source / processAllAvailable).
 """
 
 from __future__ import annotations
 
+import contextlib
+import os
+import shutil
+import tempfile
+import uuid
+from collections.abc import Callable, Iterator
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from pumle_spark.sources.bronze import STATE_SCHEMA
-from pyspark.sql.types import ArrayType
+# Each stateful streaming shuffle materializes ONE state-store instance PER
+# partition PER micro-batch, so a small staged batch pays partition-count
+# setup, not data cost (measured on the stream-stream join at sf0.1: 5.9s
+# at 32 partitions → 2.4s at 8; a vanilla session defaults to 200).
+# Production streams size this to sustained throughput — the knob, not the
+# operator, changes.
+STREAM_SHUFFLE_PARTITIONS = 8
+_PARTITIONS_CONF = "spark.sql.shuffle.partitions"
 
-_HASH_FROM_STATES = r"states_[^_/]+_([0-9a-f]+)\.json$"
+
+class ClosedStream:
+    """One run of a stream over a closed input, owned by ``closed_stream``:
+    stage input files under ``dir``; ``checkpoint`` is the query's
+    checkpoint and ``sink`` its unique memory-sink name."""
+
+    def __init__(self, spark: SparkSession, prefix: str):
+        self.spark = spark
+        self.dir = tempfile.mkdtemp(prefix=prefix)
+        self.checkpoint = os.path.join(self.dir, "ckpt")
+        self.sink = f"{prefix}{uuid.uuid4().hex[:8]}"
+
+    def drain(
+        self,
+        stream: DataFrame,
+        finish: Callable[[DataFrame], DataFrame] = lambda rows: rows,
+        output_mode: str = "append",
+    ) -> DataFrame:
+        """Run ``stream`` into the memory sink until the input is used up and
+        return ``finish`` (a batch step) over everything it emitted."""
+        query = (
+            stream.writeStream.format("memory")
+            .queryName(self.sink)
+            .outputMode(output_mode)
+            .option("checkpointLocation", self.checkpoint)
+            .start()
+        )
+        return self.complete(query, lambda: finish(self.spark.table(self.sink)))
+
+    def complete(self, query: StreamingQuery, result: Callable[[], DataFrame]) -> DataFrame:
+        """Process all available input, stop ``query``, and materialize
+        ``result()`` so it outlives the sink and the temp dir."""
+        try:
+            query.processAllAvailable()
+        finally:
+            query.stop()
+        return result().localCheckpoint(eager=True)
+
+
+@contextlib.contextmanager
+def closed_stream(spark: SparkSession, prefix: str) -> Iterator[ClosedStream]:
+    """Scope for driving one stream over a closed input to completion.
+
+    Pins spark.sql.shuffle.partitions to STREAM_SHUFFLE_PARTITIONS for the
+    scope; on exit it restores the old value, drops the sink view and
+    deletes the temp dir. The result is localCheckpoint-ed inside the
+    scope (``ClosedStream.complete``), so no lazy plan escapes with the
+    pinned value or a path into the deleted dir."""
+    run = ClosedStream(spark, prefix)
+    old = spark.conf.get(_PARTITIONS_CONF)
+    spark.conf.set(_PARTITIONS_CONF, str(STREAM_SHUFFLE_PARTITIONS))
+    try:
+        yield run
+    finally:
+        spark.conf.set(_PARTITIONS_CONF, old)
+        spark.catalog.dropTempView(run.sink)
+        shutil.rmtree(run.dir, ignore_errors=True)
 
 
 def stream_bronze_states(spark: SparkSession, landing_dir: str) -> DataFrame:
@@ -36,29 +110,16 @@ def stream_bronze_states(spark: SparkSession, landing_dir: str) -> DataFrame:
     indices, identical to the batch scan — the batch/streaming plans share
     the same operators, which is the point of Structured Streaming.
     """
+    from pumle_spark.ingest import states_long
+    from pumle_spark.sources.bronze import parse_states
+
     raw = (
         spark.readStream.format("text")
         .option("wholetext", "true")
         .option("maxFilesPerTrigger", 8)  # bounded micro-batches under burst
         .load(landing_dir)
     )
-    parsed = raw.select(
-        F.regexp_extract(F.input_file_name(), _HASH_FROM_STATES, 1).alias("sim_hash"),
-        F.from_json("value", ArrayType(STATE_SCHEMA)).alias("states"),
-    )
-    long = parsed.select("sim_hash", F.posexplode("states").alias("t", "state")).select(
-        "sim_hash",
-        "t",
-        F.posexplode(F.arrays_zip(F.col("state.pressure"), F.col("state.s"))).alias("row_idx", "z"),
-    )
-    return long.select(
-        "sim_hash",
-        "t",
-        "row_idx",
-        F.col("z.pressure").alias("pressure"),
-        F.col("z.s").getItem(0).alias("sw"),
-        F.col("z.s").getItem(1).alias("sg"),
-    )
+    return states_long(parse_states(raw))
 
 
 def start_bronze_to_golden(
@@ -98,24 +159,19 @@ def start_plume_monitor(
     oversized state arrays drop the same rows in both paths. One bronze
     file carries a sim's complete state series, so every per-(sim, t)
     aggregate closes within its micro-batch; foreachBatch runs the batch
-    aggregation and appends. Exactly-once per input file comes from the
+    plume.plume_size_over_time on it and appends. Exactly-once per input file comes from the
     checkpointed file source; a mid-write crash can duplicate a batch's
     output rows on restart (standard foreachBatch at-least-once residue),
     so downstream readers key by (sim_hash, t)."""
     from pumle_spark.ingest import active_index
-    from pumle_spark.plume import plume_predicate
+    from pumle_spark.plume import plume_size_over_time
     from pumle_spark.sources.bronze import read_actnum
 
     act_idx = active_index(read_actnum(spark, actnum_glob))
 
     def emit(batch_df: DataFrame, batch_id: int) -> None:
-        out = (
-            batch_df.join(act_idx, ["sim_hash", "row_idx"])
-            .filter(plume_predicate(threshold))
-            .groupBy("sim_hash", "t")
-            .agg(F.count(F.lit(1)).alias("n_plume_cells"))
-        )
-        out.write.mode("append").parquet(out_dir)
+        batch = batch_df.join(act_idx, ["sim_hash", "row_idx"])
+        plume_size_over_time(batch, threshold).write.mode("append").parquet(out_dir)
 
     return (
         stream_bronze_states(spark, landing_dir)

@@ -21,28 +21,22 @@ from pumle_spark.workload import register
 _SESSION_GAP_US = 1800 * 1_000_000  # 30 min
 
 
-def _scoped_stream_partitions(spark, n: int = 8):
-    """Temporarily pin spark.sql.shuffle.partitions for a driver-gated
-    StreamingQuery run: each stateful streaming shuffle materializes ONE
-    state-store instance PER partition PER micro-batch, so a small staged
-    batch pays partition-count setup, not data cost (measured on the
-    stream-stream join at sf0.1: 5.9s at 32 partitions → 2.4s at 8; the
-    driver's vanilla session defaults to 200). Production streams size
-    this to sustained throughput — the knob, not the operator, changes.
-    The stream runs to completion and the result is localCheckpoint-ed
-    inside the scope, so no lazy plan escapes with the pinned value."""
-    import contextlib
-
-    @contextlib.contextmanager
-    def scope():
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
-
-    return scope()
+def _stage_with_sentinel(events: DataFrame, src: str, copies: int = 1) -> None:
+    """Stage ``events`` as ``copies`` parquet files under ``src``, then one
+    far-future sentinel row (event_type 'sentinel', ts 100 days past the
+    last event) whose file pushes the watermark past every real window.
+    The sentinel takes ``events``' columns; finals filter it back out."""
+    for _ in range(copies):
+        events.coalesce(1).write.mode("append").parquet(src)
+    fill = {
+        "event_id": F.lit(10**9) + F.max("event_id"),
+        "ts": F.max("ts") + F.expr("INTERVAL 100 DAYS"),
+        "user_id": F.lit(-1).cast("bigint"),
+        "event_type": F.lit("sentinel"),
+        "value": F.lit(0.0),
+    }
+    sentinel = events.agg(*(fill[c].alias(c) for c in events.columns))
+    sentinel.coalesce(1).write.mode("append").parquet(src)
 
 
 @register(
@@ -66,50 +60,19 @@ def stream_hourly_rollup_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermarked streaming must converge to exactly the batch aggregates
     once every window is closed (the same equivalence the pytest gates pin,
     now scored by the driver too)."""
-    import tempfile
-    import uuid
+    from pumle_spark.streaming.pipeline import closed_stream, stream_events_hourly
 
-    from pumle_spark.streaming.pipeline import stream_events_hourly
-
-    cols = ["event_id", "ts", "event_type", "value"]
-    events = table(spark, sf_dir, "events").select(*cols)
-
-    tmp = tempfile.mkdtemp(prefix="stream_hourly_final_")
-    src, ckpt = f"{tmp}/src", f"{tmp}/ckpt"
-    events.coalesce(1).write.mode("append").parquet(src)
-    sentinel = events.agg(
-        (F.lit(10**9) + F.max("event_id")).alias("event_id"),
-        (F.max("ts") + F.expr("INTERVAL 100 DAYS")).alias("ts"),
-        F.lit("sentinel").alias("event_type"),
-        F.lit(0.0).alias("value"),
-    )
-    sentinel.coalesce(1).write.mode("append").parquet(src)
-
-    sink = f"stream_hourly_final_{uuid.uuid4().hex[:8]}"
-    stream = spark.readStream.schema(
-        "event_id bigint, ts timestamp, event_type string, value double"
-    ).parquet(src)
-    with _scoped_stream_partitions(spark):
-        q = (
-            stream_events_hourly(stream, watermark="2 hours")
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .start()
+    events = table(spark, sf_dir, "events").select("event_id", "ts", "event_type", "value")
+    with closed_stream(spark, "stream_hourly_final_") as run:
+        src = f"{run.dir}/src"
+        _stage_with_sentinel(events, src)
+        stream = spark.readStream.schema(
+            "event_id bigint, ts timestamp, event_type string, value double"
+        ).parquet(src)
+        return run.drain(
+            stream_events_hourly(stream, watermark="2 hours"),
+            lambda rows: rows.filter(F.col("event_type") != "sentinel"),
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        # materialize off the transient memory sink before dropping the view
-        out = (
-            spark.table(sink)
-            .filter(F.col("event_type") != "sentinel")
-            .localCheckpoint(eager=True)
-        )
-    spark.catalog.dropTempView(sink)
-    return out
 
 
 @register(
@@ -791,39 +754,18 @@ def stream_join_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame
     are returned. The DuckDB oracle is the plain batch interval join —
     a green row proves the streaming join converges to batch semantics,
     the same equivalence contract as stream_hourly_rollup_final."""
-    import tempfile
-    import uuid
-
-    from pumle_spark.streaming.pipeline import stream_click_attribution
+    from pumle_spark.streaming.pipeline import closed_stream, stream_click_attribution
 
     cols = ["event_id", "ts", "user_id", "event_type"]
     events = table(spark, sf_dir, "events").select(*cols)
-    tmp = tempfile.mkdtemp(prefix="stream_join_attr_")
-    csrc, psrc, ckpt = f"{tmp}/clicks", f"{tmp}/purchases", f"{tmp}/ckpt"
-    events.filter(F.col("event_type") == "click").coalesce(1).write.parquet(csrc)
-    events.filter(F.col("event_type") == "purchase").coalesce(1).write.parquet(psrc)
-
     schema = "event_id bigint, ts timestamp, user_id bigint, event_type string"
-    clicks = spark.readStream.schema(schema).parquet(csrc)
-    purchases = spark.readStream.schema(schema).parquet(psrc)
-
-    sink = f"stream_join_attr_{uuid.uuid4().hex[:8]}"
-    with _scoped_stream_partitions(spark):
-        q = (
-            stream_click_attribution(clicks, purchases)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        out = spark.table(sink).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(sink)
-    return out
+    with closed_stream(spark, "stream_join_attr_") as run:
+        sides = []
+        for kind in ("click", "purchase"):
+            src = f"{run.dir}/{kind}"
+            events.filter(F.col("event_type") == kind).coalesce(1).write.parquet(src)
+            sides.append(spark.readStream.schema(schema).parquet(src))
+        return run.drain(stream_click_attribution(*sides))
 
 
 # --------------------------------------------------------------------------
@@ -934,47 +876,19 @@ def stream_dedup_events_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     copy survives dedup yields the same values; the value sum is an exact
     micro-unit BIGINT fold on both engines (same idiom as
     attribution_linear_credit)."""
-    import tempfile
-    import uuid
-
-    from pumle_spark.streaming.pipeline import stream_dedup_events
+    from pumle_spark.streaming.pipeline import closed_stream, stream_dedup_events
 
     cols = ["event_id", "ts", "user_id", "event_type", "value"]
     events = table(spark, sf_dir, "events").select(*cols)
-
-    tmp = tempfile.mkdtemp(prefix="stream_dedup_final_")
-    src, ckpt = f"{tmp}/src", f"{tmp}/ckpt"
-    events.coalesce(1).write.mode("append").parquet(src)  # copy 1
-    events.coalesce(1).write.mode("append").parquet(src)  # replayed copy 2
-    sentinel = events.agg(
-        (F.lit(10**9) + F.max("event_id")).alias("event_id"),
-        (F.max("ts") + F.expr("INTERVAL 100 DAYS")).alias("ts"),
-        F.lit(-1).cast("bigint").alias("user_id"),
-        F.lit("sentinel").alias("event_type"),
-        F.lit(0.0).alias("value"),
-    )
-    sentinel.coalesce(1).write.mode("append").parquet(src)
-
-    sink = f"stream_dedup_final_{uuid.uuid4().hex[:8]}"
-    stream = spark.readStream.schema(
-        "event_id bigint, ts timestamp, user_id bigint, event_type string, value double"
-    ).parquet(src)
-    with _scoped_stream_partitions(spark):
-        q = (
-            stream_dedup_events(stream, watermark="1 hour")
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        out = (
-            spark.table(sink)
-            .filter(F.col("event_type") != "sentinel")
+    with closed_stream(spark, "stream_dedup_final_") as run:
+        src = f"{run.dir}/src"
+        _stage_with_sentinel(events, src, copies=2)  # copy 2 is the replay
+        stream = spark.readStream.schema(
+            "event_id bigint, ts timestamp, user_id bigint, event_type string, value double"
+        ).parquet(src)
+        return run.drain(
+            stream_dedup_events(stream, watermark="1 hour"),
+            lambda rows: rows.filter(F.col("event_type") != "sentinel")
             .groupBy("event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
@@ -983,11 +897,8 @@ def stream_dedup_events_final(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.sum(F.round(F.col("value") * 1000000).cast("bigint")) / F.lit(1000000.0),
                     2,
                 ).alias("sum_value"),
-            )
-            .localCheckpoint(eager=True)
+            ),
         )
-    spark.catalog.dropTempView(sink)
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -2104,12 +2015,9 @@ def stream_running_totals_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     final state without relying on sink row order.
 
     Scale: state is one tuple per user partitioned across the state
-    store; _scoped_stream_partitions sizes the per-micro-batch state
-    instances for a staged run (production sizes it to throughput)."""
-    import shutil
-    import tempfile
-    import uuid
-
+    store; closed_stream sizes the per-micro-batch state instances for a
+    staged run (production sizes it to throughput)."""
+    from pumle_spark.streaming.pipeline import closed_stream
     from pumle_spark.streaming.running_totals import running_totals_apws
 
     e = table(spark, sf_dir, "events").select(
@@ -2117,9 +2025,8 @@ def stream_running_totals_final(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.round(F.col("value") * 1000000).cast("bigint").alias("vmic"),
     )
-    tmp = tempfile.mkdtemp(prefix="stream_totals_final_")
-    src, ckpt = f"{tmp}/src", f"{tmp}/ckpt"
-    try:
+    with closed_stream(spark, "stream_totals_") as run:
+        src = f"{run.dir}/src"
         # split by event parity → most users span both files/batches
         for par in (0, 1):
             (
@@ -2129,41 +2036,21 @@ def stream_running_totals_final(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .write.mode("append")
                 .parquet(src)
             )
-        sink = f"stream_totals_{uuid.uuid4().hex[:8]}"
         stream = (
             spark.readStream.schema("user_id bigint, vmic bigint")
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        with _scoped_stream_partitions(spark):
-            q = (
-                running_totals_apws(stream)
-                .writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .start()
+        return run.drain(
+            running_totals_apws(stream),
+            lambda rows: rows.groupBy("user_id")
+            .agg(
+                F.max_by("total_micro", "n_events").cast("bigint").alias("total_micro"),
+                F.max("n_events").cast("bigint").alias("n_events"),
             )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-            out = (
-                spark.table(sink)
-                .groupBy("user_id")
-                .agg(
-                    F.max_by("total_micro", "n_events")
-                    .cast("bigint")
-                    .alias("total_micro"),
-                    F.max("n_events").cast("bigint").alias("n_events"),
-                )
-                .orderBy("user_id")
-                .localCheckpoint(eager=True)
-            )
-        spark.catalog.dropTempView(sink)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+            .orderBy("user_id"),
+            output_mode="update",
+        )
 
 
 # --------------------------------------------------------------------------
@@ -2350,18 +2237,15 @@ def stream_sessionize_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly, the third closed-input equivalence contract beside
     stream_hourly_rollup_final and stream_running_totals_final."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
+    from pumle_spark.streaming.pipeline import closed_stream
     from pumle_spark.streaming.sessions import sessionize_stateful
 
     e = table(spark, sf_dir, "events").select(
         "user_id", F.unix_micros("ts").alias("tus")
     )
-    tmp = tempfile.mkdtemp(prefix="stream_sess_final_")
-    src, ckpt = f"{tmp}/src", f"{tmp}/ckpt"
-    try:
+    with closed_stream(spark, "stream_sess_") as run:
+        src = f"{run.dir}/src"
         mid = e.agg(F.avg("tus").cast("bigint").alias("m"))
         halves = e.crossJoin(F.broadcast(mid))
         gmax = e.agg(
@@ -2387,40 +2271,20 @@ def stream_sessionize_final(spark: SparkSession, sf_dir: str) -> DataFrame:
                 p = os.path.join(src, f)
                 if f.endswith(".parquet") and os.path.getmtime(p) > i * 1000:
                     os.utime(p, (i * 1000, i * 1000))
-        sink = f"stream_sess_{uuid.uuid4().hex[:8]}"
         stream = (
             spark.readStream.schema("user_id bigint, tus bigint")
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        with _scoped_stream_partitions(spark):
-            q = (
-                sessionize_stateful(stream, gap_us=_SESSION_GAP_US)
-                .writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-            out = (
-                spark.table(sink)
-                .select(
-                    "user_id",
-                    F.col("start_us").cast("bigint").alias("start_us"),
-                    F.col("end_us").cast("bigint").alias("end_us"),
-                    F.col("n_events").cast("bigint").alias("n_events"),
-                )
-                .orderBy("user_id", "start_us")
-                .localCheckpoint(eager=True)
-            )
-        spark.catalog.dropTempView(sink)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+        return run.drain(
+            sessionize_stateful(stream, gap_us=_SESSION_GAP_US),
+            lambda rows: rows.select(
+                "user_id",
+                F.col("start_us").cast("bigint").alias("start_us"),
+                F.col("end_us").cast("bigint").alias("end_us"),
+                F.col("n_events").cast("bigint").alias("n_events"),
+            ).orderBy("user_id", "start_us"),
+        )
 
 
 # --------------------------------------------------------------------------
@@ -3738,55 +3602,28 @@ def stream_trending_topk_final(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: streaming state is (window × event_type) counters bounded by
     the watermark horizon; the post-hoc rank partitions by window."""
-    import tempfile
-    import uuid
+    from pumle_spark.streaming.pipeline import closed_stream
 
-    cols = ["event_id", "ts", "event_type", "value"]
-    events = table(spark, sf_dir, "events").select(*cols)
-
-    tmp = tempfile.mkdtemp(prefix="stream_trend_final_")
-    src, ckpt = f"{tmp}/src", f"{tmp}/ckpt"
-    events.coalesce(1).write.mode("append").parquet(src)
-    sentinel = events.agg(
-        (F.lit(10**9) + F.max("event_id")).alias("event_id"),
-        (F.max("ts") + F.expr("INTERVAL 100 DAYS")).alias("ts"),
-        F.lit("sentinel").alias("event_type"),
-        F.lit(0.0).alias("value"),
-    )
-    sentinel.coalesce(1).write.mode("append").parquet(src)
-
-    sink = f"stream_trend_final_{uuid.uuid4().hex[:8]}"
-    stream = spark.readStream.schema(
-        "event_id bigint, ts timestamp, event_type string, value double"
-    ).parquet(src)
-    with _scoped_stream_partitions(spark):
+    events = table(spark, sf_dir, "events").select("event_id", "ts", "event_type", "value")
+    with closed_stream(spark, "stream_trend_final_") as run:
+        src = f"{run.dir}/src"
+        _stage_with_sentinel(events, src)
+        stream = spark.readStream.schema(
+            "event_id bigint, ts timestamp, event_type string, value double"
+        ).parquet(src)
         counts = (
             stream.withWatermark("ts", "2 hours")
             .groupBy(F.window("ts", "2 hours", "1 hour").alias("w"), "event_type")
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        out = (
-            spark.table(sink)
-            .filter(F.col("event_type") != "sentinel")
-            .select(
+        out = run.drain(
+            counts,
+            lambda rows: rows.filter(F.col("event_type") != "sentinel").select(
                 F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
                 "event_type",
                 F.col("n").cast("bigint").alias("n_events"),
-            )
-            .localCheckpoint(eager=True)
+            ),
         )
-    spark.catalog.dropTempView(sink)
     wrk = Window.partitionBy("window_start").orderBy(F.desc("n_events"), "event_type")
     return (
         out.withColumn("rnk", F.row_number().over(wrk).cast("int"))

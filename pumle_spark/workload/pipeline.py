@@ -109,9 +109,10 @@ def stream_plume_monitor_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STREAMING twin of pumle_golden_pipeline, driver-checked: a real
     StreamingQuery (streaming/pipeline.start_plume_monitor) watches the
     bronze landing directory, and as each simulation's states JSON arrives
-    computes the plume cell count per (sim, t) via the SHARED
-    plume.plume_predicate — the reference's headline metric (notebook cell
-    5.5, SURVEY §7.2) as continuous monitoring instead of a nightly batch.
+    computes the plume cell count per (sim, t) with the SHARED batch
+    plume.plume_size_over_time — the reference's headline metric (notebook
+    cell 5.5, SURVEY §7.2) as continuous monitoring instead of a nightly
+    batch.
 
     The oracle is the SAME DuckDB SQL as the batch flagship: streaming over
     a closed input must equal the batch computation exactly (stream-static
@@ -119,40 +120,27 @@ def stream_plume_monitor_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     row hash-checks the batch/streaming equivalence contract itself, not
     just the stream plumbing. Checkpoint and sink are fresh per call; the
     file-source offsets make each run process the full fixture set."""
-    import shutil
-    import tempfile
-
-    from pumle_spark.streaming.pipeline import start_plume_monitor
-    from pumle_spark.workload.events import _scoped_stream_partitions
+    from pumle_spark.streaming.pipeline import closed_stream, start_plume_monitor
 
     fixture_root = _ensure_bronze()
-    tmp = tempfile.mkdtemp(prefix="plume_monitor_")
-    try:
-        with _scoped_stream_partitions(spark):
-            q = start_plume_monitor(
-                spark,
-                str(fixture_root),
-                actnum_glob=str(fixture_root / "grdecl_GCS01_*.json"),
-                out_dir=f"{tmp}/out",
-                checkpoint_dir=f"{tmp}/ckpt",
-                threshold=0.05,
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-            out = (
-                spark.read.parquet(f"{tmp}/out")
-                .select(
-                    "sim_hash",
-                    F.col("t").cast("int").alias("t"),
-                    F.col("n_plume_cells").cast("bigint").alias("n_plume_cells"),
-                )
-                .localCheckpoint(eager=True)  # decouple from tmp before cleanup
-            )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    with closed_stream(spark, "plume_monitor_") as run:
+        out_dir = f"{run.dir}/out"
+        q = start_plume_monitor(
+            spark,
+            str(fixture_root),
+            actnum_glob=str(fixture_root / "grdecl_GCS01_*.json"),
+            out_dir=out_dir,
+            checkpoint_dir=run.checkpoint,
+            threshold=0.05,
+        )
+        return run.complete(
+            q,
+            lambda: spark.read.parquet(out_dir).select(
+                "sim_hash",
+                F.col("t").cast("int").alias("t"),
+                F.col("n_plume_cells").cast("bigint").alias("n_plume_cells"),
+            ),
+        )
 
 
 # --------------------------------------------------------------------------

@@ -4,13 +4,29 @@ from __future__ import annotations
 
 import json
 import time
+from pathlib import Path
 
 import pyspark.sql.functions as F
 import pytest
 
 from pumle_spark.functions import money
 from pumle_spark.streaming.pipeline import start_bronze_to_golden, stream_events_hourly
+from pumle_spark.tables import DEFAULT_SF_DIR
 from tests.fixtures import CASE, make_bronze
+
+SF = str(Path(DEFAULT_SF_DIR).parent / "sf0.001")  # smallest generated scale
+
+# The registered queries that drive a real StreamingQuery to completion
+# through streaming.pipeline.closed_stream.
+STREAM_FINALS = (
+    "stream_hourly_rollup_final",
+    "stream_join_click_attribution",
+    "stream_dedup_events_final",
+    "stream_running_totals_final",
+    "stream_sessionize_final",
+    "stream_trending_topk_final",
+    "stream_plume_monitor_final",
+)
 
 
 def test_bronze_stream_ingests_incrementally(spark, tmp_path):
@@ -594,3 +610,24 @@ def test_transform_with_state_running_totals(spark, tmp_path):
         assert latest == want
     finally:
         q.stop()
+
+
+@pytest.mark.parametrize("name", STREAM_FINALS)
+def test_stream_final_leaves_nothing_behind(spark, tmp_path, monkeypatch, name):
+    """One run of each stream final: its staged input, checkpoint and sink
+    view are gone afterwards, the session's partition count is restored,
+    and the returned rows outlive them."""
+    import tempfile
+
+    from pumle_spark import workload
+
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    views = temp_views()
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    assert workload.queries()[name](spark, SF).count() > 0
+    assert list(tmp_path.iterdir()) == []
+    assert temp_views() == views
+    assert spark.conf.get("spark.sql.shuffle.partitions") == partitions

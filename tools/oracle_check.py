@@ -10,9 +10,8 @@ on DuckDB over the same parquet tables, then compares:
     Spark returns int64, invisible to a %.12g value canon (3.0 -> "3").
   - order-insensitive canonicalized value hash
 
-Fetch path is driver-faithful by default: Spark via .toPandas(), DuckDB via
-.df() — the conversion pair that mangles HUGEINT the way the driver's
-recorded failures show. `--fetch raw` restores the old fetchall() path.
+Fetch path: Spark via .toPandas(), DuckDB via .df() — the conversion pair
+that mangles HUGEINT the way the recorded gate failures show.
 
 A hard TYPE LINT runs on every oracle regardless of value results: any
 result column whose DuckDB logical type contains HUGEINT fails the gate,
@@ -115,14 +114,6 @@ def main() -> int:
     ap.add_argument("--only", default=None)
     ap.add_argument("--verbose", action="store_true")
     ap.add_argument(
-        "--fetch",
-        choices=("pandas", "raw"),
-        default="pandas",
-        help="pandas (default) replicates the driver: Spark .toPandas() vs "
-        "DuckDB .df(), with a per-column dtype-kind check; raw is the old "
-        "fetchall() path (Python ints both sides — blind to HUGEINT)",
-    )
-    ap.add_argument(
         "--vanilla",
         action="store_true",
         help="use a bare SparkSession like the round driver does (catches "
@@ -170,16 +161,12 @@ def main() -> int:
         if only and name not in only:
             continue
         t0 = time.time()
-        skinds = dkinds = None
         try:
             sdf = fn(spark, args.sf)
             scols = list(sdf.columns)
-            if args.fetch == "pandas":
-                spdf = sdf.toPandas()
-                skinds = _kinds(spdf)
-                srows = list(spdf.itertuples(index=False, name=None))
-            else:
-                srows = [tuple(r) for r in sdf.collect()]
+            spdf = sdf.toPandas()
+            skinds = _kinds(spdf)
+            srows = list(spdf.itertuples(index=False, name=None))
         except Exception as exc:
             print(f"FAIL {name}: spark error: {exc}")
             record[name] = {"status": "FAIL", "problems": [f"spark error: {exc}"]}
@@ -194,12 +181,9 @@ def main() -> int:
             bad_types = lint_oracle_types(con, oracles[name])
             res = con.execute(oracles[name])
             dcols = [d[0] for d in res.description]
-            if args.fetch == "pandas":
-                dpdf = res.df()
-                dkinds = _kinds(dpdf)
-                drows = list(dpdf.itertuples(index=False, name=None))
-            else:
-                drows = res.fetchall()
+            dpdf = res.df()
+            dkinds = _kinds(dpdf)
+            drows = list(dpdf.itertuples(index=False, name=None))
         except Exception as exc:
             print(f"FAIL {name}: duckdb error: {exc}")
             record[name] = {"status": "FAIL", "problems": [f"duckdb error: {exc}"]}
@@ -215,7 +199,7 @@ def main() -> int:
             problems.append(f"rowcount spark={len(srows)} duckdb={len(drows)}")
         if sc != dc:
             problems.append(f"columns spark={sc} duckdb={dc}")
-        if skinds is not None and dkinds is not None and not problems:
+        if not problems:
             # numeric-kind drift (int64 vs float64) is exactly how a driver
             # hash mismatch looks before canonicalization flattens it
             for c in sc:
