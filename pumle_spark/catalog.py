@@ -12,13 +12,16 @@ live in golden Parquet, keyed by the catalog's sim_hash.
 Schema (db.py:15-23, FIXTURES.md §2):
     sim_hash     STRING  PK (md5(sorted fluid params)[:8], utils.py:52-81)
     sim_id       INT
-    fluid_params STRING  (canonical JSON — real columns live in sim_configs)
+    fluid_params STRING  (the exact canonical bytes sim_hash is the md5 of,
+                          json.dumps(sort_keys=True); interop.write_staging
+                          writes them to params.json as is)
     status       STRING  CREATED|RUNNING|COMPLETED|FAILED
     created_at   TIMESTAMP
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import tempfile
@@ -34,6 +37,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from pumle_spark.sources.local import local_frame
+
 # SimulationStatus enum (db.py:43-47)
 STATUSES = ("CREATED", "RUNNING", "COMPLETED", "FAILED")
 
@@ -46,6 +51,8 @@ CATALOG_SCHEMA = StructType(
         StructField("created_at", TimestampType(), True),
     ]
 )
+
+_LOAD_ATTEMPTS = 3
 
 
 class SimulationCatalog:
@@ -62,24 +69,38 @@ class SimulationCatalog:
         # (not just an exists() probe) and eagerly materializes via
         # localCheckpoint — the catalog is dim-sized, so this is cheap, and
         # the returned DataFrame no longer references the path, closing the
-        # window where a lazy scan lists files after a later swap.
+        # window where a lazy scan lists files after a later swap. A path
+        # that is absent with no swap in flight was never written (or was
+        # deleted): it is empty now, with nothing to wait for.
         last_err: Exception | None = None
-        for _ in range(3):
-            if os.path.exists(self.path):
-                try:
-                    return (
-                        self.spark.read.schema(CATALOG_SCHEMA)
-                        .parquet(self.path)
-                        .localCheckpoint(eager=True)
-                    )
-                except Exception as err:  # path swapped mid-read
-                    if "PATH_NOT_FOUND" not in str(err) and "does not exist" not in str(err):
-                        raise
-                    last_err = err
-            time.sleep(0.05)
+        for attempt in range(_LOAD_ATTEMPTS):
+            if attempt:
+                time.sleep(0.05)
+            if not os.path.exists(self.path):
+                swapping = self._swap_in_flight()
+                if not os.path.exists(self.path):  # re-check: the swap may just have ended
+                    if not swapping:
+                        break
+                    continue
+            try:
+                return (
+                    self.spark.read.schema(CATALOG_SCHEMA)
+                    .parquet(self.path)
+                    .localCheckpoint(eager=True)
+                )
+            except Exception as err:  # path swapped mid-read
+                if "PATH_NOT_FOUND" not in str(err) and "does not exist" not in str(err):
+                    raise
+                last_err = err
         if last_err is not None:  # path kept vanishing: a writer is live; surface it
             raise last_err
-        return self.spark.createDataFrame([], CATALOG_SCHEMA)
+        return local_frame(self.spark, [], CATALOG_SCHEMA)
+
+    def _swap_in_flight(self) -> bool:
+        """True while an _atomic_overwrite sits between its two renames: the
+        old tree is parked at ``catalog_old_*/v`` beside the path."""
+        parent = os.path.dirname(self.path) or "."
+        return bool(glob.glob(os.path.join(glob.escape(parent), "catalog_old_*", "v")))
 
     # -- write --------------------------------------------------------------
 

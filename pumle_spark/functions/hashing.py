@@ -13,12 +13,11 @@ built-in reproduces. Strategy:
 
 - driver-side: ``sim_hash`` — literally the reference algorithm (stock
   json/hashlib), for config generation paths where params are Python dicts.
-- distributed: ``sim_hash_udf`` — an Arrow-batched pandas UDF over a JSON
-  string column; each batch re-canonicalizes with json.dumps(sort_keys=True)
-  so the bytes fed to md5 are identical to the reference. This is NOT a hot
-  scan path — it runs once per simulation config (≤ millions of rows), so a
-  vectorized Python UDF is the right trade against a fragile
-  Java-float-repr reimplementation.
+- distributed: driver-rendered values, Spark md5 — ``sweep.generate_variations``
+  renders each distinct parameter value once on the driver with json.dumps
+  (≤100 points per varied parameter), concatenates the renderings in
+  json.dumps(sort_keys=True)'s layout, and hashes with Spark's md5. The md5
+  input is the reference's exact byte stream and no Python worker runs.
 - ``params_to_filename_string`` has an exact expression-level equivalent
   (``filename_expr``) because "%.2e" formatting IS identical between Python
   and Java's format_string.
@@ -30,11 +29,8 @@ import hashlib
 import json
 from collections.abc import Mapping
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 # --------------------------------------------------------------------------
 # F1 — sim_hash
@@ -52,30 +48,6 @@ def sim_hash(params: Mapping) -> str:
     """Bit-exact reference hash (utils.py:52-81): first 8 hex chars of the
     md5 of the canonically-serialized params dict."""
     return hashlib.md5(canonical_params_json(params).encode()).hexdigest()[:HASH_LEN]
-
-
-@pandas_udf(StringType())
-def sim_hash_udf(params_json: pd.Series) -> pd.Series:
-    """Distributed sim_hash over a JSON-string column.
-
-    Re-canonicalizes each value via json.loads → json.dumps(sort_keys=True),
-    so any key order / whitespace in the input yields the reference hash.
-    Arrow-batched; no per-row Python interpreter round trip.
-    """
-
-    def _h(s: str | None) -> str | None:
-        if s is None:
-            return None
-        return hashlib.md5(
-            json.dumps(json.loads(s), sort_keys=True).encode()
-        ).hexdigest()[:HASH_LEN]
-
-    return params_json.map(_h)
-
-
-def sim_hash_col(params_json: Column) -> Column:
-    """Column-level sim_hash (wraps the pandas UDF)."""
-    return sim_hash_udf(params_json)
 
 
 # --------------------------------------------------------------------------

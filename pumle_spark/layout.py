@@ -26,6 +26,14 @@ from pyspark.sql import Column, DataFrame
 
 DEFAULT_BITS = 8  # 256 buckets per dimension → 16-bit z-key for 2 dims
 
+# Range-exchange sampling: Spark seeds it from the RDD id, so with the
+# default 100 points per partition the file boundaries (and how well the
+# files prune) shift with whatever ran earlier in the session. Spark caps
+# the total sample at 1e6 points; asking for that cap samples every row of
+# an input of up to ~1e6 rows, so its boundaries are exact and repeatable.
+_SAMPLE_CONF = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
+_SAMPLE_POINTS = 1_000_000
+
 
 def bucketize(col: Column, cmin: Column, cmax: Column, bits: int = DEFAULT_BITS) -> Column:
     """Map a value with known [cmin, cmax] bounds onto 0..2^bits-1 with pure
@@ -85,13 +93,19 @@ def write_zordered(
         )
         .drop("xmin", "xmax", "ymin", "ymax")
     )
-    (
-        with_key.repartitionByRange(n_files, "_zkey")
-        .sortWithinPartitions("_zkey")
-        .drop("_zkey")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
+    spark = df.sparkSession
+    old = spark.conf.get(_SAMPLE_CONF)
+    spark.conf.set(_SAMPLE_CONF, str(-(-_SAMPLE_POINTS // n_files)))
+    try:
+        (
+            with_key.repartitionByRange(n_files, "_zkey")
+            .sortWithinPartitions("_zkey")
+            .drop("_zkey")
+            .write.mode("overwrite")
+            .parquet(path)
+        )
+    finally:
+        spark.conf.set(_SAMPLE_CONF, old)
 
 
 def hilbert_key(xb: str, yb: str, bits: int = DEFAULT_BITS) -> Column:

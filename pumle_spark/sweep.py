@@ -12,19 +12,24 @@ materializes on the driver; sim_id is assigned by row_number over the
 varied-parameter order, which equals the meshgrid enumeration order of the
 reference (first parameter slowest), property-tested in tests/.
 
-sim_hash for each combo is computed by the bit-exact pandas UDF
-(functions/hashing.py) over the canonical JSON of the FLUID section — the
-same dict the reference hashes (pumle.py:202-209).
+sim_hash for each combo is md5 over the canonical JSON of the FLUID
+section — the same dict the reference hashes (pumle.py:202-209). The driver
+renders each distinct value once with json.dumps (Python's float repr,
+which no Spark cast reproduces); Spark only concatenates those renderings
+in json.dumps(sort_keys=True)'s layout and takes md5, so no Python worker
+runs (functions/hashing.py).
 """
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 
-from pumle_spark.functions.hashing import sim_hash_udf
+from pumle_spark.functions.hashing import HASH_LEN
+from pumle_spark.sources.local import local_frame
 
 # PHYSICAL_LIMITS (parameters.py:36-45): param → (min, max). Keys are
 # lowercase as in the reference ('xnacl'); lookups normalize case so the
@@ -90,14 +95,35 @@ class VariedParam:
 
 
 def linspace_df(spark: SparkSession, name: str, lo: float, hi: float, points: int) -> DataFrame:
-    """G1: np.linspace as a lazy plan — spark.range + affine expression.
-    Endpoint-inclusive with exactly `points` values, like np.linspace."""
+    """G1: np.linspace as a constant table of (index, value, rendering).
+    Endpoint-inclusive with exactly `points` values, like np.linspace. Each
+    value is computed once on the driver, and its canonical-JSON rendering
+    (``_j_<name>``) comes from that same Python float."""
     if points < 2:
         raise ValueError("points must be >= 2 (parameters_variation.py:77-84)")
-    return spark.range(points).select(
-        F.col("id").alias(f"_i_{name}"),
-        (F.lit(lo) + F.col("id") * (F.lit(hi) - F.lit(lo)) / F.lit(points - 1)).alias(name),
+    values = [lo + i * (hi - lo) / (points - 1) for i in range(points)]
+    return local_frame(
+        spark,
+        [(i, v, json.dumps(v)) for i, v in enumerate(values)],
+        f"`_i_{name}` bigint, `{name}` double, `_j_{name}` string",
     )
+
+
+def _canonical_json(rendered: dict[str, Column | str]) -> Column:
+    """json.dumps(sort_keys=True)'s layout ``{"k": v, "k2": v2}`` over
+    pre-rendered values: a str value is literal JSON text, a Column holds it
+    per row. Literal runs are joined on the driver into one lit each."""
+    parts: list[Column] = []
+    text = "{"
+    for i, key in enumerate(sorted(rendered)):
+        text += (", " if i else "") + json.dumps(key) + ": "
+        value = rendered[key]
+        if isinstance(value, str):
+            text += value
+        else:
+            parts += [F.lit(text), value]
+            text = ""
+    return F.concat(*parts, F.lit(text + "}"))
 
 
 def generate_variations(
@@ -111,7 +137,7 @@ def generate_variations(
 
     Returns one row per combination: all base params (overridden where
     varied), sim_id (1-based, meshgrid order), fluid_params (canonical
-    JSON), sim_hash.
+    JSON, the exact bytes sim_hash is the md5 of), sim_hash.
     """
     if not varied:
         raise ValueError("need at least one varied parameter")
@@ -144,14 +170,16 @@ def generate_variations(
         if name not in varied_names:
             grid = grid.withColumn(name, F.lit(float(value)))
 
-    # canonical JSON over ALL params (sorted keys) → bit-exact sim_hash.
-    # to_json of a struct preserves field order, so build the struct with
-    # alphabetically sorted fields; float rendering is handled by the
-    # pandas UDF re-canonicalization (functions/hashing.py).
+    # canonical JSON over ALL params (sorted keys) → bit-exact sim_hash:
+    # base values render on the driver here, varied ones come rendered
+    # from linspace_df, so the md5 input is the reference's exact bytes.
     all_names = sorted(set(base_params) | varied_names)
-    params_struct = F.struct(*[F.col(n).alias(n) for n in all_names])
-    grid = grid.withColumn("fluid_params", F.to_json(params_struct))
-    grid = grid.withColumn("sim_hash", sim_hash_udf(F.col("fluid_params")))
+    rendered = {
+        n: F.col(f"_j_{n}") if n in varied_names else json.dumps(float(base_params[n]))
+        for n in all_names
+    }
+    grid = grid.withColumn("fluid_params", _canonical_json(rendered))
+    grid = grid.withColumn("sim_hash", F.substring(F.md5("fluid_params"), 1, HASH_LEN))
 
     return grid.select("sim_hash", "sim_id", "fluid_params", *all_names)
 

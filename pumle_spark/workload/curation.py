@@ -36,6 +36,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from pumle_spark.sources.local import local_frame
 from pumle_spark.tables import table
 from pumle_spark.workload import register
 from pumle_spark.workload.dedup import _SQL_COMPONENT_CHAIN, _SQL_TOKENS, _tokens_col
@@ -1873,8 +1874,8 @@ def curation_dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("n_tokens").cast("bigint").alias("n_tokens"),
     )
-    all_stages = spark.createDataFrame(
-        [("1_exact_dup",), ("2_near_dup",), ("3_kept",)], "stage string"
+    all_stages = local_frame(
+        spark, [("1_exact_dup",), ("2_near_dup",), ("3_kept",)], "stage string"
     )
     return (
         F.broadcast(all_stages)

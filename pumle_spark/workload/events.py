@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from pumle_spark.functions import money
 from pumle_spark.operators.topk import ranked_topk
+from pumle_spark.sources.local import local_frame
 from pumle_spark.tables import table
 from pumle_spark.workload import register
 
@@ -2464,7 +2465,7 @@ def attribution_markov_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.select(F.col("from_type").alias("removed"))
         .filter(F.col("removed") != "START")
         .distinct()
-        .unionAll(spark.createDataFrame([("<none>",)], "removed string"))
+        .unionAll(local_frame(spark, [("<none>",)], "removed string"))
         .localCheckpoint(eager=True)
     )
     conv_rows = rem.select(
@@ -3221,7 +3222,7 @@ def events_attribution_shapley(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("s")
         .agg(F.coalesce(F.sum("n"), F.lit(0)).cast("bigint").alias("v"))
     )
-    ch = spark.createDataFrame(list(_SHAP_CHANNELS), "channel string, bit int")
+    ch = local_frame(spark, list(_SHAP_CHANNELS), "channel string, bit int")
     w_case = "CASE bit_count(cast(s as bigint)) " + " ".join(
         f"WHEN {k} THEN {w}" for k, w in _SHAP_W.items()
     ) + " END"

@@ -34,6 +34,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from pumle_spark.sources.local import local_frame
 from pumle_spark.tables import table
 from pumle_spark.workload import register
 
@@ -1199,9 +1200,7 @@ def privacy_dp_budget_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("user_cents").cast("bigint").alias("sum_cents"),
         F.max("user_cents").cast("bigint").alias("sens_cents"),
     )
-    eps = spark.range(0).sparkSession.createDataFrame(
-        [(e,) for e in _DP_EPS_MICRO], "eps_micro bigint"
-    )
+    eps = local_frame(spark, [(e,) for e in _DP_EPS_MICRO], "eps_micro bigint")
     return (
         nat.join(F.broadcast(nat_tbl), nat["c_nationkey"] == nat_tbl["n_nationkey"])
         .crossJoin(F.broadcast(eps))
@@ -1331,7 +1330,7 @@ def abtest_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("x").cast("bigint").alias("sx"),
         F.sum(F.expr("cast(x as decimal(38,0)) * x")).alias("sxx"),
     )
-    grid = spark.createDataFrame([(m,) for m in _MDE_PM], "mde_pm int")
+    grid = local_frame(spark, [(m,) for m in _MDE_PM], "mde_pm int")
     req = F.ceil(
         F.expr(
             "cast(16000000 * (cast(n as decimal(38,0)) * sxx"
@@ -1440,9 +1439,7 @@ def privacy_dp_noisy_marginals(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = o.groupBy(F.col("o_orderpriority").alias("priority")).agg(
         F.count(F.lit(1)).cast("bigint").alias("true_n")
     )
-    noise = spark.createDataFrame(
-        _DPN_TABLE, "eps_milli bigint, idx bigint, k bigint"
-    )
+    noise = local_frame(spark, _DPN_TABLE, "eps_milli bigint, idx bigint, k bigint")
     # derive the (eps, idx) key on the cells side FIRST so the noise lookup
     # is a pure equi broadcast-hash join (a key expression mixing both
     # sides' columns would degrade to a nested-loop join)
@@ -1716,7 +1713,7 @@ def abtest_fdr_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("h.metric_kind").alias("metric_kind"), "event_type", F.col("h.z").alias("z"))
         .filter(F.col("z").isNotNull())
     )
-    phi = spark.createDataFrame(_PHI2, "zq bigint, p2 double")
+    phi = local_frame(spark, _PHI2, "zq bigint, p2 double")
     pvals = hyps.join(
         F.broadcast(phi),
         F.col("zq") == F.least(F.round(F.abs(F.col("z")) * 50).cast("bigint"), F.lit(300)),
@@ -2038,11 +2035,12 @@ def privacy_dp_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cnt").over(w_cum).cast("bigint").alias("cum_le"),
         F.sum("cnt").over(w_all).cast("bigint").alias("n"),
     )
-    grid = spark.createDataFrame(
+    grid = local_frame(
+        spark,
         [(e, q) for e in _DPQ_EPS_MILLI for q in _DPQ_Q_MILLI],
         "eps_milli bigint, q_milli bigint",
     )
-    gum = spark.createDataFrame(_GUM, "idx bigint, g double")
+    gum = local_frame(spark, _GUM, "idx bigint, g double")
     u_scaled = -F.abs(1000 * F.col("cum_le") - F.col("q_milli") * F.col("n"))
     gidx = F.conv(
         F.substring(

@@ -33,6 +33,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from pumle_spark.operators.topk import ranked_topk
+from pumle_spark.sources.local import local_frame
 from pumle_spark.tables import table
 from pumle_spark.workload import register
 
@@ -1639,7 +1640,7 @@ def graph_hyperball_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"shiftleft(CAST(1 AS BIGINT), 33 - {e})" for e in ext
     )  # empty field (0) contributes 2^33 — exactly the unpacked formula
     n_empty = " + ".join(f"CAST(({e} = 0) AS BIGINT)" for e in ext)
-    lc = spark.createDataFrame(_HB_LC, "v bigint, lc_est double")
+    lc = local_frame(spark, _HB_LC, "v bigint, lc_est double")
     sides = []
     for hop in range(1, _HB_HOPS + 1):
         grown = (

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import broadcast
 
 from pumle_spark.functions import money
+from pumle_spark.sources.local import local_frame
 from pumle_spark.tables import table
 from pumle_spark.workload import register
 
@@ -371,7 +372,7 @@ def wells_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the range predicate filters inside the match, so the grid side is
     streamed once with no shuffle.
     """
-    wells = spark.createDataFrame(_WELLS, "well_name string, wi int, wj int, k_min int, k_max int")
+    wells = local_frame(spark, _WELLS, "well_name string, wi int, wj int, k_min int, k_max int")
     cells = spark.range(_GI * _GJ * _GK).select(
         F.col("id").alias("cell_id"),
         (F.col("id") % _GI).cast("int").alias("i"),

@@ -13,6 +13,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from pumle_spark.operators.topk import ranked_topk
+from pumle_spark.sources.local import local_frame
 from pumle_spark.tables import table
 from pumle_spark.workload import register
 
@@ -1089,7 +1090,7 @@ def sample_weighted_aes(spark: SparkSession, sf_dir: str) -> DataFrame:
             10,
         ).cast("bigint").alias("idx"),
     )
-    lnu = spark.createDataFrame(_AES_LNU, "idx bigint, v double")
+    lnu = local_frame(spark, _AES_LNU, "idx bigint, v double")
     keyed = d.join(F.broadcast(lnu), "idx").select(
         "source",
         "doc_id",

@@ -20,6 +20,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from pumle_spark.operators.topk import ranked_topk
+from pumle_spark.sources.local import local_frame
 from pumle_spark.tables import table
 from pumle_spark.workload import register
 
@@ -119,7 +120,7 @@ def _hll_estimates(spark: SparkSession, regs: DataFrame) -> DataFrame:
             ).cast("double")
         ).alias("raw_est"),
     )
-    lc = spark.createDataFrame(_HLL_LC, "v bigint, lc_est double")
+    lc = local_frame(spark, _HLL_LC, "v bigint, lc_est double")
     return (
         est.join(F.broadcast(lc), est["n_empty_buckets"] == lc["v"], "left")
         .withColumn(
@@ -1119,7 +1120,7 @@ def sketch_quantile_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wbin = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     hcum = hist.withColumn("cum", F.sum("cnt").over(wbin))
-    qs = spark.createDataFrame([(q,) for q in _QH_QS], "q_pct int")
+    qs = local_frame(spark, [(q,) for q in _QH_QS], "q_pct int")
     targets = qs.crossJoin(F.broadcast(tot)).select(
         "q_pct", "n", F.expr("(n * q_pct + 99) div 100").alias("target")
     )

@@ -10,6 +10,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from pumle_spark.sources.local import local_frame
 from pumle_spark.tables import table
 from pumle_spark.workload import register
 
@@ -1491,7 +1492,8 @@ def _bm25_scored_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = toks.groupBy("doc_id", "term").agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt")
     )
-    qt = spark.createDataFrame(
+    qt = local_frame(
+        spark,
         [(qid, t) for qid, terms in _BM25_QUERIES for t in terms],
         "query_id int, term string",
     )
@@ -1721,7 +1723,8 @@ def retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     dnorm = wq.groupBy("doc_id").agg(
         F.sum(F.col("w") * F.col("w")).cast("bigint").alias("nsq")
     )
-    qt = spark.createDataFrame(
+    qt = local_frame(
+        spark,
         [(qid, t) for qid, terms in _BM25_QUERIES for t in terms],
         "query_id int, term string",
     )
@@ -4005,9 +4008,7 @@ def retrieval_rbo_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).cast("bigint").alias("rbo_pico"),
     )
-    qids = spark.createDataFrame(
-        [(qid,) for qid, _ in _BM25_QUERIES], "query_id int"
-    )
+    qids = local_frame(spark, [(qid,) for qid, _ in _BM25_QUERIES], "query_id int")
     return (
         qids.join(per, "query_id", "left")
         .select(

@@ -3,6 +3,9 @@ pending-work anti-join (X2)."""
 
 from __future__ import annotations
 
+import threading
+import time
+
 import pytest
 
 from pumle_spark.catalog import SimulationCatalog
@@ -65,3 +68,39 @@ def test_load_survives_concurrent_swap(spark, tmp_path, configs):
     shutil.rmtree(path)  # writer swapped the tree away after our read
     assert {r.sim_hash for r in snapshot.collect()} == {"aaaa1111", "bbbb2222"}
     assert cat.load().count() == 0  # fresh read sees the new (absent) state
+
+
+def _patch_sleep(monkeypatch, on_call):
+    """Route this thread's time.sleep calls to on_call; other threads (the
+    py4j and Spark client threads share the time module) keep sleeping."""
+    from pumle_spark import catalog
+
+    real, me = time.sleep, threading.get_ident()
+    monkeypatch.setattr(
+        catalog.time, "sleep", lambda s: on_call(s) if threading.get_ident() == me else real(s)
+    )
+
+
+def test_load_of_never_written_catalog_does_not_sleep(spark, tmp_path, monkeypatch):
+    """No swap in flight and no path: the catalog was never written, so
+    load() returns the empty frame at once instead of waiting out the
+    retry loop."""
+
+    def no_sleep(_s):
+        raise AssertionError("load() slept on a catalog that was never written")
+
+    _patch_sleep(monkeypatch, no_sleep)
+    assert SimulationCatalog(spark, str(tmp_path / "catalog")).load().count() == 0
+
+
+def test_load_retries_while_a_swap_is_in_flight(spark, tmp_path, monkeypatch):
+    """A parked catalog_old_*/v sibling means a writer is between its two
+    renames: load() must keep retrying (sleeping between attempts, not
+    after the last) before it calls the absent path empty."""
+    from pumle_spark import catalog
+
+    (tmp_path / "catalog_old_x" / "v").mkdir(parents=True)
+    slept: list[float] = []
+    _patch_sleep(monkeypatch, slept.append)
+    assert SimulationCatalog(spark, str(tmp_path / "catalog")).load().count() == 0
+    assert len(slept) == catalog._LOAD_ATTEMPTS - 1

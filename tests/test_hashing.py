@@ -8,11 +8,7 @@ import random
 
 import pyspark.sql.functions as F
 
-from pumle_spark.functions.hashing import (
-    params_to_filename_string,
-    sim_hash,
-    sim_hash_udf,
-)
+from pumle_spark.functions.hashing import params_to_filename_string, sim_hash
 
 BASE_FLUID = {
     "pres_ref": 35.0,
@@ -47,27 +43,36 @@ def test_random_param_vectors_hash_parity():
         assert sim_hash(d) == reference_hash(d)
 
 
-def test_distributed_hash_udf_matches_reference(spark):
+def test_distributed_sweep_hash_matches_reference(spark):
+    """Random parameter vectors through the Spark path: every parameter is
+    varied over two random points, and each row's hash is the reference
+    algorithm applied to that row's values."""
+    from pumle_spark.sweep import VariedParam, generate_variations
+
     rng = random.Random(43)
-    dicts = [
-        {k: v * rng.uniform(0.8, 1.2) for k, v in BASE_FLUID.items()} for _ in range(50)
-    ]
-    expected = [reference_hash(d) for d in dicts]
-    df = spark.createDataFrame([(json.dumps(d),) for d in dicts], "js string")
-    got = [r.h for r in df.select(sim_hash_udf("js").alias("h")).collect()]
-    assert got == expected
+    for _ in range(2):
+        base = {k: v * rng.uniform(0.8, 1.2) for k, v in BASE_FLUID.items()}
+        varied = [VariedParam(k, v, rng.uniform(0.34, 0.9)) for k, v in base.items()]
+        rows = generate_variations(spark, base, varied).collect()
+        assert len(rows) == 2 ** len(base)
+        for r in rows:
+            assert r.sim_hash == reference_hash({k: r[k] for k in base})
 
 
-def test_udf_recanonicalizes_key_order_and_spark_float_rendering(spark):
-    # Spark's to_json renders 4e-05 as "4.0E-5"; the UDF must still produce
-    # the reference hash because it reparses to float and re-serializes.
-    df = spark.createDataFrame([(4e-05, 35.0)], "cp_rock double, pres_ref double")
-    js = df.select(F.to_json(F.struct("XNaCl", "cp_rock")).alias("j")) if False else df.select(
-        F.to_json(F.struct("cp_rock", "pres_ref")).alias("j")
+def test_sweep_hash_renders_floats_like_python(spark):
+    # Spark's to_json/cast renders 4e-05 as "4.0E-5"; the sweep's canonical
+    # JSON must carry Python's "4e-05" so the md5 input is the reference's.
+    from pumle_spark.sweep import VariedParam, generate_variations
+
+    base = {"cp_rock": 4e-05, "pres_ref": 35.0}
+    [row] = (
+        generate_variations(spark, base, [VariedParam("pres_ref", 35.0, 0.5)])
+        .filter(F.col("pres_ref") == 35.0 * 0.5)
+        .collect()
     )
-    [row] = js.select(sim_hash_udf("j").alias("h"), "j").collect()
-    assert "E" in row.j or "e" in row.j.lower()  # Spark rendering differs from Python's
-    assert row.h == reference_hash({"cp_rock": 4e-05, "pres_ref": 35.0})
+    assert spark.range(1).select(F.lit(4e-05).cast("string")).first()[0] != "4e-05"
+    assert row.fluid_params == '{"cp_rock": 4e-05, "pres_ref": 17.5}'
+    assert row.sim_hash == reference_hash({"cp_rock": 4e-05, "pres_ref": 17.5})
 
 
 def test_filename_string_format():

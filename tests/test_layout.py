@@ -86,6 +86,29 @@ def test_zorder_prunes_both_dimensions(spark, tmp_path):
     assert a == b
 
 
+def test_zorder_files_do_not_depend_on_session_history(spark, tmp_path):
+    """Spark seeds range-exchange sampling from the RDD id, so sampled file
+    boundaries move with whatever ran before; write_zordered's exact
+    boundaries must not."""
+    orders = spark.read.parquet(f"{SF}/orders.parquet").select("o_orderkey", "o_custkey")
+
+    def file_ranges(path: str) -> list[tuple[int, int]]:
+        return sorted(
+            (r["lo"], r["hi"])
+            for r in spark.read.parquet(path)
+            .groupBy(F.input_file_name())
+            .agg(F.min("o_orderkey").alias("lo"), F.max("o_orderkey").alias("hi"))
+            .collect()
+        )
+
+    runs = []
+    for i in range(2):
+        spark.range(1).rdd.count()  # moves the next RDD ids
+        write_zordered(orders, str(tmp_path / f"z{i}"), x="o_orderkey", y="o_custkey", n_files=8)
+        runs.append(file_ranges(str(tmp_path / f"z{i}")))
+    assert runs[0] == runs[1]
+
+
 def test_bucketed_join_eliminates_shuffle(spark, tmp_path):
     """Bucketing both join sides on the key removes the Exchange from the
     join plan entirely — the co-located-join story a 100 TB warehouse is

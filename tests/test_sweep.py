@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import hashlib
+import json
+
 import numpy as np
 import pytest
 
@@ -80,6 +83,34 @@ def test_variation_hashes_are_reference_bit_exact(spark):
         d = dict(BASE)
         d["pres_ref"] = r.pres_ref
         assert r.sim_hash == sim_hash(d)
+
+
+def test_four_param_sweep_hashes_the_exact_canonical_bytes(spark):
+    """cp_rock's grid renders in scientific notation (4.8e-05), where Java's
+    and Python's float strings disagree: every row's fluid_params must be
+    the reference's json.dumps bytes, and sim_hash their md5."""
+    varied = [
+        VariedParam("cp_rock", 4e-05, 0.2),
+        VariedParam("pres_ref", 35.0, 0.25),
+        VariedParam("XNaCl", 0.1, 0.5),
+        VariedParam("srw", 0.11, 0.34),
+    ]
+    rows = generate_variations(spark, BASE, varied).collect()
+    assert len(rows) == 5 * 4 * 2 * 2
+    assert any("e-05" in r.fluid_params for r in rows)
+    for r in rows:
+        params = {k: r[k] for k in BASE}
+        assert r.sim_hash == sim_hash(params)
+        assert hashlib.md5(r.fluid_params.encode()).hexdigest()[:8] == r.sim_hash
+        assert json.loads(r.fluid_params) == params
+
+
+def test_sweep_plan_runs_no_python(spark):
+    plan = generate_variations(
+        spark, BASE, [VariedParam("cp_rock", 4e-05, 0.2), VariedParam("pe", 5.0, 0.2)]
+    )._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert "ExistingRDD" not in plan
 
 
 def test_physical_limit_clipping():
