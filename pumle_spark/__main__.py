@@ -69,7 +69,7 @@ def cmd_dispatch(args) -> int:
 
 def cmd_ingest(args) -> int:
     """Menu 2a: bronze JSON → golden Parquet (SURVEY §3.2)."""
-    from pumle_spark.ingest import ingest_golden, write_golden
+    from pumle_spark.ingest import ingest_golden, read_golden, write_golden
 
     spark = _spark(args)
     golden = ingest_golden(
@@ -79,7 +79,7 @@ def cmd_ingest(args) -> int:
         dims_path=f"{args.bronze}/g_{args.case}.json",
     )
     write_golden(golden, args.golden)
-    n = spark.read.parquet(args.golden).count()
+    n = read_golden(spark, args.golden).count()
     print(f"golden: {n} rows at {args.golden} (partitioned by sim_hash)")
     return 0
 

@@ -3,10 +3,9 @@ shuffle strategy; the 100 TB lever for repeated fact⋈fact joins).
 
 A pair of tables bucketed by the same key into the same bucket count joins
 with ZERO exchange: each task reads bucket i of both sides. For the golden
-store this means `observations ⋈ active_index` (or golden ⋈ golden across
-attributes/time) never reshuffles once both sides are bucketed by
-(sim_hash) — the write pays the shuffle once, every subsequent join rides
-it.
+store this means golden ⋈ golden across attributes/time never reshuffles
+once both sides are bucketed by (sim_hash) — the write pays the shuffle
+once, every subsequent join rides it.
 
 Uses the session catalog (saveAsTable) — works with the in-memory catalog +
 spark-warehouse directory, no Hive metastore required.

@@ -5,16 +5,17 @@ Reference pipeline (eager, per-sim Python loop; sim_results_parser.py:260-328
 gather at active-cell indices → scatter into dense (i,j,k,t) NumPy tensors
 with NaN for inactive cells.
 
-Spark redesign (ONE lazy plan for the whole fleet):
+Spark redesign (ONE lazy plan for the whole fleet, one row per sim until
+the scatter):
 
-    states ─ posexplode ─┐
-                         ├─ J2 positional zip (arrays_zip + posexplode)
-    actnum ─ filter ─────┤
-                         ├─ P3 bounds filter (row_idx < n_active)
-                         ├─ J1 scatter = dense cells LEFT JOIN values
-    dims ─ literals ─────┘
-                         └─ F12 (i,j,k) from cell_id → golden long Parquet
-                             partitioned by sim_hash
+    actnum (1 row/sim) ─ P2 cell layout: sorted [(cell_id, row_idx|NULL)]
+                                    │ broadcast
+    states (1 row/(sim, t)) ──── LEFT JOIN on sim_hash
+                                    │
+                                    └─ J1/J2/P3 scatter: inline(transform(
+                                       cells, x -> try_element_at(array,
+                                       x.row_idx + 1))) → F12 (i,j,k) →
+                                       golden long Parquet by sim_hash
 
 The canonical store is the LONG format (sim_hash, t, cell_id, i, j, k,
 pressure, sw, sg); NULL = inactive cell (the reference's NaN). Dense
@@ -22,9 +23,15 @@ tensors exist only in export sinks (exports.py). Partitioning by sim_hash
 makes per-sim queries partition-pruned scans; within a partition rows are
 sorted by (t, cell_id) for row-group skipping on timestep predicates.
 
-Scale: no driver-side loops, no collect; the scatter join is a shuffle on
-(sim_hash, t, row-position) whose skew (sims with varying active counts) is
-handled by AQE skew-join splitting (session.py).
+Scale: no driver-side loops, no collect, no shuffle. Every input is already
+grouped by sim (one states file, one ACTNUM file), so the scatter is the
+reference's per-sim reshape run as an array expression: each sim's golden
+rows come from its own input rows, in the task that read its states file,
+and the writer needs no repartition. The only exchange is the broadcast of
+the cell layouts: 32 bytes per cell in Spark's row format, ~3 MB per
+UNISIM-sized sim (94k cells). The broadcast grows with sims × ncells, so a
+fleet whose layouts outgrow driver memory needs a shuffle join on sim_hash
+in its place.
 """
 
 from __future__ import annotations
@@ -35,23 +42,39 @@ from pyspark.sql import DataFrame, SparkSession
 from pumle_spark.functions.grid import ijk_exprs
 from pumle_spark.sources.bronze import read_actnum, read_grid_dims, read_states
 
+# The golden store's columns in read order (sim_hash is the partition
+# column, so it comes last). Declared, not inferred: inference costs a
+# Spark job per read, and partition inference would type an all-digit
+# sim_hash such as "00123456" as an integer.
+GOLDEN_SCHEMA = (
+    "t int, cell_id bigint, i int, j int, k int, "
+    "pressure double, sw double, sg double, sim_hash string"
+)
 
-def active_index(actnum: DataFrame) -> DataFrame:
-    """P2: (sim_hash, cell_id, row_idx) for active cells.
 
-    row_idx is the cell's position among the sim's active cells in cell_id
-    order — exactly np.where(actnum)[0] (sim_results_parser.py:216): the
-    simulator emits state arrays in this order, so row_idx is the positional
-    join key between compacted state rows and global cell ids.
+def _layout(cell_id: str, row_idx: str) -> str:
+    return f"named_struct('cell_id', {cell_id}, 'row_idx', {row_idx})"
+
+
+def cell_layout(actnum: DataFrame, ncells: int) -> DataFrame:
+    """P2: (sim_hash, cells), one row per sim. ``cells`` lists every cell id
+    in 0..ncells-1 in order, each with its row_idx: the cell's position among
+    the sim's active cells — np.where(actnum)[0] (sim_results_parser.py:216),
+    the order the simulator emits state arrays in — or NULL when inactive.
+
+    ACTNUM entries past ncells are ignored and missing ones are inactive.
+    The two ordered id lists are merged by one sort per sim; a map lookup
+    would be a linear scan per cell, quadratic at UNISIM size.
     """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("sim_hash").orderBy("cell_id")
-    return (
-        actnum.filter(F.col("active"))
-        .withColumn("row_idx", F.row_number().over(w) - 1)
-        .select("sim_hash", "cell_id", "row_idx")
+    cell_ids = f"sequence(0, {ncells - 1})"
+    active = f"filter({cell_ids}, c -> get(actnum, c) != 0)"
+    inactive = f"filter({cell_ids}, c -> NOT coalesce(get(actnum, c) != 0, false))"
+    cells = (
+        f"sort_array(concat("
+        f"transform({active}, (c, r) -> {_layout('c', 'r')}), "
+        f"transform({inactive}, c -> {_layout('c', 'CAST(NULL AS INT)')})))"
     )
+    return actnum.select("sim_hash", F.expr(cells).alias("cells"))
 
 
 def states_long(states: DataFrame) -> DataFrame:
@@ -85,41 +108,48 @@ def ingest_golden(
     """Full bronze→golden plan. Returns the golden long DataFrame:
     (sim_hash, t, cell_id, i, j, k, pressure, sw, sg) — dense over cells ×
     timesteps per sim, NULL-valued at inactive cells (arrays.py:90-92 NaN).
+
+    A timestep is emitted when states_long gives it at least one row, i.e.
+    both arrays are present and not both empty. A sim with states but no
+    ACTNUM file gets the all-inactive layout: all-NULL dense rows.
     """
     ni, nj, nk = read_grid_dims(spark, dims_path)
     ncells = ni * nj * nk
 
-    actnum = read_actnum(spark, actnum_glob)
-    act_idx = active_index(actnum)
-    values = states_long(read_states(spark, states_glob))
-
-    # P3 bounds guard (arrays.py:106-110, sim_results_parser.py:295-300):
-    # drop state rows beyond the sim's active count and active indices
-    # beyond the grid — an inner join on (sim_hash, row_idx) does both:
-    # unmatched positions on either side vanish, matching the reference's
-    # "skip with warning" semantics declaratively.
-    obs = values.join(act_idx, ["sim_hash", "row_idx"]).select(
-        "sim_hash", "t", "cell_id", "pressure", "sw", "sg"
+    layouts = cell_layout(read_actnum(spark, actnum_glob), ncells)
+    states = read_states(spark, states_glob).filter(
+        F.col("pressure").isNotNull()
+        & F.col("s").isNotNull()
+        & (F.greatest(F.size("pressure"), F.size("s")) > 0)
     )
-
-    # J1 scatter: dense (sim_hash × t × cell_id) domain LEFT JOIN observations.
-    sims_t = values.select("sim_hash", "t").distinct()
-    all_cells = spark.range(ncells).select(F.col("id").alias("cell_id"))
-    dense = sims_t.crossJoin(all_cells)
-
-    golden = dense.join(obs, ["sim_hash", "t", "cell_id"], "left")
+    all_inactive = f"transform(sequence(0, {ncells - 1}), c -> {_layout('c', 'CAST(NULL AS INT)')})"
+    # J1 scatter + P3 bounds rule (arrays.py:106-110,
+    # sim_results_parser.py:295-300): each active cell reads its state row
+    # with try_element_at, so rows past n_active are never read and active
+    # cells past the array's end come out NULL, as do inactive cells.
+    value = "try_element_at({}, x.row_idx + 1)"
+    scatter = (
+        f"inline(transform(coalesce(cells, {all_inactive}), x -> named_struct("
+        "'cell_id', CAST(x.cell_id AS BIGINT), "
+        f"'pressure', {value.format('pressure')}, "
+        f"'sw', {value.format('s')}[0], "
+        f"'sg', {value.format('s')}[1])))"
+    )
+    golden = states.join(F.broadcast(layouts), "sim_hash", "left").select(
+        "sim_hash", "t", F.expr(scatter)
+    )
 
     i, j, k = ijk_exprs(F.col("cell_id"), ni, nj)
     return golden.select("sim_hash", "t", "cell_id", i, j, k, "pressure", "sw", "sg")
 
 
 def write_golden(golden: DataFrame, path: str) -> None:
-    """Persist golden as Parquet partitioned by sim_hash, sorted within
-    partitions by (t, cell_id) → partition pruning on sim_hash, row-group
-    skipping on t."""
+    """Persist golden as Parquet partitioned by sim_hash, sorted by
+    (t, cell_id) within each sim → partition pruning on sim_hash, row-group
+    skipping on t. The sort is task-local: ingest_golden emits each sim's
+    rows from one task, so every sim gets one file without a shuffle."""
     (
-        golden.repartition("sim_hash")
-        .sortWithinPartitions("t", "cell_id")
+        golden.sortWithinPartitions("sim_hash", "t", "cell_id")
         .write.mode("overwrite")
         .partitionBy("sim_hash")
         .parquet(path)
@@ -127,4 +157,4 @@ def write_golden(golden: DataFrame, path: str) -> None:
 
 
 def read_golden(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    return spark.read.schema(GOLDEN_SCHEMA).parquet(path)

@@ -23,12 +23,14 @@ import shutil
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from pumle_spark.ingest import read_golden
+
 
 def golden_file_stats(spark: SparkSession, path: str) -> DataFrame:
     """(sim_hash, n_files, n_rows, avg_rows_per_file): the compaction
     trigger metric, computed from the data itself (input_file_name), so it
     is scheme-transparent — no filesystem listing code to port per store."""
-    g = spark.read.parquet(path).select("sim_hash", F.input_file_name().alias("f"))
+    g = read_golden(spark, path).select("sim_hash", F.input_file_name().alias("f"))
     per_file = g.groupBy("sim_hash", "f").agg(F.count(F.lit(1)).alias("rows"))
     return per_file.groupBy("sim_hash").agg(
         F.count(F.lit(1)).alias("n_files"),
@@ -49,7 +51,7 @@ def compact_golden(
     10x-bigger partition produces 10x the files instead of 10x-bigger files
     — the property that keeps row groups within executor memory at any SF.
     """
-    golden = spark.read.parquet(path)
+    golden = read_golden(spark, path)
     tmp = path.rstrip("/") + "._compacting"
     old = path.rstrip("/") + "._old"
     shutil.rmtree(tmp, ignore_errors=True)

@@ -23,9 +23,9 @@ from_json never materializes it.
 
 At 100 TB: bronze JSON is the interop format, not the analytics format —
 ingest.py converts it once into golden Parquet partitioned by sim_hash, and
-every query runs against Parquet. Each bronze file is one task; a fleet of
-N simulations ingests with N-way parallelism and zero shuffle until the
-active-cell join.
+every query runs against Parquet. Each bronze file is one row of one
+task: a fleet of N simulations ingests with N-way parallelism and zero
+shuffle, since each sim's ACTNUM row is broadcast to its state rows.
 """
 
 from __future__ import annotations
@@ -86,17 +86,12 @@ def read_grid_dims(spark: SparkSession, path: str) -> tuple[int, int, int]:
 
 
 def read_actnum(spark: SparkSession, glob: str) -> DataFrame:
-    """S4: ACTNUM scan → (sim_hash, cell_id, active).
+    """S4: ACTNUM scan → (sim_hash, actnum array<double>), one row per sim.
 
     The grdecl JSON is a flat 0/1 array whose position IS the F-order
     cell_id (co2lab3DPUMLE.m:534; consumed sim_results_parser.py:197-224).
     """
-    raw = spark.read.text(glob, wholetext=True).select(
+    return spark.read.text(glob, wholetext=True).select(
         F.regexp_extract(F.input_file_name(), _HASH_FROM_GRDECL, 1).alias("sim_hash"),
         F.from_json("value", ArrayType(DoubleType())).alias("actnum"),
-    )
-    return raw.select("sim_hash", F.posexplode("actnum").alias("cell_id", "active_raw")).select(
-        "sim_hash",
-        F.col("cell_id").cast("bigint").alias("cell_id"),
-        (F.col("active_raw") != 0).alias("active"),
     )

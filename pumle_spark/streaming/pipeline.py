@@ -154,23 +154,29 @@ def start_plume_monitor(
     (SURVEY §7.2), computed the moment results arrive instead of in a
     nightly batch.
 
-    The streaming rows join the STATIC active-cell index (stream-static
-    join) so the P3 bounds guard applies identically to batch ingest —
-    oversized state arrays drop the same rows in both paths. One bronze
-    file carries a sim's complete state series, so every per-(sim, t)
-    aggregate closes within its micro-batch; foreachBatch runs the batch
-    plume.plume_size_over_time on it and appends. Exactly-once per input file comes from the
-    checkpointed file source; a mid-write crash can duplicate a batch's
-    output rows on restart (standard foreachBatch at-least-once residue),
-    so downstream readers key by (sim_hash, t)."""
-    from pumle_spark.ingest import active_index
+    The streaming rows join each sim's STATIC active-cell count
+    (stream-static broadcast join, one ACTNUM row per sim) and keep
+    row_idx < n_active, so the P3 bounds guard applies identically to batch
+    ingest — oversized state arrays drop the same rows in both paths. The
+    static side is re-read every micro-batch, so a sim whose ACTNUM lands
+    late is still counted. One bronze file carries a sim's complete state
+    series, so every per-(sim, t) aggregate closes within its micro-batch;
+    foreachBatch runs the batch plume.plume_size_over_time on it and
+    appends. Exactly-once per input file comes from the checkpointed file
+    source; a mid-write crash can duplicate a batch's output rows on
+    restart (standard foreachBatch at-least-once residue), so downstream
+    readers key by (sim_hash, t)."""
     from pumle_spark.plume import plume_size_over_time
     from pumle_spark.sources.bronze import read_actnum
 
-    act_idx = active_index(read_actnum(spark, actnum_glob))
+    n_active = read_actnum(spark, actnum_glob).select(
+        "sim_hash", F.expr("size(filter(actnum, x -> x != 0))").alias("n_active")
+    )
 
     def emit(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.join(act_idx, ["sim_hash", "row_idx"])
+        batch = batch_df.join(F.broadcast(n_active), "sim_hash").filter(
+            F.col("row_idx") < F.col("n_active")
+        )
         plume_size_over_time(batch, threshold).write.mode("append").parquet(out_dir)
 
     return (

@@ -77,8 +77,9 @@ _GOLDEN_SQL = f"""
 )
 def pumle_golden_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end PUMLE pipeline on deterministic bronze fixtures: JSON
-    states/ACTNUM/dims scans → positional zip → bounds filter → dense
-    scatter join → F-order coordinates → plume size per (sim, t)
+    states/ACTNUM/dims scans → per-sim cell layout broadcast to the state
+    rows → dense scatter with the bounds rule → F-order coordinates → plume
+    size per (sim, t)
     (SURVEY §7.2's minimum slice, run as one lazy plan over 4 simulations).
 
     Fixtures are seeded and cached under /tmp so repeated driver runs see
@@ -117,7 +118,7 @@ def stream_plume_monitor_final(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The oracle is the SAME DuckDB SQL as the batch flagship: streaming over
     a closed input must equal the batch computation exactly (stream-static
-    active-index join, bounds guard, strict threshold included), so this
+    active-count join, bounds guard, strict threshold included), so this
     row hash-checks the batch/streaming equivalence contract itself, not
     just the stream plumbing. Checkpoint and sink are fresh per call; the
     file-source offsets make each run process the full fixture set."""

@@ -20,7 +20,7 @@ def numpy_golden_oracle(sims: dict, n_t: int):
         arrs = {k: np.full((ncells, n_t), np.nan) for k in ("pressure", "sw", "sg")}
         for t, st in enumerate(sim["states"]):
             p = np.asarray(st["pressure"], dtype=float)
-            s = np.asarray(st["s"], dtype=float)
+            s = np.asarray(st["s"], dtype=float).reshape(-1, 2)  # [] → no pairs
             n = min(len(idx), len(p))  # bounds filter both directions
             arrs["pressure"][idx[:n], t] = p[:n]
             arrs["sw"][idx[:n], t] = s[:n, 0]
