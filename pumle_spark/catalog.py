@@ -2,12 +2,22 @@
 SQLite `simulations` table (db.py:15-23) with idempotent registration (X3)
 and guarded status transitions (db.py:43-47, 106-153).
 
-Storage: a Parquet-backed table owned by the engine. Upserts are
-copy-on-write MERGE semantics (read → anti-join/union → atomic swap) —
-the same contract as Delta's ``whenNotMatchedInsert`` without requiring the
-Delta runtime in this environment. The catalog is dim-sized (one row per
-simulation), so rewriting it is trivial at any data scale; the 100 TB facts
-live in golden Parquet, keyed by the catalog's sim_hash.
+Storage: an append-only log under ``path``. Each write commits one entry,
+a new subdirectory ``<seq:020d>-<uuid8>/`` holding one Parquet file of
+``CATALOG_SCHEMA`` + ``seq`` (``time.time_ns()`` at append). ``register``
+appends full rows (status CREATED, ``created_at`` set: INSERT OR IGNORE,
+db.py:25-28); ``update_status`` appends events ``(sim_hash, NULL, NULL,
+status, NULL, seq)`` (UPDATE … SET status, db.py:133-153). Committed
+entries never change; one being written holds only ``_temporary``, which
+Spark's listing hides. So any number of writers on one clock can append
+without losing rows, and a frame from ``load()`` is a snapshot of the
+entries listed when it was built.
+
+``load()`` folds the log per sim_hash on one partition (no shuffle; the
+catalog is dim-sized, the 100 TB facts live in golden Parquet): sim_id and
+fluid_params from the first register row, the earliest created_at, the
+latest event's status (CREATED if none), registered hashes only. A
+duplicate register row from two racing registers changes nothing.
 
 Schema (db.py:15-23, FIXTURES.md §2):
     sim_hash     STRING  PK (md5(sorted fluid params)[:8], utils.py:52-81)
@@ -21,16 +31,15 @@ Schema (db.py:15-23, FIXTURES.md §2):
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
-import tempfile
 import time
+import uuid
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     IntegerType,
+    LongType,
     StringType,
     StructField,
     StructType,
@@ -51,8 +60,17 @@ CATALOG_SCHEMA = StructType(
         StructField("created_at", TimestampType(), True),
     ]
 )
+_COLUMNS = [f.name for f in CATALOG_SCHEMA.fields]
+LOG_SCHEMA = StructType(CATALOG_SCHEMA.fields + [StructField("seq", LongType(), False)])
 
-_LOAD_ATTEMPTS = 3
+_REGISTERED = "created_at IS NOT NULL"  # a register row, not a status event
+# the per-hash fold of the log into CATALOG_SCHEMA
+_FOLD = (
+    f"min_by(sim_id, seq) FILTER (WHERE {_REGISTERED}) AS sim_id",
+    f"min_by(fluid_params, seq) FILTER (WHERE {_REGISTERED}) AS fluid_params",
+    f"coalesce(max_by(status, seq) FILTER (WHERE NOT {_REGISTERED}), 'CREATED') AS status",
+    "min(created_at) AS created_at",
+)
 
 
 class SimulationCatalog:
@@ -62,104 +80,79 @@ class SimulationCatalog:
 
     # -- read ---------------------------------------------------------------
 
-    def load(self) -> DataFrame:
-        # retry-on-missing: a concurrent _atomic_overwrite swap has a
-        # two-rename window where the path briefly doesn't exist; don't
-        # mistake it for an empty catalog. The retry wraps the READ itself
-        # (not just an exists() probe) and eagerly materializes via
-        # localCheckpoint — the catalog is dim-sized, so this is cheap, and
-        # the returned DataFrame no longer references the path, closing the
-        # window where a lazy scan lists files after a later swap. A path
-        # that is absent with no swap in flight was never written (or was
-        # deleted): it is empty now, with nothing to wait for.
-        last_err: Exception | None = None
-        for attempt in range(_LOAD_ATTEMPTS):
-            if attempt:
-                time.sleep(0.05)
-            if not os.path.exists(self.path):
-                swapping = self._swap_in_flight()
-                if not os.path.exists(self.path):  # re-check: the swap may just have ended
-                    if not swapping:
-                        break
-                    continue
-            try:
-                return (
-                    self.spark.read.schema(CATALOG_SCHEMA)
-                    .parquet(self.path)
-                    .localCheckpoint(eager=True)
-                )
-            except Exception as err:  # path swapped mid-read
-                if "PATH_NOT_FOUND" not in str(err) and "does not exist" not in str(err):
-                    raise
-                last_err = err
-        if last_err is not None:  # path kept vanishing: a writer is live; surface it
-            raise last_err
-        return local_frame(self.spark, [], CATALOG_SCHEMA)
+    def _log(self) -> DataFrame | None:
+        """Every committed log row, or None when the log has no entry."""
+        names = os.listdir(self.path) if os.path.isdir(self.path) else []
+        if any(n.startswith("part-") for n in names):
+            raise ValueError(
+                f"{self.path} holds a single-table Parquet catalog (top-level part-* "
+                "files), not the append-only log; rebuild it with `python -m pumle_spark sweep`"
+            )
+        if not any(n[0] not in "._" for n in names):
+            return None
+        return self.spark.read.schema(LOG_SCHEMA).parquet(os.path.join(self.path, "*"))
 
-    def _swap_in_flight(self) -> bool:
-        """True while an _atomic_overwrite sits between its two renames: the
-        old tree is parked at ``catalog_old_*/v`` beside the path."""
-        parent = os.path.dirname(self.path) or "."
-        return bool(glob.glob(os.path.join(glob.escape(parent), "catalog_old_*", "v")))
+    def load(self) -> DataFrame:
+        log = self._log()
+        if log is None:
+            return local_frame(self.spark, [], CATALOG_SCHEMA)
+        return (
+            log.coalesce(1)
+            .groupBy("sim_hash")
+            .agg(*map(F.expr, _FOLD))
+            .filter(_REGISTERED)
+            .select(*_COLUMNS)
+        )
 
     # -- write --------------------------------------------------------------
 
-    def _atomic_overwrite(self, df: DataFrame) -> None:
-        """Write to a temp dir then swap via two renames.
-
-        CONCURRENCY CONTRACT: single writer. register/update_status are
-        read-modify-write with no lock — two concurrent writers can lose
-        each other's rows (last swap wins). The catalog is dim-sized and
-        driver-owned by design; for multi-writer semantics use a
-        transactional table format (Delta MERGE INTO) instead. Readers are
-        protected: the path-missing window is two rename syscalls (the old
-        tree is renamed aside BEFORE the new one moves in, and deleted only
-        after), and load() retries on missing."""
-        parent = os.path.dirname(self.path) or "."
-        tmp = tempfile.mkdtemp(prefix="catalog_", dir=parent)
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        trash = None
-        if os.path.exists(self.path):
-            trash = tempfile.mkdtemp(prefix="catalog_old_", dir=parent)
-            os.replace(self.path, os.path.join(trash, "v"))
-        os.replace(tmp, self.path)
-        if trash is not None:
-            shutil.rmtree(trash, ignore_errors=True)
+    def _append(self, rows: DataFrame) -> None:
+        """Commit ``rows`` (CATALOG_SCHEMA columns) as one new log entry."""
+        seq = time.time_ns()
+        entry = os.path.join(self.path, f"{seq:020d}-{uuid.uuid4().hex[:8]}")
+        rows.select(*_COLUMNS, F.lit(seq).alias("seq")).coalesce(1).write.parquet(entry)
 
     def register(self, configs: DataFrame) -> int:
         """X3 idempotent insert (INSERT OR IGNORE on sim_hash PK, db.py:25-28):
-        only hashes not already present are added, status=CREATED.
+        only hashes not already registered are appended, status=CREATED.
 
         Returns the number of newly registered simulations. Duplicate hashes
         WITHIN the batch are also collapsed (dropDuplicates) — identical
         param sets register once, the reference's "caching" (README.md:54-55).
         """
-        existing = self.load()
-        incoming = (
+        fresh = (
             configs.select("sim_hash", "sim_id", "fluid_params")
             .dropDuplicates(["sim_hash"])
             .withColumn("status", F.lit("CREATED"))
             .withColumn("created_at", F.current_timestamp())
         )
-        fresh = incoming.join(existing.select("sim_hash"), "sim_hash", "left_anti")
+        log = self._log()
+        if log is not None:
+            registered = log.filter(_REGISTERED).select("sim_hash")
+            fresh = fresh.join(registered, "sim_hash", "left_anti")
         n_new = fresh.count()
         if n_new:
-            merged = existing.unionByName(fresh.select(*[f.name for f in CATALOG_SCHEMA.fields]))
-            self._atomic_overwrite(merged)
+            self._append(fresh)
         return n_new
 
     def update_status(self, sim_hashes: list[str] | None, new_status: str) -> None:
         """Guarded status transition (db.py:133-153): `new_status` must be a
         member of the enum; None hashes = all rows (the reference's blanket
-        update — kept, but per-hash is the recommended path)."""
+        update — kept, but per-hash is the recommended path). Appends one
+        event per register row of a requested hash; unknown hashes are
+        ignored, and an empty list writes nothing."""
         if new_status not in STATUSES:
             raise ValueError(f"invalid status {new_status!r}; allowed: {STATUSES}")
-        cat = self.load()
-        cond = F.lit(True) if sim_hashes is None else F.col("sim_hash").isin(sim_hashes)
-        updated = cat.withColumn(
-            "status", F.when(cond, F.lit(new_status)).otherwise(F.col("status"))
-        )
-        self._atomic_overwrite(updated)
+        log = self._log()
+        if log is None or (sim_hashes is not None and not sim_hashes):
+            return
+        registered = log.filter(_REGISTERED)
+        if sim_hashes is not None:
+            registered = registered.filter(F.col("sim_hash").isin(sim_hashes))
+        self._append(registered.selectExpr(
+            "sim_hash", "CAST(NULL AS INT) AS sim_id", "CAST(NULL AS STRING) AS fluid_params",
+            f"'{new_status}' AS status", "CAST(NULL AS TIMESTAMP) AS created_at",
+        ))
 
     # -- work-skipping ------------------------------------------------------
 

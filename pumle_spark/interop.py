@@ -31,6 +31,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from pumle_spark.catalog import SimulationCatalog
+from pumle_spark.sources.local import local_frame
 
 RESULT_SCHEMA = "sim_hash string, returncode int, skipped boolean, message string"
 
@@ -63,14 +64,14 @@ def dispatch(
     dispatch; a `completed.flag` inside the staging dir short-circuits at
     the task level (re-run after a crash costs nothing).
     """
-    # materialize the pending set BEFORE any catalog write: the pending plan
-    # reads the catalog parquet that update_status atomically replaces
+    # the pending hashes go to the driver: they are marked RUNNING by hash
+    # and become the task input
     spark = configs.sparkSession
     pending_hashes = [
         r.sim_hash for r in catalog.pending(configs.select("sim_hash").distinct()).collect()
     ]
     catalog.update_status(pending_hashes, "RUNNING")
-    pending = spark.createDataFrame([(h,) for h in pending_hashes], "sim_hash string")
+    pending = local_frame(spark, [(h,) for h in pending_hashes], "sim_hash string")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -104,8 +105,8 @@ def dispatch(
     results = pending.repartition(parallelism, "sim_hash").mapInPandas(
         run, schema=RESULT_SCHEMA
     )
-    # materialize fully BEFORE updating the catalog: the lazy plan reads the
-    # catalog parquet that update_status atomically replaces underneath it
+    # run the simulator once: the statuses and the returned frame both come
+    # from these results
     collected = results.collect()
     ok = [r.sim_hash for r in collected if r.returncode == 0]
     bad = [r.sim_hash for r in collected if r.returncode != 0]
@@ -114,7 +115,7 @@ def dispatch(
         catalog.update_status(ok, "COMPLETED")
     if bad:
         catalog.update_status(bad, "FAILED")
-    return spark.createDataFrame(collected, RESULT_SCHEMA)
+    return local_frame(spark, collected, RESULT_SCHEMA)
 
 
 def clean_staging(staging_root: str, sim_hashes: list[str] | None = None) -> int:

@@ -8,11 +8,11 @@ per partition tax every scan (footer reads, task scheduling) and defeat
 row-group skipping. Compaction rewrites each partition into row-group-sized
 files and restores the in-partition (t, cell_id) sort order.
 
-The rewrite is swap-atomic the same way the catalog's overwrite is: write the
-compacted tree next to the live one, then two renames. Readers racing the
-swap see the old tree or the new tree, never a mix; the path-missing window
-is two rename syscalls. Single maintainer at a time (same single-writer
-contract as the catalog — use a transactional table format for multi-writer).
+The rewrite is swap-atomic: write the compacted tree to ``._compacting``,
+then two renames through ``._old``. Readers racing the swap see the old tree
+or the new one, never a mix; the path-missing window is two rename syscalls.
+The next run clears what a killed run left in either sibling. Single
+maintainer at a time (use a transactional table format for multi-writer).
 """
 
 from __future__ import annotations
@@ -54,7 +54,8 @@ def compact_golden(
     golden = read_golden(spark, path)
     tmp = path.rstrip("/") + "._compacting"
     old = path.rstrip("/") + "._old"
-    shutil.rmtree(tmp, ignore_errors=True)
+    for stale in (tmp, old):  # a killed run's leftovers
+        shutil.rmtree(stale, ignore_errors=True)
     (
         golden.repartition("sim_hash")
         .sortWithinPartitions("t", "cell_id")

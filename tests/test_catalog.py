@@ -1,10 +1,10 @@
 """M0 catalog: idempotent register (X3), guarded status transitions,
-pending-work anti-join (X2)."""
+pending-work anti-join (X2), and the append-only log under them: snapshot
+reads, concurrent writers, the fold's edge cases."""
 
 from __future__ import annotations
 
 import threading
-import time
 
 import pytest
 
@@ -51,56 +51,137 @@ def test_pending_skips_completed(spark, tmp_path, configs):
     assert [r.sim_hash for r in pending.collect()] == ["bbbb2222"]
 
 
-def test_load_survives_concurrent_swap(spark, tmp_path, configs):
-    """The swap-race contract: load() materializes eagerly, so the returned
-    DataFrame keeps working even if a writer swaps (or deletes) the backing
-    path immediately afterwards — a lazy scan would list files at action
-    time and die mid-swap. Also: a missing path is an empty catalog, not an
-    error."""
-    import shutil
+def _batch(spark, prefix: str, n: int, first_id: int = 1):
+    rows = [(f"{prefix}{i:04d}", first_id + i, "{}") for i in range(n)]
+    return spark.createDataFrame(rows, "sim_hash string, sim_id int, fluid_params string")
 
-    path = tmp_path / "catalog"
-    cat = SimulationCatalog(spark, str(path))
-    assert cat.load().count() == 0  # missing path == empty catalog
+
+def test_load_is_a_snapshot(spark, tmp_path, configs):
+    """load() lists the log's entries when the frame is built: a frame
+    loaded earlier keeps its rows and statuses after later writes. A path
+    that was never written is an empty catalog."""
+    cat = SimulationCatalog(spark, str(tmp_path / "catalog"))
+    assert cat.load().count() == 0
 
     cat.register(configs)
     snapshot = cat.load()
-    shutil.rmtree(path)  # writer swapped the tree away after our read
-    assert {r.sim_hash for r in snapshot.collect()} == {"aaaa1111", "bbbb2222"}
-    assert cat.load().count() == 0  # fresh read sees the new (absent) state
+    cat.register(_batch(spark, "new", 3))
+    cat.update_status(None, "COMPLETED")
+    assert {(r.sim_hash, r.status) for r in snapshot.collect()} == {
+        ("aaaa1111", "CREATED"),
+        ("bbbb2222", "CREATED"),
+    }
+    assert cat.load().filter("status = 'COMPLETED'").count() == 5
 
 
-def _patch_sleep(monkeypatch, on_call):
-    """Route this thread's time.sleep calls to on_call; other threads (the
-    py4j and Spark client threads share the time module) keep sleeping."""
-    from pumle_spark import catalog
+def _entries(path) -> list[str]:
+    return sorted(p.name for p in path.iterdir()) if path.exists() else []
 
-    real, me = time.sleep, threading.get_ident()
-    monkeypatch.setattr(
-        catalog.time, "sleep", lambda s: on_call(s) if threading.get_ident() == me else real(s)
+
+def _run_together(calls, timeout_s: float = 300) -> None:
+    """Run the calls on one thread each, released together; re-raise the
+    first error."""
+    barrier = threading.Barrier(len(calls), timeout=timeout_s)
+    errors: list[Exception] = []
+
+    def run(call):
+        try:
+            barrier.wait()
+            call()
+        except Exception as err:  # re-raised on the test's thread below
+            errors.append(err)
+
+    threads = [threading.Thread(target=run, args=(c,), daemon=True) for c in calls]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout_s)
+    assert not any(t.is_alive() for t in threads), "a writer thread did not finish"
+    if errors:
+        raise errors[0]
+
+
+def test_concurrent_registers_lose_no_row(spark, tmp_path):
+    """Four writers registering disjoint batches at once: every row lands
+    (each register appends its own log entry; nothing is rewritten)."""
+    cat = SimulationCatalog(spark, str(tmp_path / "catalog"))
+    batches = [_batch(spark, f"w{w}_", 8, first_id=10 * w) for w in range(4)]
+    counts: list[int] = []
+    _run_together([lambda b=b: counts.append(cat.register(b)) for b in batches])
+    assert counts == [8, 8, 8, 8]
+    rows = cat.load().collect()
+    assert len(rows) == 32
+    assert {r.sim_hash for r in rows} == {f"w{w}_{i:04d}" for w in range(4) for i in range(8)}
+    assert {r.status for r in rows} == {"CREATED"}
+
+
+def test_concurrent_status_updates_both_apply(spark, tmp_path, configs):
+    cat = SimulationCatalog(spark, str(tmp_path / "catalog"))
+    cat.register(configs)
+    _run_together(
+        [
+            lambda: cat.update_status(["aaaa1111"], "COMPLETED"),
+            lambda: cat.update_status(["bbbb2222"], "FAILED"),
+        ]
     )
+    st = {r.sim_hash: r.status for r in cat.load().collect()}
+    assert st == {"aaaa1111": "COMPLETED", "bbbb2222": "FAILED"}
 
 
-def test_load_of_never_written_catalog_does_not_sleep(spark, tmp_path, monkeypatch):
-    """No swap in flight and no path: the catalog was never written, so
-    load() returns the empty frame at once instead of waiting out the
-    retry loop."""
+def test_duplicate_register_row_changes_nothing(spark, tmp_path, configs):
+    """Two racing registers of one hash can both append it; the fold keeps
+    the first row's sim_id and the latest status event."""
+    cat = SimulationCatalog(spark, str(tmp_path / "catalog"))
+    cat.register(configs)
+    cat.update_status(["aaaa1111"], "RUNNING")
+    late = spark.createDataFrame(
+        [("aaaa1111", 99, '{"pe": 0.0}')], "sim_hash string, sim_id int, fluid_params string"
+    )
+    cat._append(late.selectExpr("*", "'CREATED' AS status", "current_timestamp() AS created_at"))
+    rows = {r.sim_hash: r for r in cat.load().collect()}
+    assert len(rows) == 2
+    a = rows["aaaa1111"]
+    assert (a.sim_id, a.fluid_params, a.status) == (1, '{"pe": 5.0}', "RUNNING")
+    assert cat.register(configs) == 0
 
-    def no_sleep(_s):
-        raise AssertionError("load() slept on a catalog that was never written")
 
-    _patch_sleep(monkeypatch, no_sleep)
-    assert SimulationCatalog(spark, str(tmp_path / "catalog")).load().count() == 0
+def test_status_event_for_unknown_hash_adds_no_row(spark, tmp_path, configs):
+    path = tmp_path / "catalog"
+    cat = SimulationCatalog(spark, str(path))
+    cat.register(configs)
+    cat.update_status(["zzzz9999"], "FAILED")
+    event = spark.createDataFrame(
+        [("zzzz9999", None, None, "FAILED", None)],
+        "sim_hash string, sim_id int, fluid_params string, status string, created_at timestamp",
+    )
+    cat._append(event)  # an event that bypassed update_status's guard
+    rows = cat.load().collect()
+    assert {r.sim_hash for r in rows} == {"aaaa1111", "bbbb2222"}
+    assert {r.status for r in rows} == {"CREATED"}
 
 
-def test_load_retries_while_a_swap_is_in_flight(spark, tmp_path, monkeypatch):
-    """A parked catalog_old_*/v sibling means a writer is between its two
-    renames: load() must keep retrying (sleeping between attempts, not
-    after the last) before it calls the absent path empty."""
-    from pumle_spark import catalog
+def test_empty_status_update_writes_nothing(spark, tmp_path, configs):
+    path = tmp_path / "catalog"
+    cat = SimulationCatalog(spark, str(path))
+    cat.update_status(None, "RUNNING")  # nothing registered yet
+    assert _entries(path) == []
+    cat.register(configs)
+    entries = _entries(path)
+    assert len(entries) == 1
+    cat.update_status([], "RUNNING")
+    assert _entries(path) == entries
 
-    (tmp_path / "catalog_old_x" / "v").mkdir(parents=True)
-    slept: list[float] = []
-    _patch_sleep(monkeypatch, slept.append)
-    assert SimulationCatalog(spark, str(tmp_path / "catalog")).load().count() == 0
-    assert len(slept) == catalog._LOAD_ATTEMPTS - 1
+
+def test_single_table_catalog_is_rejected(spark, tmp_path, configs):
+    """A catalog written as one overwritten Parquet table (top-level part-*
+    files) is not a log; reading it as one would misfold it."""
+    from pumle_spark.catalog import CATALOG_SCHEMA
+
+    path = str(tmp_path / "catalog")
+    spark.createDataFrame([("aaaa1111", 1, "{}", "COMPLETED", None)], CATALOG_SCHEMA).write.parquet(
+        path
+    )
+    cat = SimulationCatalog(spark, path)
+    for call in (cat.load, lambda: cat.register(configs)):
+        with pytest.raises(ValueError, match="single-table Parquet catalog"):
+            call()

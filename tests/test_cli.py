@@ -1,6 +1,6 @@
-"""The command-line interface (python -m pumle_spark) end to end on a bronze
-fixture set: ingest, then CSV and npy exports, checked against the NumPy
-reference consolidation."""
+"""The command-line interface (python -m pumle_spark) end to end: on a bronze
+fixture set, ingest, then CSV and npy exports, checked against the NumPy
+reference consolidation; on an INI file, sweep → dispatch → catalog."""
 
 from __future__ import annotations
 
@@ -10,6 +10,7 @@ import numpy as np
 import pandas as pd
 
 from pumle_spark.__main__ import main
+from pumle_spark.catalog import SimulationCatalog
 from tests.fixtures import CASE, DIMS, make_bronze, numpy_golden_oracle
 
 N_T = 3
@@ -61,3 +62,32 @@ def test_cli_ingest_and_exports_match_numpy_oracle(spark, tmp_path, capsys):
         want_t = oracle[h]["pressure"].reshape((*DIMS, N_T), order="F")
         assert int(n_t) == N_T
         assert np.array_equal(np.load(path), want_t, equal_nan=True)
+
+
+def test_cli_sweep_dispatch_and_catalog(spark, tmp_path, capsys):
+    ini = tmp_path / "setup.ini"
+    ini.write_text("[Fluid]\npres_ref = 10.0\ntemp_ref = 40.0\nsrw = 0.1\n")
+    catalog, staging = str(tmp_path / "catalog"), str(tmp_path / "staging")
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        argv = ["sweep", "--ini", str(ini), "--vary", "pres_ref:0.5", "srw:0.5", "--catalog", catalog]
+        assert main(argv) == 0
+        assert "sweep: 4 combinations, 4 newly registered, catalog total 4" in capsys.readouterr().out
+
+        ids = {r.sim_id: r.sim_hash for r in SimulationCatalog(spark, catalog).load().collect()}
+        assert sorted(ids) == [1, 2, 3, 4]
+        bad = ids[2]  # the fake simulator fails this one sim
+        argv = ["dispatch", "--catalog", catalog, "--staging", staging, "--parallelism", "2"]
+        assert main([*argv, "--cmd", f"test {{sim_hash}} != {bad}"]) == 0
+        tags = dict(re.findall(r"^  (\S+)  (\S+)$", capsys.readouterr().out, re.M))
+        assert tags == {h: "FAIL(1)" if h == bad else "OK" for h in ids.values()}
+
+        assert main(["catalog", "--catalog", catalog, "--status", "FAILED"]) == 0
+        out = capsys.readouterr().out
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", partitions)  # get_spark reset it
+
+    assert re.findall(r"^(\w{8}) +(\d+) +(\w+) ", out, re.M) == [(bad, "2", "FAILED")]
+    assert out.rstrip().endswith("(1 simulations)")
+    statuses = {r.sim_hash: r.status for r in SimulationCatalog(spark, catalog).load().collect()}
+    assert statuses == {h: "FAILED" if h == bad else "COMPLETED" for h in ids.values()}

@@ -340,6 +340,27 @@ def test_dispatch_runs_skips_and_records_status(spark, tmp_path):
     assert clean_staging(staging) == 2
 
 
+def test_compact_golden_clears_a_stale_old_tree(spark, tmp_path):
+    """A compaction killed after its renames leaves ``golden._old`` behind;
+    the next one clears it instead of failing on the rename into it."""
+    from pumle_spark.ingest import read_golden
+    from pumle_spark.maintenance import compact_golden
+
+    path = str(tmp_path / "golden")
+    spark.range(6).selectExpr(
+        "CAST(id AS INT) AS t", "id AS cell_id", "0 AS i", "0 AS j", "0 AS k",
+        "CAST(id AS DOUBLE) AS pressure", "0.5D AS sw", "0.5D AS sg", "CAST(id % 2 AS STRING) AS sim_hash",
+    ).write.partitionBy("sim_hash").parquet(path)
+    rows_before = sorted(map(tuple, read_golden(spark, path).collect()), key=str)
+    stale = tmp_path / "golden._old" / "sim_hash=0"
+    stale.mkdir(parents=True)
+    (stale / "part-0.parquet").write_bytes(b"left by a killed run")
+
+    compact_golden(spark, path)
+    assert sorted(map(tuple, read_golden(spark, path).collect()), key=str) == rows_before
+    assert not list(tmp_path.glob("golden._*"))
+
+
 def test_matfiles_gated_without_scipy(spark):
     configs = spark.createDataFrame([("h1", 35.0)], "sim_hash string, pres_ref double")
     try:

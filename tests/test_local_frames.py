@@ -69,10 +69,12 @@ def test_constant_tables_plan_as_local_scans_in_a_bare_session():
 
 
 def test_workload_builds_no_python_rdd_frames():
-    """Static guard: workload modules build constant tables with
-    sources.local.local_frame, never spark.createDataFrame."""
+    """Static guard: workload modules, the catalog and the dispatcher build
+    constant tables with sources.local.local_frame, never
+    spark.createDataFrame."""
+    pkg = REPO / "pumle_spark"
     offenders = []
-    for path in sorted((REPO / "pumle_spark" / "workload").glob("*.py")):
+    for path in [*sorted((pkg / "workload").glob("*.py")), pkg / "catalog.py", pkg / "interop.py"]:
         for node in ast.walk(ast.parse(path.read_text(), str(path))):
             if (
                 isinstance(node, ast.Call)
