@@ -34,6 +34,7 @@ from __future__ import annotations
 import os
 import time
 import uuid
+from datetime import datetime, timezone
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -106,11 +107,16 @@ class SimulationCatalog:
 
     # -- write --------------------------------------------------------------
 
-    def _append(self, rows: DataFrame) -> None:
-        """Commit ``rows`` (CATALOG_SCHEMA columns) as one new log entry."""
+    def _append(self, rows: DataFrame | list[tuple]) -> None:
+        """Commit ``rows`` (CATALOG_SCHEMA columns: a frame, or tuples built
+        on the driver) as one new log entry."""
         seq = time.time_ns()
         entry = os.path.join(self.path, f"{seq:020d}-{uuid.uuid4().hex[:8]}")
-        rows.select(*_COLUMNS, F.lit(seq).alias("seq")).coalesce(1).write.parquet(entry)
+        if isinstance(rows, DataFrame):
+            rows = rows.select(*_COLUMNS, F.lit(seq).alias("seq"))
+        else:  # seq rides in the rows: no literal for codegen to compile
+            rows = local_frame(self.spark, [(*r, seq) for r in rows], LOG_SCHEMA)
+        rows.coalesce(1).write.parquet(entry)
 
     def register(self, configs: DataFrame) -> int:
         """X3 idempotent insert (INSERT OR IGNORE on sim_hash PK, db.py:25-28):
@@ -119,21 +125,19 @@ class SimulationCatalog:
         Returns the number of newly registered simulations. Duplicate hashes
         WITHIN the batch are also collapsed (dropDuplicates) — identical
         param sets register once, the reference's "caching" (README.md:54-55).
+        The fresh rows are read once, to the driver (the catalog is
+        dim-sized), and stamped with one UTC driver timestamp.
         """
-        fresh = (
-            configs.select("sim_hash", "sim_id", "fluid_params")
-            .dropDuplicates(["sim_hash"])
-            .withColumn("status", F.lit("CREATED"))
-            .withColumn("created_at", F.current_timestamp())
-        )
+        fresh = configs.select("sim_hash", "sim_id", "fluid_params").dropDuplicates(["sim_hash"])
         log = self._log()
         if log is not None:
             registered = log.filter(_REGISTERED).select("sim_hash")
             fresh = fresh.join(registered, "sim_hash", "left_anti")
-        n_new = fresh.count()
-        if n_new:
-            self._append(fresh)
-        return n_new
+        rows = fresh.collect()
+        if rows:
+            created_at = datetime.now(timezone.utc)
+            self._append([(*r, "CREATED", created_at) for r in rows])
+        return len(rows)
 
     def update_status(self, sim_hashes: list[str] | None, new_status: str) -> None:
         """Guarded status transition (db.py:133-153): `new_status` must be a

@@ -9,15 +9,13 @@ Reference semantics (MUST be reproduced bit-exactly for cache-hit parity):
 
 Hash parity is the #1 hard part (SURVEY §7.3): Python's float repr is
 shortest-roundtrip with Python-specific exponent formatting, which no Spark
-built-in reproduces. Strategy:
+built-in reproduces. So there is one hash path, on the driver, and it is
+the reference algorithm itself (stock json/hashlib):
 
-- driver-side: ``sim_hash`` — literally the reference algorithm (stock
-  json/hashlib), for config generation paths where params are Python dicts.
-- distributed: driver-rendered values, Spark md5 — ``sweep.generate_variations``
-  renders each distinct parameter value once on the driver with json.dumps
-  (≤100 points per varied parameter), concatenates the renderings in
-  json.dumps(sort_keys=True)'s layout, and hashes with Spark's md5. The md5
-  input is the reference's exact byte stream and no Python worker runs.
+- ``sim_hash`` — the md5 prefix of ``canonical_params_json``. The sweep
+  (``sweep.generate_variations``) builds its rows on the driver and hashes
+  each one here; ``canonical_json_hash`` lets it reuse the canonical JSON
+  it also stores as ``fluid_params``.
 - ``params_to_filename_string`` has an exact expression-level equivalent
   (``filename_expr``) because "%.2e" formatting IS identical between Python
   and Java's format_string.
@@ -47,7 +45,12 @@ def canonical_params_json(params: Mapping) -> str:
 def sim_hash(params: Mapping) -> str:
     """Bit-exact reference hash (utils.py:52-81): first 8 hex chars of the
     md5 of the canonically-serialized params dict."""
-    return hashlib.md5(canonical_params_json(params).encode()).hexdigest()[:HASH_LEN]
+    return canonical_json_hash(canonical_params_json(params))
+
+
+def canonical_json_hash(canonical_json: str) -> str:
+    """sim_hash of the params whose canonical_params_json is ``canonical_json``."""
+    return hashlib.md5(canonical_json.encode()).hexdigest()[:HASH_LEN]
 
 
 # --------------------------------------------------------------------------

@@ -1,15 +1,10 @@
-"""Arbitrary stateful streaming on Spark 4's transformWithState API: a
-per-user running spend/count tracker with explicit ValueState.
+"""Arbitrary stateful streaming: a per-user running spend/count tracker on
+applyInPandasWithState (GroupState, Arrow-batched, update mode).
 
-Why this exists beside sessions.py's applyInPandasWithState: Spark 4
-introduced ``transformWithStateInPandas`` (SPARK-40434 / the
-StatefulProcessor API) as the successor surface — named state variables
-with independent schemas and TTLs, timers, and initial-state bootstrap —
-and an engine claiming the streaming extension point should exercise BOTH
-generations. This operator is the smallest honest use: one ValueState
-holding (total_micro, n_events) per user, updated every micro-batch, the
-updated row emitted downstream (update semantics — the sink always holds
-each user's latest running total).
+One state tuple (total_micro, n_events) per user, updated every
+micro-batch, the updated row emitted downstream (update semantics — the
+sink always holds each user's latest running total). It backs the
+driver-gated ``stream_running_totals_final``.
 
 Determinism: per-batch input order does not matter (sum and count are
 commutative), so unlike the sessionizer there is NO cross-batch ordering
@@ -18,7 +13,7 @@ contract; totals are exact integer micro-units.
 Scale: state is O(1) per user key, partitioned by the state store across
 executors exactly like the watermarked aggregations in pipeline.py; the
 batch twin (events_user_activity-style rollup) is the correctness anchor
-in tests/test_streaming.py.
+in tests/test_round5_ops.py.
 """
 
 from __future__ import annotations
@@ -27,74 +22,18 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
-
-
-def transform_with_state_available() -> bool:
-    """transformWithState's Python worker speaks protobuf to the JVM state
-    server (pyspark.sql.streaming.proto) — in a container without
-    google.protobuf the driver worker crashes at PRE_INIT. Same
-    environment-gate contract as the scipy-gated .mat reader and the
-    codec-gated multimodal decode: the operator ships, detection is
-    explicit, and the test suite asserts the gate rather than the feature
-    when the dependency is absent."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 OUTPUT_SCHEMA = "user_id bigint, total_micro bigint, n_events bigint"
 _STATE_SCHEMA = "total bigint, n bigint"
 
 
-class RunningTotalProcessor(StatefulProcessor):
-    """ValueState (total_micro, n_events) per user; emits the updated
-    running totals for every key that received rows in the batch."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._state = handle.getValueState("totals", _STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows: Iterator[pd.DataFrame], timerValues) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        prev = self._state.get()
-        total, n = (int(prev[0]), int(prev[1])) if prev is not None else (0, 0)
-        for pdf in rows:
-            total += int(pdf["vmic"].sum())
-            n += len(pdf)
-        self._state.update((total, n))
-        yield pd.DataFrame(
-            {"user_id": [user_id], "total_micro": [total], "n_events": [n]}
-        )
-
-    def close(self) -> None:  # pragma: no cover - nothing to release
-        pass
-
-
-def running_totals(events: DataFrame) -> DataFrame:
-    """events: streaming DF with (user_id bigint, vmic bigint). Returns the
-    per-user running (total_micro, n_events) stream in update mode."""
-    return events.groupBy("user_id").transformWithStateInPandas(
-        RunningTotalProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def running_totals_apws(events: DataFrame) -> DataFrame:
-    """The applyInPandasWithState generation of the same operator — Spark
-    3-era GroupState, which speaks Arrow to the JVM (no protobuf worker),
-    so unlike transformWithState it runs in every container this engine
-    targets. Semantics are identical to running_totals(): one state tuple
-    (total, n) per user, updated each micro-batch, the running row emitted
-    in update mode. State restore across batches is the point — the
-    driver-gated query stages input as two files and forces two
-    micro-batches so batch-2 totals MUST fold batch-1 state."""
+    """events: streaming DF with (user_id bigint, vmic bigint). Returns the
+    per-user running (total_micro, n_events) stream in update mode. State
+    restore across batches is the point — the driver-gated query stages
+    input as two files and forces two micro-batches so batch-2 totals MUST
+    fold batch-1 state. GroupState speaks Arrow to the JVM, so the worker
+    needs no protobuf."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     def handle(

@@ -6,29 +6,29 @@ np.meshgrid cartesian product, deepcopy-override of the base param dict,
 sim_id = enumerate order. Bounds come from base*(1∓delta) clipped to
 physical limits (parameters.py:36-45, 99-115).
 
-Spark form: a lazy crossJoin of per-parameter linspace DataFrames over a
-single base-parameters row. The combo count is pointsⁿ — it never
-materializes on the driver; sim_id is assigned by row_number over the
-varied-parameter order, which equals the meshgrid enumeration order of the
-reference (first parameter slowest), property-tested in tests/.
+The sweep is built on the driver, as the reference's meshgrid is: its
+pointsⁿ rows are driver-sized, and every consumer reads them all anyway
+(dispatch collects the pending hashes, write_staging the configs, register
+the fresh rows). itertools.product over the grid indices gives the
+meshgrid enumeration order (property-tested in tests/), and the rows reach
+Spark as one local relation (sources/local.py), so building and reading
+the sweep starts no Spark job.
 
-sim_hash for each combo is md5 over the canonical JSON of the FLUID
-section — the same dict the reference hashes (pumle.py:202-209). The driver
-renders each distinct value once with json.dumps (Python's float repr,
-which no Spark cast reproduces); Spark only concatenates those renderings
-in json.dumps(sort_keys=True)'s layout and takes md5, so no Python worker
-runs (functions/hashing.py).
+Each row's fluid_params is the canonical JSON of its FLUID params and its
+sim_hash the md5 prefix of those bytes — functions/hashing.py, the
+reference algorithm itself (pumle.py:202-209, utils.py:52-81).
 """
 
 from __future__ import annotations
 
-import json
+import itertools
+import math
 from dataclasses import dataclass
 
-import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DoubleType, IntegerType, StringType, StructField, StructType
 
-from pumle_spark.functions.hashing import HASH_LEN
+from pumle_spark.functions.hashing import canonical_json_hash, canonical_params_json
 from pumle_spark.sources.local import local_frame
 
 # PHYSICAL_LIMITS (parameters.py:36-45): param → (min, max). Keys are
@@ -94,36 +94,16 @@ class VariedParam:
         return lo, hi
 
 
-def linspace_df(spark: SparkSession, name: str, lo: float, hi: float, points: int) -> DataFrame:
-    """G1: np.linspace as a constant table of (index, value, rendering).
-    Endpoint-inclusive with exactly `points` values, like np.linspace. Each
-    value is computed once on the driver, and its canonical-JSON rendering
-    (``_j_<name>``) comes from that same Python float."""
-    if points < 2:
-        raise ValueError("points must be >= 2 (parameters_variation.py:77-84)")
-    values = [lo + i * (hi - lo) / (points - 1) for i in range(points)]
-    return local_frame(
-        spark,
-        [(i, v, json.dumps(v)) for i, v in enumerate(values)],
-        f"`_i_{name}` bigint, `{name}` double, `_j_{name}` string",
-    )
-
-
-def _canonical_json(rendered: dict[str, Column | str]) -> Column:
-    """json.dumps(sort_keys=True)'s layout ``{"k": v, "k2": v2}`` over
-    pre-rendered values: a str value is literal JSON text, a Column holds it
-    per row. Literal runs are joined on the driver into one lit each."""
-    parts: list[Column] = []
-    text = "{"
-    for i, key in enumerate(sorted(rendered)):
-        text += (", " if i else "") + json.dumps(key) + ": "
-        value = rendered[key]
-        if isinstance(value, str):
-            text += value
-        else:
-            parts += [F.lit(text), value]
-            text = ""
-    return F.concat(*parts, F.lit(text + "}"))
+def _resolve(varied: list[VariedParam], delta_default: float) -> list[VariedParam]:
+    """The varied params with delta=None (and only None — 0 was rejected at
+    construction) set to delta_default; anything outside [0.01, 1] raises."""
+    if not varied:
+        raise ValueError("need at least one varied parameter")
+    _validate_delta(delta_default)
+    return [
+        vp if vp.delta is not None else VariedParam(vp.name, vp.base, delta_default)
+        for vp in varied
+    ]
 
 
 def generate_variations(
@@ -132,60 +112,49 @@ def generate_variations(
     varied: list[VariedParam],
     delta_default: float = 0.2,
 ) -> DataFrame:
-    """G2+G3: cartesian product of linspace grids over the base row, with
-    deterministic sim_id and bit-exact sim_hash.
+    """G1-G3: linspace grids per varied parameter, their cartesian product
+    over the base params, deterministic sim_id and bit-exact sim_hash.
 
-    Returns one row per combination: all base params (overridden where
-    varied), sim_id (1-based, meshgrid order), fluid_params (canonical
-    JSON, the exact bytes sim_hash is the md5 of), sim_hash.
+    Returns one row per combination: sim_hash, sim_id (1-based, meshgrid
+    order), fluid_params (canonical JSON, the exact bytes sim_hash is the
+    md5 of), then every param (base, overridden where varied) in sorted
+    order.
     """
-    if not varied:
-        raise ValueError("need at least one varied parameter")
-    _validate_delta(delta_default)
-
-    grid: DataFrame | None = None
-    for vp in varied:
-        # delta=None (and only None — 0 was rejected at construction) falls
-        # back to delta_default; anything outside [0.01, 1] already raised.
-        eff = vp if vp.delta is not None else VariedParam(vp.name, vp.base, delta_default)
-        lo, hi = eff.bounds
-        g = linspace_df(spark, vp.name, lo, hi, n_points(eff.delta))
-        grid = g if grid is None else grid.crossJoin(g)
+    grids = []
+    for vp in _resolve(varied, delta_default):
+        lo, hi = vp.bounds
+        points = n_points(vp.delta)
+        grids.append([lo + i * (hi - lo) / (points - 1) for i in range(points)])
 
     # G3 sim_id: enumerate order of np.array(np.meshgrid(*lists)).T
     # .reshape(-1, n) (parameters_variation.py:134). Verified numerically:
     # param2 varies fastest, then param1, then params 3..n progressively
-    # slower — i.e. sort keys slowest→fastest are (i_n, …, i_3, i_1, i_2).
-    # (For n≤2 this degenerates to plain declaration order.)
-    idx = [F.col(f"_i_{vp.name}") for vp in varied]
-    if len(idx) <= 2:
-        order_cols = idx
-    else:
-        order_cols = list(reversed(idx[2:])) + [idx[0], idx[1]]
-    grid = grid.withColumn("sim_id", F.row_number().over(Window.orderBy(*order_cols)).cast("int"))
+    # slower — i.e. slowest→fastest is (n, …, 3, 1, 2). For n≤2 this
+    # degenerates to plain declaration order.
+    n = len(varied)
+    order = list(range(n)) if n <= 2 else [*range(n - 1, 1, -1), 0, 1]
+    order_names = [varied[k].name for k in order]
 
-    # base params as literal columns, overridden by the varied grid
-    varied_names = {vp.name for vp in varied}
-    for name, value in base_params.items():
-        if name not in varied_names:
-            grid = grid.withColumn(name, F.lit(float(value)))
+    names = sorted(set(base_params) | {vp.name for vp in varied})
+    params = {name: float(value) for name, value in base_params.items()}
+    rows = []
+    for sim_id, combo in enumerate(itertools.product(*(grids[k] for k in order)), start=1):
+        params.update(zip(order_names, combo))
+        fluid = canonical_params_json(params)
+        rows.append((canonical_json_hash(fluid), sim_id, fluid, *map(params.get, names)))
 
-    # canonical JSON over ALL params (sorted keys) → bit-exact sim_hash:
-    # base values render on the driver here, varied ones come rendered
-    # from linspace_df, so the md5 input is the reference's exact bytes.
-    all_names = sorted(set(base_params) | varied_names)
-    rendered = {
-        n: F.col(f"_j_{n}") if n in varied_names else json.dumps(float(base_params[n]))
-        for n in all_names
-    }
-    grid = grid.withColumn("fluid_params", _canonical_json(rendered))
-    grid = grid.withColumn("sim_hash", F.substring(F.md5("fluid_params"), 1, HASH_LEN))
-
-    return grid.select("sim_hash", "sim_id", "fluid_params", *all_names)
+    schema = StructType(
+        [
+            StructField("sim_hash", StringType()),
+            StructField("sim_id", IntegerType(), False),
+            StructField("fluid_params", StringType()),
+            *(StructField(name, DoubleType()) for name in names),
+        ]
+    )
+    return local_frame(spark, rows, schema)
 
 
 def variation_summary(
-    spark: SparkSession,
     varied: list[VariedParam],
     delta_default: float = 0.2,
     class_of_parameters: str = "Fluid",
@@ -193,32 +162,14 @@ def variation_summary(
     """Parity of the reference's get_variation_summary
     (parameters_variation.py:202-213): the sweep's shape as a small dict —
     class, parameter names, effective deltas, points per parameter, total
-    combinations.
-
-    The reference counts an already-materialized combination list; here
-    total_combinations comes from a real Spark agg over the lazy index-only
-    crossJoin grid (no hashing, no param columns), so the summary stays
-    cheap even for sweeps whose pointsⁿ grid would never fit on the
-    driver."""
-    if not varied:
-        raise ValueError("need at least one varied parameter")
-    _validate_delta(delta_default)
-    eff = [
-        vp if vp.delta is not None else VariedParam(vp.name, vp.base, delta_default)
-        for vp in varied
-    ]
+    combinations (the product of the points, without building the grid)."""
+    eff = _resolve(varied, delta_default)
     points = {vp.name: n_points(vp.delta) for vp in eff}
-
-    grid: DataFrame | None = None
-    for vp in eff:
-        g = spark.range(points[vp.name])
-        grid = g if grid is None else grid.crossJoin(g)
-    total = grid.count()
 
     return {
         "class": class_of_parameters,
         "parameters": [vp.name for vp in eff],
         "delta": {vp.name: vp.delta for vp in eff},
         "points_per_parameter": points,
-        "total_combinations": total,
+        "total_combinations": math.prod(points.values()),
     }

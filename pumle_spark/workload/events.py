@@ -2006,11 +2006,6 @@ def stream_running_totals_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate (the DuckDB oracle), the same closed-input equivalence
     contract as stream_hourly_rollup_final/stream_dedup_events_final.
 
-    The transformWithState twin (Spark 4 StatefulProcessor) ships in the
-    same module behind its documented protobuf environment gate; this
-    query keeps the arbitrary-state surface driver-verified in containers
-    where that worker cannot start.
-
     The memory sink accumulates one update row per (user, batch); counts
     only grow, so max_by(total, n_events) per user selects each user's
     final state without relying on sink row order.

@@ -5,6 +5,7 @@ reads, concurrent writers, the fold's edge cases."""
 from __future__ import annotations
 
 import threading
+import time
 
 import pytest
 
@@ -31,6 +32,24 @@ def test_register_is_idempotent(spark, tmp_path, configs):
     assert {r.sim_hash for r in rows} == {"aaaa1111", "bbbb2222"}
     assert all(r.status == "CREATED" for r in rows)
     assert all(r.created_at is not None for r in rows)
+
+
+def test_created_at_is_the_driver_clock_in_any_session_zone(spark, tmp_path, configs):
+    """register stamps created_at from the driver clock: with a non-UTC
+    session time zone the stored instant still lies between two clock
+    readings taken around the call."""
+    cat = SimulationCatalog(spark, str(tmp_path / "catalog"))
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Sao_Paulo")
+    try:
+        before = time.time_ns() // 1000
+        cat.register(configs)
+        after = time.time_ns() // 1000
+        stamps = [r.us for r in cat.load().selectExpr("unix_micros(created_at) AS us").collect()]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+    assert len(stamps) == 2
+    assert all(before <= us <= after for us in stamps), (before, stamps, after)
 
 
 def test_status_transitions_and_guard(spark, tmp_path, configs):

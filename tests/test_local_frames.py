@@ -1,6 +1,7 @@
-"""Constant tables stay on the JVM: the empty catalog and the registry's
-lookup tables plan as a LocalTableScan, never a pickled Python RDD
-(``Scan ExistingRDD``), so no action on them starts a Python worker."""
+"""Constant tables stay on the JVM: the empty catalog, the parameter sweep
+and the registry's lookup tables plan as a LocalTableScan, never a pickled
+Python RDD (``Scan ExistingRDD``), so no action on them starts a Python
+worker."""
 
 from __future__ import annotations
 
@@ -16,13 +17,14 @@ import pyspark.sql.functions as F
 
 REPO = Path(__file__).resolve().parent.parent
 
-# Prints {name: physical plan} for the empty catalog and _hll_estimates'
-# linear-counting table; runs in the given session.
+# Prints {name: physical plan} for the empty catalog, _hll_estimates'
+# linear-counting table and a parameter sweep; runs in the given session.
 _PLANS = textwrap.dedent(
     """
     import json, sys, tempfile
     import pyspark.sql.functions as F
     from pumle_spark.catalog import SimulationCatalog
+    from pumle_spark.sweep import VariedParam, generate_variations
     from pumle_spark.workload.sketches import _hll_estimates
 
     def plans(spark):
@@ -30,6 +32,9 @@ _PLANS = textwrap.dedent(
         frames = {
             "catalog": SimulationCatalog(spark, tempfile.mkdtemp() + "/catalog").load(),
             "hll": _hll_estimates(spark, regs),
+            "sweep": generate_variations(
+                spark, {"pres_ref": 35.0, "srw": 0.11}, [VariedParam("pres_ref", 35.0, 0.2)]
+            ),
         }
         return {k: df._jdf.queryExecution().executedPlan().toString() for k, df in frames.items()}
     """
@@ -69,12 +74,13 @@ def test_constant_tables_plan_as_local_scans_in_a_bare_session():
 
 
 def test_workload_builds_no_python_rdd_frames():
-    """Static guard: workload modules, the catalog and the dispatcher build
-    constant tables with sources.local.local_frame, never
+    """Static guard: workload modules, the catalog, the dispatcher and the
+    sweep build constant tables with sources.local.local_frame, never
     spark.createDataFrame."""
     pkg = REPO / "pumle_spark"
     offenders = []
-    for path in [*sorted((pkg / "workload").glob("*.py")), pkg / "catalog.py", pkg / "interop.py"]:
+    modules = [pkg / "catalog.py", pkg / "interop.py", pkg / "sweep.py"]
+    for path in [*sorted((pkg / "workload").glob("*.py")), *modules]:
         for node in ast.walk(ast.parse(path.read_text(), str(path))):
             if (
                 isinstance(node, ast.Call)

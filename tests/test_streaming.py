@@ -521,97 +521,6 @@ def test_bronze_stream_restart_is_exactly_once(spark, tmp_path):
         q2.stop()
 
 
-def test_transform_with_state_gate_detects_protobuf():
-    """The availability gate must agree with an actual import probe —
-    the operator is only claimed where its worker can run."""
-    from pumle_spark.streaming.running_totals import transform_with_state_available
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        expected = True
-    except ImportError:
-        expected = False
-    assert transform_with_state_available() is expected
-
-
-def test_transform_with_state_running_totals(spark, tmp_path):
-    """Spark 4 transformWithStateInPandas: ValueState survives micro-
-    batches and the final running totals equal the batch aggregation of
-    everything fed in (the exactly-once state contract). Harness rules
-    follow the sessionize test: own session, unique memory sink,
-    one-file-per-append, recentProgress delivery asserts. Skipped where
-    google.protobuf is absent (the TWS python worker requires it)."""
-    import uuid
-
-    import pytest as _pytest
-
-    from pumle_spark.streaming.running_totals import (
-        running_totals,
-        transform_with_state_available,
-    )
-
-    if not transform_with_state_available():
-        _pytest.skip("google.protobuf absent: transformWithState worker cannot start")
-
-    sess = spark.newSession()
-    # transformWithState requires the RocksDB state store provider
-    sess.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    src = tmp_path / "tot_src"
-    src.mkdir()
-    ckpt = tmp_path / "tot_ckpt"
-    sink = f"totals_test_{uuid.uuid4().hex[:8]}"
-
-    schema = "user_id bigint, vmic bigint"
-    stream = sess.readStream.schema(schema).parquet(str(src))
-    out = running_totals(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .option("checkpointLocation", str(ckpt))
-        .start()
-    )
-
-    total_in = 0
-    fed: list[tuple[int, int]] = []
-
-    def append_and_drain(rows):
-        nonlocal total_in
-        sess.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(str(src))
-        q.processAllAvailable()
-        total_in += len(rows)
-        fed.extend(rows)
-        seen = sum(p.numInputRows for p in q.recentProgress)
-        assert seen == total_in, f"source delivered {seen} of {total_in} written rows"
-
-    try:
-        append_and_drain([(1, 100), (1, 250), (2, 40)])
-        append_and_drain([(1, 7), (2, 60), (3, 5)])
-
-        # the LAST update row per user is the running total
-        rows = sess.sql(
-            f"SELECT user_id, total_micro, n_events FROM {sink}"
-        ).collect()
-        # collect() row order is not a contract — counts only grow, so the
-        # max-n_events row per user IS that user's final running total
-        latest = {}
-        for r in rows:
-            if r.user_id not in latest or r.n_events > latest[r.user_id][1]:
-                latest[r.user_id] = (r.total_micro, r.n_events)
-
-        want = {}
-        for u, v in fed:
-            t, n = want.get(u, (0, 0))
-            want[u] = (t + v, n + 1)
-        assert latest == want
-    finally:
-        q.stop()
-
-
 @pytest.mark.parametrize("name", STREAM_FINALS)
 def test_stream_final_leaves_nothing_behind(spark, tmp_path, monkeypatch, name):
     """One run of each stream final: its staged input, checkpoint and sink

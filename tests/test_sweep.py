@@ -9,7 +9,7 @@ import numpy as np
 import pytest
 
 from pumle_spark.functions.hashing import sim_hash
-from pumle_spark.sweep import VariedParam, generate_variations, linspace_df, n_points
+from pumle_spark.sweep import VariedParam, generate_variations, n_points
 
 BASE = {
     "pres_ref": 35.0,
@@ -31,9 +31,31 @@ def test_n_points_clamp():
 
 
 def test_linspace_matches_numpy(spark):
-    got = [r.x for r in linspace_df(spark, "x", 28.0, 42.0, 5).orderBy("_i_x").collect()]
+    # G1: a one-parameter sweep is np.linspace over the derived bounds
+    # (pres_ref 35 ± 20% → 28..42), endpoints included, in sim_id order
+    rows = generate_variations(spark, BASE, [VariedParam("pres_ref", 35.0, 0.2)]).collect()
+    assert [r.sim_id for r in rows] == [1, 2, 3, 4, 5]
     want = np.linspace(28.0, 42.0, 5)
-    assert got == pytest.approx(want.tolist(), abs=0)
+    assert [r.pres_ref for r in rows] == pytest.approx(want.tolist(), abs=0)
+
+
+def test_sweep_starts_no_spark_job(spark):
+    """The sweep is built on the driver: building it and collecting its
+    rows runs no Spark job. The one-job control action after it, in the
+    same group, shows the tracker has seen the group's jobs so far."""
+    sc = spark.sparkContext
+    group = "sweep_no_jobs"
+    varied = [VariedParam("pres_ref", 35.0, 0.25), VariedParam("srw", 0.11, 0.5)]
+    sc.setJobGroup(group, "generate_variations + collect")
+    try:
+        rows = generate_variations(spark, BASE, varied).collect()
+        spark.range(1).collect()
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(rows) == 4 * 2
+    assert len(jobs) == 1
 
 
 def test_variations_match_meshgrid_order_and_values(spark):
@@ -164,7 +186,7 @@ def test_variation_summary_matches_reference_shape(spark):
         VariedParam("srw", 0.11, 0.5),        # 2 points
         VariedParam("temp_ref", 60.0),        # None → default 0.25 → 4 points
     ]
-    s = variation_summary(spark, varied, delta_default=0.25)
+    s = variation_summary(varied, delta_default=0.25)
     assert s["class"] == "Fluid"
     assert s["parameters"] == ["pres_ref", "srw", "temp_ref"]
     assert s["delta"] == {"pres_ref": 0.2, "srw": 0.5, "temp_ref": 0.25}
