@@ -21,6 +21,9 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+# zlib level of every zarr chunk (the .zarray "compressor" records it).
+ZARR_ZLIB_LEVEL = 5
+
 # --------------------------------------------------------------------------
 # R2 → K4: tabular CSV export
 # --------------------------------------------------------------------------
@@ -115,7 +118,7 @@ def _tensor_writer(out_dir: str, dims: tuple[int, int, int], attr: str, fmt: str
     return build
 
 
-def write_zarr_v2(store_dir: str, tensor: np.ndarray, chunk_t: int = 1, zlib_level: int = 5) -> None:
+def write_zarr_v2(store_dir: str, tensor: np.ndarray, chunk_t: int = 1) -> None:
     """Spec-conformant zarr-v2 directory store, written with no zarr
     dependency: `.zarray` JSON metadata + one zlib-compressed C-order chunk
     file per `chunk_t` timesteps (chunk key "0.0.0.<ct>"). Chunking along t
@@ -133,7 +136,7 @@ def write_zarr_v2(store_dir: str, tensor: np.ndarray, chunk_t: int = 1, zlib_lev
         "shape": [ni, nj, nk, n_t],
         "chunks": list(chunks),
         "dtype": tensor.dtype.str,
-        "compressor": {"id": "zlib", "level": zlib_level},
+        "compressor": {"id": "zlib", "level": ZARR_ZLIB_LEVEL},
         "fill_value": "NaN" if tensor.dtype.kind == "f" else 0,
         "order": "C",
         "filters": None,
@@ -146,7 +149,7 @@ def write_zarr_v2(store_dir: str, tensor: np.ndarray, chunk_t: int = 1, zlib_lev
             fill = np.nan if tensor.dtype.kind == "f" else 0  # match fill_value branch
             pad = np.full((ni, nj, nk, chunk_t - block.shape[3]), fill, dtype=tensor.dtype)
             block = np.concatenate([block, pad], axis=3)
-        payload = zlib.compress(np.ascontiguousarray(block).tobytes(), zlib_level)
+        payload = zlib.compress(np.ascontiguousarray(block).tobytes(), ZARR_ZLIB_LEVEL)
         with open(os.path.join(store_dir, f"0.0.0.{ct}"), "wb") as fh:
             fh.write(payload)
 

@@ -36,10 +36,14 @@ from pyspark.sql import Column
 
 HASH_LEN = 8  # utils.py:16-21 HASH_CONFIG
 
+# json.dumps(..., sort_keys=True) builds a new encoder on every call; one
+# shared encoder with the same settings writes the same bytes.
+_CANONICAL_JSON = json.JSONEncoder(sort_keys=True)
+
 
 def canonical_params_json(params: Mapping) -> str:
     """The exact byte stream the reference hashes (utils.py:73)."""
-    return json.dumps(dict(params), sort_keys=True)
+    return _CANONICAL_JSON.encode(dict(params))
 
 
 def sim_hash(params: Mapping) -> str:

@@ -21,7 +21,9 @@ The canonical store is the LONG format (sim_hash, t, cell_id, i, j, k,
 pressure, sw, sg); NULL = inactive cell (the reference's NaN). Dense
 tensors exist only in export sinks (exports.py). Partitioning by sim_hash
 makes per-sim queries partition-pruned scans; within a partition rows are
-sorted by (t, cell_id) for row-group skipping on timestep predicates.
+sorted by (t, cell_id) for row-group skipping on timestep predicates —
+streamed golden (streaming/pipeline.py, the same scatter) only once
+maintenance.compact_golden rewrites it, as a file sink cannot sort.
 
 Scale: no driver-side loops, no collect, no shuffle. Every input is already
 grouped by sim (one states file, one ACTNUM file), so the scatter is the
@@ -56,17 +58,20 @@ def _layout(cell_id: str, row_idx: str) -> str:
     return f"named_struct('cell_id', {cell_id}, 'row_idx', {row_idx})"
 
 
-def cell_layout(actnum: DataFrame, ncells: int) -> DataFrame:
-    """P2: (sim_hash, cells), one row per sim. ``cells`` lists every cell id
-    in 0..ncells-1 in order, each with its row_idx: the cell's position among
-    the sim's active cells — np.where(actnum)[0] (sim_results_parser.py:216),
-    the order the simulator emits state arrays in — or NULL when inactive.
+def cell_layout(actnum: DataFrame, ncells: str) -> DataFrame:
+    """P2: (sim_hash, actnum, cells), one row per sim. ``ncells`` is the
+    sim's cell count as a SQL expression over its ACTNUM row. ``cells``
+    lists every cell id in 0..ncells-1 in order, each with its row_idx: the
+    cell's position among the sim's active cells — np.where(actnum)[0]
+    (sim_results_parser.py:216), the order the simulator emits state arrays
+    in — or NULL when inactive. ``actnum`` stays for scatter's no-ACTNUM
+    case; a plan that does not read it prunes it.
 
     ACTNUM entries past ncells are ignored and missing ones are inactive.
     The two ordered id lists are merged by one sort per sim; a map lookup
     would be a linear scan per cell, quadratic at UNISIM size.
     """
-    cell_ids = f"sequence(0, {ncells - 1})"
+    cell_ids = f"sequence(0, {ncells} - 1)"
     active = f"filter({cell_ids}, c -> get(actnum, c) != 0)"
     inactive = f"filter({cell_ids}, c -> NOT coalesce(get(actnum, c) != 0, false))"
     cells = (
@@ -74,73 +79,58 @@ def cell_layout(actnum: DataFrame, ncells: int) -> DataFrame:
         f"transform({active}, (c, r) -> {_layout('c', 'r')}), "
         f"transform({inactive}, c -> {_layout('c', 'CAST(NULL AS INT)')})))"
     )
-    return actnum.select("sim_hash", F.expr(cells).alias("cells"))
+    return actnum.select("sim_hash", "actnum", F.expr(cells).alias("cells"))
 
 
-def states_long(states: DataFrame) -> DataFrame:
-    """J2: positional zip of pressure[i] with s[i] → long rows.
+def scatter(states: DataFrame, actnum: DataFrame, ncells: str) -> DataFrame:
+    """J1/J2/P3: (sim_hash, t, cell_id, pressure, sw, sg) of parse_states
+    rows, batch or stream, against each sim's broadcast cell_layout.
+    ``ncells``: the grid-dims product for ingest, ``size(actnum)`` for the
+    plume monitor, which has no dims file.
 
-    arrays_zip + one posexplode pairs pressure with [sw, sg] by position
-    without the position ever leaving the row (SURVEY §2.4 J2) — the
-    reference's Python zip loop (sim_results_parser.py:284-304).
+    A timestep is emitted when both arrays are present and not both empty.
+    A sim with no ACTNUM row joins a NULL actnum and gets ``ncells`` of it
+    all-inactive cells: every grid cell for ingest, none for the monitor.
     """
-    zipped = states.select(
-        "sim_hash",
-        "t",
-        F.posexplode(F.arrays_zip("pressure", "s")).alias("row_idx", "z"),
-    )
-    return zipped.select(
-        "sim_hash",
-        "t",
-        "row_idx",
-        F.col("z.pressure").alias("pressure"),
-        F.col("z.s").getItem(0).alias("sw"),
-        F.col("z.s").getItem(1).alias("sg"),
-    )
-
-
-def ingest_golden(
-    spark: SparkSession,
-    states_glob: str,
-    actnum_glob: str,
-    dims_path: str,
-) -> DataFrame:
-    """Full bronze→golden plan. Returns the golden long DataFrame:
-    (sim_hash, t, cell_id, i, j, k, pressure, sw, sg) — dense over cells ×
-    timesteps per sim, NULL-valued at inactive cells (arrays.py:90-92 NaN).
-
-    A timestep is emitted when states_long gives it at least one row, i.e.
-    both arrays are present and not both empty. A sim with states but no
-    ACTNUM file gets the all-inactive layout: all-NULL dense rows.
-    """
-    ni, nj, nk = read_grid_dims(spark, dims_path)
-    ncells = ni * nj * nk
-
-    layouts = cell_layout(read_actnum(spark, actnum_glob), ncells)
-    states = read_states(spark, states_glob).filter(
+    states = states.filter(
         F.col("pressure").isNotNull()
         & F.col("s").isNotNull()
         & (F.greatest(F.size("pressure"), F.size("s")) > 0)
     )
-    all_inactive = f"transform(sequence(0, {ncells - 1}), c -> {_layout('c', 'CAST(NULL AS INT)')})"
+    all_inactive = f"transform(sequence(0, {ncells} - 1), c -> {_layout('c', 'CAST(NULL AS INT)')})"
     # J1 scatter + P3 bounds rule (arrays.py:106-110,
     # sim_results_parser.py:295-300): each active cell reads its state row
     # with try_element_at, so rows past n_active are never read and active
     # cells past the array's end come out NULL, as do inactive cells.
     value = "try_element_at({}, x.row_idx + 1)"
-    scatter = (
+    rows = (
         f"inline(transform(coalesce(cells, {all_inactive}), x -> named_struct("
         "'cell_id', CAST(x.cell_id AS BIGINT), "
         f"'pressure', {value.format('pressure')}, "
         f"'sw', {value.format('s')}[0], "
         f"'sg', {value.format('s')}[1])))"
     )
-    golden = states.join(F.broadcast(layouts), "sim_hash", "left").select(
-        "sim_hash", "t", F.expr(scatter)
-    )
+    layouts = F.broadcast(cell_layout(actnum, ncells))
+    return states.join(layouts, "sim_hash", "left").select("sim_hash", "t", F.expr(rows))
 
+
+def golden_rows(
+    spark: SparkSession, states: DataFrame, actnum_glob: str, dims_path: str
+) -> DataFrame:
+    """Golden long rows (sim_hash, t, cell_id, i, j, k, pressure, sw, sg) of
+    parse_states rows, batch or stream — dense over cells × timesteps per
+    sim, NULL-valued at inactive cells (arrays.py:90-92 NaN)."""
+    ni, nj, nk = read_grid_dims(spark, dims_path)
+    golden = scatter(states, read_actnum(spark, actnum_glob), str(ni * nj * nk))
     i, j, k = ijk_exprs(F.col("cell_id"), ni, nj)
     return golden.select("sim_hash", "t", "cell_id", i, j, k, "pressure", "sw", "sg")
+
+
+def ingest_golden(
+    spark: SparkSession, states_glob: str, actnum_glob: str, dims_path: str
+) -> DataFrame:
+    """Full bronze→golden batch plan: golden_rows over the states scan."""
+    return golden_rows(spark, read_states(spark, states_glob), actnum_glob, dims_path)
 
 
 def write_golden(golden: DataFrame, path: str) -> None:

@@ -3,10 +3,11 @@ nightly, expressed over the plain-Parquet golden layout (ingest.write_golden:
 partitioned by sim_hash, (t, cell_id)-sorted within partitions).
 
 Why this exists: streaming ingest (streaming/pipeline.start_bronze_to_golden)
-and per-sim appends accrete one-file-per-micro-batch; thousands of small files
-per partition tax every scan (footer reads, task scheduling) and defeat
-row-group skipping. Compaction rewrites each partition into row-group-sized
-files and restores the in-partition (t, cell_id) sort order.
+and per-sim appends accrete one file per micro-batch, unsorted — small files
+tax every scan and unsorted ones defeat row-group skipping. Compaction
+rewrites each partition into row-group-sized (t, cell_id)-sorted files; the
+new tree drops a stream's _spark_metadata log, so compact once the stream
+is done writing.
 
 The rewrite is swap-atomic: write the compacted tree to ``._compacting``,
 then two renames through ``._old``. Readers racing the swap see the old tree
@@ -25,6 +26,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pumle_spark.ingest import read_golden
 
+# Sizing files by rows, not a fixed file count, gives a 10x-bigger partition
+# 10x the files, keeping row groups within executor memory at any SF.
+MAX_RECORDS_PER_FILE = 4_000_000
+
 
 def golden_file_stats(spark: SparkSession, path: str) -> DataFrame:
     """(sim_hash, n_files, n_rows, avg_rows_per_file): the compaction
@@ -39,18 +44,10 @@ def golden_file_stats(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def compact_golden(
-    spark: SparkSession,
-    path: str,
-    max_records_per_file: int = 4_000_000,
-) -> None:
+def compact_golden(spark: SparkSession, path: str) -> None:
     """Rewrite the golden store: one balanced write per sim_hash partition
-    with the (t, cell_id) sort restored, swapped in atomically.
-
-    `maxRecordsPerFile` (not a fixed file count) sizes output files, so a
-    10x-bigger partition produces 10x the files instead of 10x-bigger files
-    — the property that keeps row groups within executor memory at any SF.
-    """
+    in (t, cell_id) order, at most MAX_RECORDS_PER_FILE rows per file,
+    swapped in atomically."""
     golden = read_golden(spark, path)
     tmp = path.rstrip("/") + "._compacting"
     old = path.rstrip("/") + "._old"
@@ -60,7 +57,7 @@ def compact_golden(
         golden.repartition("sim_hash")
         .sortWithinPartitions("t", "cell_id")
         .write.mode("overwrite")
-        .option("maxRecordsPerFile", max_records_per_file)
+        .option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
         .partitionBy("sim_hash")
         .parquet(tmp)
     )

@@ -3,13 +3,12 @@
 A stream here is the batch query run incrementally, so each stream reuses
 its batch code:
 
-1. ``stream_bronze_states``: readStream over the bronze landing directory,
-   parsed by sources.bronze.parse_states and zipped by ingest.states_long,
-   exactly as the batch read_states + states_long. Each arriving
-   states_*.json file becomes long (sim_hash, t, row_idx, pressure, sw, sg)
-   rows; the query appends to golden Parquet, turning the reference's
-   "menu option 2" manual persist (main.py:108-122) into a continuous,
-   exactly-once ingestion (checkpointed file-source offsets).
+1. ``start_bronze_to_golden`` / ``start_plume_monitor``: each states_*.json
+   file landing in the bronze directory is parsed by parse_states and
+   scattered by ingest.scatter, exactly as batch ingest; the first appends
+   the golden rows to Parquet — the reference's "menu option 2" manual
+   persist (main.py:108-122) as continuous, exactly-once ingestion — and
+   the second reduces them to plume cell counts.
 
 2. ``stream_events_hourly``: watermarked tumbling-window aggregation over an
    event stream — the streaming twin of workload.events.events_hourly_rollup
@@ -103,14 +102,9 @@ def closed_stream(spark: SparkSession, prefix: str) -> Iterator[ClosedStream]:
         shutil.rmtree(run.dir, ignore_errors=True)
 
 
-def stream_bronze_states(spark: SparkSession, landing_dir: str) -> DataFrame:
-    """readStream file source over bronze states JSON → long rows.
-
-    wholetext keeps one file per row so posexplode assigns exact timestep
-    indices, identical to the batch scan — the batch/streaming plans share
-    the same operators, which is the point of Structured Streaming.
-    """
-    from pumle_spark.ingest import states_long
+def _arriving_states(spark: SparkSession, landing_dir: str) -> DataFrame:
+    """parse_states rows of each states file as it lands: wholetext keeps
+    one file per row, so the timestep indices are the batch scan's."""
     from pumle_spark.sources.bronze import parse_states
 
     raw = (
@@ -119,19 +113,30 @@ def stream_bronze_states(spark: SparkSession, landing_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 8)  # bounded micro-batches under burst
         .load(landing_dir)
     )
-    return states_long(parse_states(raw))
+    return parse_states(raw)
 
 
 def start_bronze_to_golden(
-    spark: SparkSession, landing_dir: str, out_dir: str, checkpoint_dir: str
+    spark: SparkSession,
+    landing_dir: str,
+    actnum_glob: str,
+    dims_path: str,
+    out_dir: str,
+    checkpoint_dir: str,
 ) -> StreamingQuery:
-    """Append stream → golden-observations Parquet partitioned by sim_hash.
+    """Append stream → golden Parquet partitioned by sim_hash: the
+    ingest.golden_rows (GOLDEN_SCHEMA) of each states file as it lands.
+    The ACTNUM glob is a static side listed once, at start: a sim whose
+    ACTNUM is missing then streams all-NULL rows, as in batch ingest.
 
-    File-source offsets + parquet sink give exactly-once per input file; the
-    dense scatter (J1) stays a batch view over this observations table.
+    File-source offsets + the Parquet file sink give exactly-once per input
+    file. A sink cannot sort a stream; maintenance.compact_golden restores
+    the (t, cell_id) order.
     """
+    from pumle_spark.ingest import golden_rows
+
     return (
-        stream_bronze_states(spark, landing_dir)
+        golden_rows(spark, _arriving_states(spark, landing_dir), actnum_glob, dims_path)
         .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
@@ -154,33 +159,27 @@ def start_plume_monitor(
     (SURVEY §7.2), computed the moment results arrive instead of in a
     nightly batch.
 
-    The streaming rows join each sim's STATIC active-cell count
-    (stream-static broadcast join, one ACTNUM row per sim) and keep
-    row_idx < n_active, so the P3 bounds guard applies identically to batch
-    ingest — oversized state arrays drop the same rows in both paths. The
-    static side is re-read every micro-batch, so a sim whose ACTNUM lands
-    late is still counted. One bronze file carries a sim's complete state
-    series, so every per-(sim, t) aggregate closes within its micro-batch;
-    foreachBatch runs the batch plume.plume_size_over_time on it and
-    appends. Exactly-once per input file comes from the checkpointed file
-    source; a mid-write crash can duplicate a batch's output rows on
-    restart (standard foreachBatch at-least-once residue), so downstream
-    readers key by (sim_hash, t)."""
+    Each micro-batch runs batch ingest's ingest.scatter (and P3 bounds
+    rule) against the ACTNUM glob, listed anew per batch so a late ACTNUM
+    still counts. With no dims file, a sim's cells are its ACTNUM array:
+    extra active entries past the grid count, where batch ingest ignores
+    them, and a sim without ACTNUM has none. One bronze file carries a
+    sim's complete state series, so every per-(sim, t) aggregate closes
+    within its micro-batch; foreachBatch runs the batch
+    plume.plume_size_over_time on it and appends. Exactly-once per input
+    file comes from the checkpointed file source; a mid-write crash can
+    duplicate a batch's output rows on restart (standard foreachBatch
+    at-least-once residue), so downstream readers key by (sim_hash, t)."""
+    from pumle_spark.ingest import scatter
     from pumle_spark.plume import plume_size_over_time
     from pumle_spark.sources.bronze import read_actnum
 
-    n_active = read_actnum(spark, actnum_glob).select(
-        "sim_hash", F.expr("size(filter(actnum, x -> x != 0))").alias("n_active")
-    )
-
     def emit(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.join(F.broadcast(n_active), "sim_hash").filter(
-            F.col("row_idx") < F.col("n_active")
-        )
-        plume_size_over_time(batch, threshold).write.mode("append").parquet(out_dir)
+        golden = scatter(batch_df, read_actnum(spark, actnum_glob), "size(actnum)")
+        plume_size_over_time(golden, threshold).write.mode("append").parquet(out_dir)
 
     return (
-        stream_bronze_states(spark, landing_dir)
+        _arriving_states(spark, landing_dir)
         .writeStream.foreachBatch(emit)
         .option("checkpointLocation", checkpoint_dir)
         .start()

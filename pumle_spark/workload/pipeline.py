@@ -117,8 +117,8 @@ def stream_plume_monitor_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch.
 
     The oracle is the SAME DuckDB SQL as the batch flagship: streaming over
-    a closed input must equal the batch computation exactly (stream-static
-    active-count join, bounds guard, strict threshold included), so this
+    a closed input must equal the batch computation exactly (the shared
+    ingest scatter and its bounds rule, strict threshold included), so this
     row hash-checks the batch/streaming equivalence contract itself, not
     just the stream plumbing. Checkpoint and sink are fresh per call; the
     file-source offsets make each run process the full fixture set."""

@@ -6,13 +6,16 @@ import json
 import time
 from pathlib import Path
 
+import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
 from pumle_spark.functions import money
+from pumle_spark.ingest import read_golden
 from pumle_spark.streaming.pipeline import start_bronze_to_golden, stream_events_hourly
 from pumle_spark.tables import DEFAULT_SF_DIR
-from tests.fixtures import CASE, make_bronze
+from tests.fixtures import CASE, DIMS, make_bronze
+from tests.test_ingest import _EDGE, _ingest
 
 SF = str(Path(DEFAULT_SF_DIR).parent / "sf0.001")  # smallest generated scale
 
@@ -29,26 +32,52 @@ STREAM_FINALS = (
 )
 
 
+NCELLS = DIMS[0] * DIMS[1] * DIMS[2]
+
+
+def _start_golden_stream(spark, landing, out, ckpt):
+    return start_bronze_to_golden(
+        spark,
+        str(landing),
+        str(landing / f"grdecl_{CASE}_*.json"),
+        str(landing / f"g_{CASE}.json"),
+        str(out),
+        str(ckpt),
+    )
+
+
+def _dense_rows(*sims) -> int:
+    """Golden is dense: n_t × ncells rows per sim."""
+    return sum(len(sim["states"]) * NCELLS for s in sims for sim in s.values())
+
+
+def _write_edge_bronze(root):
+    """The scatter edge-case fleet of tests/test_ingest.py as bronze files."""
+    for h, (actnum, _, states) in _EDGE.items():
+        if actnum is not None:
+            (root / f"grdecl_{CASE}_{h}.json").write_text(json.dumps(actnum.tolist()))
+        (root / f"states_{CASE}_{h}.json").write_text(json.dumps(states))
+
+
 def test_bronze_stream_ingests_incrementally(spark, tmp_path):
     landing = tmp_path / "landing"
-    out = tmp_path / "golden_obs"
+    out = tmp_path / "golden"
     ckpt = tmp_path / "ckpt"
     landing.mkdir()
 
     # batch 1: two sims arrive
     sims = make_bronze(landing, n_sims=2, n_t=2, seed=21)
-    q = start_bronze_to_golden(spark, str(landing), str(out), str(ckpt))
+    q = _start_golden_stream(spark, landing, out, ckpt)
     try:
         q.processAllAvailable()
-        got1 = spark.read.parquet(str(out))
-        n1 = got1.count()
-        expected1 = sum(
-            sum(len(st["pressure"]) for st in sim["states"]) for sim in sims.values()
-        )
-        assert n1 == expected1
-        assert set(got1.columns) == {"sim_hash", "t", "row_idx", "pressure", "sw", "sg"}
+        n1 = read_golden(spark, str(out)).count()
+        assert n1 == _dense_rows(sims)
+        # the files hold GOLDEN_SCHEMA's columns and types
+        files = spark.read.parquet(str(out)).drop("sim_hash")
+        assert files.dtypes == read_golden(spark, str(out)).drop("sim_hash").dtypes
 
-        # batch 2: a THIRD sim lands later → incremental, exactly-once
+        # batch 2: a THIRD sim lands later → incremental, exactly-once. Its
+        # ACTNUM never lands, so its dense rows are all NULL.
         more = make_bronze(tmp_path / "stage2", n_sims=3, n_t=2, seed=22)
         newest = list(more)[-1]
         src = tmp_path / "stage2" / f"states_{CASE}_{newest}.json"
@@ -58,15 +87,56 @@ def test_bronze_stream_ingests_incrementally(spark, tmp_path):
         staged.write_text(src.read_text())
         staged.rename(landing / src.name)
         q.processAllAvailable()
-        n2 = spark.read.parquet(str(out)).count()
-        extra = sum(len(st["pressure"]) for st in more[newest]["states"])
-        assert n2 == n1 + extra
+        golden = read_golden(spark, str(out))
+        assert golden.count() == n1 + _dense_rows({newest: more[newest]})
+        assert golden.filter(F.col("sim_hash") == newest).dropna(subset=["sg"]).count() == 0
 
         # re-trigger with no new files: no duplicates (checkpointed offsets)
         q.processAllAvailable()
-        assert spark.read.parquet(str(out)).count() == n2
+        assert read_golden(spark, str(out)).count() == golden.count()
     finally:
         q.stop()
+
+
+def test_bronze_stream_equals_batch_ingest(spark, tmp_path):
+    """Streamed golden is batch ingest's golden, row for row, on the scatter
+    edge cases (short states, no ACTNUM, short and long ACTNUM, an empty
+    timestep) and on make_bronze (oversized state arrays)."""
+    landing = tmp_path / "landing"
+    make_bronze(landing, n_sims=3, n_t=4, seed=77)
+    _write_edge_bronze(landing)
+    q = _start_golden_stream(spark, landing, tmp_path / "out", tmp_path / "ckpt")
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    streamed = read_golden(spark, str(tmp_path / "out"))
+    batch = _ingest(spark, landing).select(*streamed.columns)
+    assert streamed.count() == batch.count() > 0
+    assert streamed.exceptAll(batch).count() == 0
+    assert batch.exceptAll(streamed).count() == 0
+
+
+def test_compact_golden_keeps_streamed_rows(spark, tmp_path):
+    """Compaction rewrites streamed golden with every row still placed in
+    the grid (non-NULL cell_id) and equal to batch ingest."""
+    from pumle_spark.maintenance import compact_golden
+
+    landing = tmp_path / "landing"
+    out = tmp_path / "out"
+    sims = make_bronze(landing, n_sims=3, n_t=4, seed=77)
+    q = _start_golden_stream(spark, landing, out, tmp_path / "ckpt")
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    compact_golden(spark, str(out))
+    compacted = read_golden(spark, str(out))
+    assert compacted.filter(F.col("cell_id").isNotNull()).count() == _dense_rows(sims)
+    batch = _ingest(spark, landing).select(*compacted.columns)
+    assert compacted.exceptAll(batch).count() == 0
 
 
 def test_events_hourly_stream_matches_batch(spark, tmp_path):
@@ -301,9 +371,9 @@ def test_stream_hourly_rollup_matches_batch(spark, tmp_path):
 
 def test_plume_monitor_matches_batch_pipeline(spark, tmp_path):
     """Streaming plume monitor == batch plume_size_over_time on the same
-    bronze set (bounds guard included — sim #0's oversized state rows drop
-    in both paths)."""
-    from pumle_spark.ingest import ingest_golden
+    bronze set: make_bronze (sim #0's oversized state rows drop in both
+    paths) plus the scatter edge cases. The monitor has no dims file, so
+    the long-ACTNUM sim counts over its whole ACTNUM array instead."""
     from pumle_spark.plume import plume_size_over_time
     from pumle_spark.streaming.pipeline import start_plume_monitor
 
@@ -312,6 +382,7 @@ def test_plume_monitor_matches_batch_pipeline(spark, tmp_path):
     ckpt = tmp_path / "plm_ckpt"
     landing.mkdir()
     make_bronze(landing, n_sims=3, n_t=4, seed=77)
+    _write_edge_bronze(landing)
 
     q = start_plume_monitor(
         spark,
@@ -330,16 +401,16 @@ def test_plume_monitor_matches_batch_pipeline(spark, tmp_path):
         (r.sim_hash, r.t): r.n_plume_cells
         for r in spark.read.parquet(str(out)).collect()
     }
-    golden = ingest_golden(
-        spark,
-        str(landing / f"states_{CASE}_*.json"),
-        str(landing / f"grdecl_{CASE}_*.json"),
-        str(landing / f"g_{CASE}.json"),
-    )
     want = {
         (r.sim_hash, r.t): r.n_plume_cells
-        for r in plume_size_over_time(golden, threshold=0.05).collect()
+        for r in plume_size_over_time(_ingest(spark, landing), threshold=0.05).collect()
     }
+    long_actnum = "0000000d"
+    actnum, _, states = _EDGE[long_actnum]
+    assert len(actnum) > NCELLS
+    n_active = int(np.count_nonzero(actnum))
+    for t, st in enumerate(states):
+        want[(long_actnum, t)] = sum(1 for _, sg in st["s"][:n_active] if sg > 0.05)
     assert got == want and len(got) > 0
 
 
@@ -485,38 +556,40 @@ def test_bronze_stream_restart_is_exactly_once(spark, tmp_path):
     files are not reprocessed while a file that landed during the outage
     is. This is the recovery path a production deploy actually exercises."""
     landing = tmp_path / "landing"
-    out = tmp_path / "golden_obs"
+    out = tmp_path / "golden"
     ckpt = tmp_path / "ckpt"
     landing.mkdir()
 
     sims = make_bronze(landing, n_sims=2, n_t=2, seed=31)
-    q1 = start_bronze_to_golden(spark, str(landing), str(out), str(ckpt))
+    q1 = _start_golden_stream(spark, landing, out, ckpt)
     try:
         q1.processAllAvailable()
     finally:
         q1.stop()
-    n1 = spark.read.parquet(str(out)).count()
-    assert n1 == sum(
-        sum(len(st["pressure"]) for st in sim["states"]) for sim in sims.values()
-    )
+    n1 = read_golden(spark, str(out)).count()
+    assert n1 == _dense_rows(sims)
 
-    # a file lands while no query is running (the outage window)
+    # a sim's files land while no query is running (the outage window)
     more = make_bronze(tmp_path / "stage2", n_sims=3, n_t=2, seed=32)
     newest = list(more)[-1]
-    src = tmp_path / "stage2" / f"states_{CASE}_{newest}.json"
-    (landing / src.name).write_text(src.read_text())
+    for name in (f"grdecl_{CASE}_{newest}.json", f"states_{CASE}_{newest}.json"):
+        (landing / name).write_text((tmp_path / "stage2" / name).read_text())
 
     # restart from the SAME checkpoint: old offsets honored, new file picked up
-    q2 = start_bronze_to_golden(spark, str(landing), str(out), str(ckpt))
+    q2 = _start_golden_stream(spark, landing, out, ckpt)
     try:
         q2.processAllAvailable()
-        n2 = spark.read.parquet(str(out)).count()
-        extra = sum(len(st["pressure"]) for st in more[newest]["states"])
-        assert n2 == n1 + extra  # no duplicates of batch-1 files, outage file ingested
+        golden = read_golden(spark, str(out))
+        # no duplicates of batch-1 files, outage file ingested
+        assert golden.count() == n1 + _dense_rows({newest: more[newest]})
+        n_active = int(more[newest]["actnum"].sum())
+        assert golden.filter(F.col("sim_hash") == newest).dropna(subset=["sg"]).count() == (
+            2 * n_active
+        )
 
         # idempotent re-trigger after restart
         q2.processAllAvailable()
-        assert spark.read.parquet(str(out)).count() == n2
+        assert read_golden(spark, str(out)).count() == golden.count()
     finally:
         q2.stop()
 
