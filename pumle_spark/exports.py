@@ -164,10 +164,11 @@ def export_tensors(
     """K2/K3: per-sim dense (i, j, k, t) tensor written from executors via
     applyInPandas over groupBy(sim_hash).
 
-    One simulation = one group = one tensor = one file; the shuffle is the
-    groupBy on sim_hash (already the golden partition key, so with a
-    partitioned source AQE elides most movement). Returns a manifest
-    DataFrame (sim_hash, path, n_t).
+    One simulation = one group = one tensor = one file; the groupBy on
+    sim_hash is one shuffle exchange even over golden Parquet partitioned
+    by sim_hash (a directory-partitioned scan reports no output
+    partitioning), so collecting the manifest runs two jobs (traced
+    ``pumle_etl``). Returns a manifest DataFrame (sim_hash, path, n_t).
 
     NaN semantics: the long form stores NULL at inactive cells; to_numpy
     maps those to NaN and the scatter skips them, leaving the prefilled NaN

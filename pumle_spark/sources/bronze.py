@@ -76,10 +76,18 @@ def parse_states(raw_text: DataFrame) -> DataFrame:
 
 def read_grid_dims(spark: SparkSession, path: str) -> tuple[int, int, int]:
     """S3: g_{case}.json = [i, j, k], validated positive
-    (sim_results_parser.py:167-195). One tiny file → parsed on the driver
-    and used as literals in the ingest plan (broadcast by construction)."""
-    txt = spark.read.text(path, wholetext=True).head()[0]
-    dims = json.loads(txt)
+    (sim_results_parser.py:167-195). One tiny file → read and parsed on the
+    driver (no Spark job) through the Hadoop FileSystem of the session's
+    configuration, so any path Spark can scan works, and used as literals
+    in the ingest plan (broadcast by construction)."""
+    jvm = spark.sparkContext._jvm
+    hadoop_path = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hadoop_path.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    stream = fs.open(hadoop_path)
+    try:
+        dims = json.loads(bytes(stream.readAllBytes()).decode("utf-8"))
+    finally:
+        stream.close()
     if not isinstance(dims, list) or len(dims) != 3 or any(int(d) <= 0 for d in dims):
         raise ValueError(f"invalid grid dims {dims!r} in {path}")
     return int(dims[0]), int(dims[1]), int(dims[2])

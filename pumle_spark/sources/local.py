@@ -17,6 +17,19 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 
+def arrow_table(rows: Iterable[Sequence], schema: StructType) -> pa.Table:
+    """``rows`` (tuples in ``schema`` order) as an Arrow table of
+    ``schema``'s Arrow form."""
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows))
+    if not columns:
+        return arrow_schema.empty_table()
+    return pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+
+
 def local_frame(
     spark: SparkSession, rows: Iterable[Sequence], schema: StructType | str
 ) -> DataFrame:
@@ -24,13 +37,4 @@ def local_frame(
     is a StructType or a DDL string) as a ``LocalTableScan``."""
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
-    arrow_schema = to_arrow_schema(schema)
-    columns = list(zip(*rows))
-    if columns:
-        table = pa.Table.from_arrays(
-            [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
-            schema=arrow_schema,
-        )
-    else:
-        table = arrow_schema.empty_table()
-    return spark.createDataFrame(table, schema)
+    return spark.createDataFrame(arrow_table(rows, schema), schema)

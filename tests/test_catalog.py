@@ -6,10 +6,12 @@ from __future__ import annotations
 
 import threading
 import time
+from datetime import datetime, timezone
 
 import pytest
 
-from pumle_spark.catalog import SimulationCatalog
+from pumle_spark.catalog import LOG_SCHEMA, SimulationCatalog
+from pumle_spark.sources.local import local_frame
 
 
 @pytest.fixture()
@@ -153,10 +155,7 @@ def test_duplicate_register_row_changes_nothing(spark, tmp_path, configs):
     cat = SimulationCatalog(spark, str(tmp_path / "catalog"))
     cat.register(configs)
     cat.update_status(["aaaa1111"], "RUNNING")
-    late = spark.createDataFrame(
-        [("aaaa1111", 99, '{"pe": 0.0}')], "sim_hash string, sim_id int, fluid_params string"
-    )
-    cat._append(late.selectExpr("*", "'CREATED' AS status", "current_timestamp() AS created_at"))
+    cat._append([("aaaa1111", 99, '{"pe": 0.0}', "CREATED", datetime.now(timezone.utc))])
     rows = {r.sim_hash: r for r in cat.load().collect()}
     assert len(rows) == 2
     a = rows["aaaa1111"]
@@ -169,11 +168,8 @@ def test_status_event_for_unknown_hash_adds_no_row(spark, tmp_path, configs):
     cat = SimulationCatalog(spark, str(path))
     cat.register(configs)
     cat.update_status(["zzzz9999"], "FAILED")
-    event = spark.createDataFrame(
-        [("zzzz9999", None, None, "FAILED", None)],
-        "sim_hash string, sim_id int, fluid_params string, status string, created_at timestamp",
-    )
-    cat._append(event)  # an event that bypassed update_status's guard
+    # an event that bypassed update_status's guard
+    cat._append([("zzzz9999", None, None, "FAILED", None)])
     rows = cat.load().collect()
     assert {r.sim_hash for r in rows} == {"aaaa1111", "bbbb2222"}
     assert {r.status for r in rows} == {"CREATED"}
@@ -204,3 +200,62 @@ def test_single_table_catalog_is_rejected(spark, tmp_path, configs):
     for call in (cat.load, lambda: cat.register(configs)):
         with pytest.raises(ValueError, match="single-table Parquet catalog"):
             call()
+
+
+def _group_jobs(spark, group: str, call) -> list[int]:
+    """The Spark jobs ``call`` starts, counted in its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        call()
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_catalog_writes_start_no_job(spark, tmp_path):
+    """register on a local_frame and update_status read, fold and append
+    the log on the driver; the count on the loaded frame, in the same
+    kind of group, shows the tracker sees jobs."""
+    cat = SimulationCatalog(spark, str(tmp_path / "catalog"))
+    configs = local_frame(spark, [("aaaa1111", 1, "{}"), ("bbbb2222", 2, "{}")],
+                          "sim_hash string, sim_id int, fluid_params string")
+    assert _group_jobs(spark, "catalog_register", lambda: cat.register(configs)) == []
+    assert _group_jobs(spark, "catalog_update", lambda: cat.update_status(None, "RUNNING")) == []
+    assert _group_jobs(spark, "catalog_count", lambda: cat.load().count())
+    assert {r.status for r in cat.load().collect()} == {"RUNNING"}
+
+
+def test_load_folds_an_entry_written_by_spark(spark, tmp_path, configs):
+    """An entry committed by Spark's Parquet writer (part-*.parquet beside
+    _SUCCESS and .crc files) folds like one written on the driver."""
+    path = tmp_path / "catalog"
+    cat = SimulationCatalog(spark, str(path))
+    cat.register(configs)
+    seq = time.time_ns()
+    entry = path / f"{seq:020d}-0000spark"
+    local_frame(spark, [("bbbb2222", None, None, "COMPLETED", None, seq),
+                        ("cccc3333", 3, '{"pe": 7.0}', "CREATED", datetime.now(timezone.utc), seq)],
+                LOG_SCHEMA).coalesce(1).write.parquet(str(entry))
+    names = sorted(p.name for p in entry.iterdir())
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+    st = {r.sim_hash: (r.sim_id, r.status) for r in cat.load().collect()}
+    assert st == {"aaaa1111": (1, "CREATED"), "bbbb2222": (2, "COMPLETED"), "cccc3333": (3, "CREATED")}
+
+
+def test_crashed_writer_leaves_no_visible_entry(spark, tmp_path, configs):
+    """A writer that died before its rename leaves a hidden .<name>.tmp/
+    directory, and a Spark writer that died before its job commit leaves
+    only _temporary/ in its entry; reads skip both, and later writes
+    commit around them."""
+    path = tmp_path / "catalog"
+    cat = SimulationCatalog(spark, str(path))
+    cat.register(configs)
+    event = local_frame(spark, [("aaaa1111", None, None, "FAILED", None, time.time_ns())], LOG_SCHEMA)
+    event.coalesce(1).write.parquet(str(path / f".{time.time_ns():020d}-deadbeef.tmp"))
+    event.coalesce(1).write.parquet(str(path / f"{time.time_ns():020d}-0000dead" / "_temporary" / "0"))
+    cat.update_status(["bbbb2222"], "RUNNING")
+    st = {r.sim_hash: r.status for r in cat.load().collect()}
+    assert st == {"aaaa1111": "CREATED", "bbbb2222": "RUNNING"}
+    assert len(_entries(path)) == 4

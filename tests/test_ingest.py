@@ -213,3 +213,23 @@ def test_read_golden_build_starts_no_job(spark, golden, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     assert build_jobs == []
     assert all_jobs
+
+
+def test_ingest_build_starts_no_job(spark, bronze):
+    """Building the bronze → golden plan runs no Spark job: the grid dims
+    file is read on the driver; the count in the same job group shows the
+    tracker sees jobs."""
+    root, _ = bronze
+    sc = spark.sparkContext
+    group = "ingest_golden_build"
+    sc.setJobGroup(group, "ingest_golden build")
+    try:
+        g = _ingest(spark, root)
+        build_jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        g.count()
+        all_jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert build_jobs == []
+    assert all_jobs

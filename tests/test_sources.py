@@ -55,6 +55,7 @@ def test_bronze_scans(spark, tmp_path):
     sims = make_bronze(tmp_path, n_sims=2, n_t=2, seed=3)
     dims = read_grid_dims(spark, str(tmp_path / f"g_{CASE}.json"))
     assert dims == (4, 3, 2)
+    assert read_grid_dims(spark, (tmp_path / f"g_{CASE}.json").as_uri()) == dims
 
     act = read_actnum(spark, str(tmp_path / f"grdecl_{CASE}_*.json"))
     per_sim = {r.sim_hash: r.actnum for r in act.collect()}  # one row per sim
