@@ -1,11 +1,10 @@
 """Reusable deduplication operators (engine API behind the workload queries).
 
 Scale design per variant:
-- exact_dedup: shuffle on md5(content), never on content.
-- minhash_signatures / lsh_candidates: per-doc map + bucket join (the
+- minhash_signatures / lsh_candidate_pairs: per-doc map + bucket join (the
   all-pairs join never happens).
-- simhash + hamming_pairs: signature is a per-doc map; the Hamming-ball
-  pair search uses PREFIX BLOCKING (pigeonhole over b+1 blocks of the
+- hamming_pairs over per-doc 64-bit signatures: the Hamming-ball pair
+  search uses PREFIX BLOCKING (pigeonhole over b+1 blocks of the
   signature: two signatures within Hamming distance b share at least one
   exact block) — candidates come from equi-joins on block values, then the
   exact popcount filter runs on candidates only.
@@ -14,7 +13,7 @@ Scale design per variant:
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
 
 _NORM_SQL = "split(trim(regexp_replace(lower({col}), '[^a-z0-9]+', ' ')), ' ')"
@@ -73,27 +72,6 @@ def winnow_fp_array(gram: int, window: int, norm: str = "norm") -> F.Column:
         f"THEN cast(array() as array<string>) "
         f"ELSE array_distinct(transform(sequence(1, size(g)), "
         f"i -> array_min(slice(g, i, {window})))) END)[0]"
-    )
-
-
-def minhash_array(shingles_sql: str, seed: int) -> F.Column:
-    """Per-row minhash for one seed: min over md5(seed|shingle) — a pure
-    projection. Same caveat as shingle_array: pass a column reference, not
-    an inline construction, or each seed re-builds the array."""
-    return F.expr(
-        f"array_min(transform({shingles_sql}, s -> md5(concat('{seed}', '|', s))))"
-    )
-
-
-def exact_dedup(df: DataFrame, content_col: str, key_col: str) -> DataFrame:
-    """Keep the min-key row per identical content (X3 idempotence shape).
-
-    Returns the surviving keys: (content_hash, keep_key, n_copies).
-    """
-    return (
-        df.select(F.md5(F.col(content_col)).alias("content_hash"), F.col(key_col).alias("k"))
-        .groupBy("content_hash")
-        .agg(F.min("k").alias("keep_key"), F.count(F.lit(1)).alias("n_copies"))
     )
 
 
@@ -186,25 +164,6 @@ def lsh_candidate_pairs(
         .filter(F.col("key_a") < F.col("key_b"))
         .select("key_a", "key_b")
         .distinct()
-    )
-
-
-def jaccard_verify(cand: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
-    """Exact Jaccard on candidate pairs only: (key_a, key_b, jaccard)."""
-    sizes = sh.groupBy("key").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col("key").alias("key_a"), "sh")
-    b = sh.select(F.col("key").alias("key_b"), "sh")
-    inter = (
-        cand.join(a, "key_a").join(b, ["key_b", "sh"]).groupBy("key_a", "key_b").agg(
-            F.count(F.lit(1)).alias("n_common")
-        )
-    )
-    sa = sizes.select(F.col("key").alias("key_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("key").alias("key_b"), F.col("n_sh").alias("n_b"))
-    jac = F.col("n_common").cast("double") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-    return (
-        inter.join(sa, "key_a").join(sb, "key_b").filter(jac >= threshold)
-        .select("key_a", "key_b", jac.alias("jaccard"))
     )
 
 
@@ -328,41 +287,6 @@ def connected_components(
             stacklevel=2,
         )
     return labels
-
-
-def simhash64(df: DataFrame, key_col: str, text_col: str = "text") -> DataFrame:
-    """64-bit SimHash per document → (key, simhash). Two md5-derived 32-bit
-    halves keep everything in expressions (xxhash64 would be cheaper but
-    md5 keeps parity with the oracle-checked 32-bit variant)."""
-    toks = (
-        df.select(F.col(key_col).alias("key"), F.explode(normalize_text(text_col)).alias("w"))
-        .filter(F.col("w") != "")
-        .distinct()
-    )
-    spark = df.sparkSession
-    bits = spark.range(64).select(F.col("id").cast("int").alias("bit"))
-    h = toks.select(
-        "key",
-        F.conv(F.substring(F.md5("w"), 1, 8), 16, 10).cast("bigint").alias("h_lo"),
-        F.conv(F.substring(F.md5("w"), 9, 8), 16, 10).cast("bigint").alias("h_hi"),
-    )
-    weights = (
-        h.crossJoin(F.broadcast(bits))
-        .withColumn(
-            "bitval",
-            F.when(
-                F.col("bit") < 32,
-                F.expr("shiftright(h_lo, bit) & 1"),
-            ).otherwise(F.expr("shiftright(h_hi, bit - 32) & 1")),
-        )
-        .groupBy("key", "bit")
-        .agg(F.sum(F.when(F.col("bitval") == 1, 1).otherwise(-1)).alias("weight"))
-    )
-    return weights.groupBy("key").agg(
-        F.sum(
-            F.when(F.col("weight") > 0, F.expr("shiftleft(1L, bit)")).otherwise(F.lit(0))
-        ).alias("simhash")
-    )
 
 
 def hamming_pairs(signatures: DataFrame, max_distance: int = 3, n_blocks: int | None = None) -> DataFrame:

@@ -3,8 +3,8 @@ with typed metadata (driver north-star component).
 
 Design: a media table is
     (media_id BIGINT, content BINARY, mime STRING, meta STRUCT<...>)
-Binary payloads ride Parquet/Arrow untouched; all decode / feature-extract
-/ resize / frame-sample operators are Arrow-batched ``mapInPandas`` stages
+Binary payloads ride Parquet/Arrow untouched; the decode / feature-extract
+and frame-sample operators are Arrow-batched ``mapInPandas`` stages
 so the bytes cross the JVM↔Python boundary exactly once per batch.
 
 The actual codecs (PIL/opencv/ffmpeg) are NOT in this container, so the
@@ -28,7 +28,6 @@ from pyspark.sql import DataFrame
 MEDIA_SCHEMA = "media_id bigint, content binary, mime string, width int, height int"
 
 IMAGE_FEATURE_SCHEMA = "media_id bigint, feat array<float>, decode_ok boolean"
-THUMBNAIL_SCHEMA = "media_id bigint, thumb binary, thumb_w int, thumb_h int"
 FRAME_SAMPLE_SCHEMA = "media_id bigint, frame_idx int, frame binary"
 
 
@@ -105,35 +104,6 @@ def image_features(media: DataFrame, dim: int = 16, allow_fake: bool = True) -> 
 
     return media.select("media_id", "content", "width", "height").mapInPandas(
         run, schema=IMAGE_FEATURE_SCHEMA
-    )
-
-
-def thumbnails(media: DataFrame, max_side: int = 8, allow_fake: bool = True) -> DataFrame:
-    """Resize path: decode → downscale (stride sampling) → re-encode (raw
-    bytes here; a real deployment plugs an encoder into the same kernel)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_b, out_w, out_h = [], [], []
-            for content, w, h in zip(pdf["content"], pdf["width"], pdf["height"]):
-                try:
-                    px = _decode_image_real(bytes(content))
-                except NotImplementedError:
-                    if not allow_fake:
-                        raise
-                    px = _fake_pixels(bytes(content), int(w), int(h))
-                sy = max(1, px.shape[0] // max_side)
-                sx = max(1, px.shape[1] // max_side)
-                small = px[::sy, ::sx]
-                out_b.append(small.tobytes())
-                out_h.append(small.shape[0])
-                out_w.append(small.shape[1])
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "thumb": out_b, "thumb_w": out_w, "thumb_h": out_h}
-            )
-
-    return media.select("media_id", "content", "width", "height").mapInPandas(
-        run, schema=THUMBNAIL_SCHEMA
     )
 
 

@@ -1,26 +1,3 @@
-"""Plan inspection & assertion helpers (SURVEY §4).
-
-The engine's scale guarantees are plan shapes, not hopes — these helpers
-read the same .explain artifacts a human would and are used both by
-tests/test_plans.py and interactively when tuning.
-"""
-
-from pumle_spark.plans.inspect import (
-    assert_broadcast_join,
-    assert_no_exchange,
-    assert_pushed_filters,
-    codegen_summary,
-    physical_plan,
-    pushed_filters,
-    read_schema,
-)
-
-__all__ = [
-    "physical_plan",
-    "pushed_filters",
-    "read_schema",
-    "codegen_summary",
-    "assert_pushed_filters",
-    "assert_broadcast_join",
-    "assert_no_exchange",
-]
+"""Plan inspection (SURVEY §4): the executed plan as text for the plan-shape
+tests and perfbench's plan layer, and the formatted plan tools/probe.py
+fingerprints."""

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame
 
 
@@ -14,51 +12,3 @@ def physical_plan(df: DataFrame) -> str:
 def formatted_plan(df: DataFrame) -> str:
     spark = df.sparkSession
     return spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-
-
-def codegen_summary(df: DataFrame) -> str:
-    """'Found N WholeStageCodegen subtrees' + generated code — use the
-    header to assert fusion happened."""
-    spark = df.sparkSession
-    return spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "codegen")
-
-
-def pushed_filters(df: DataFrame) -> list[str]:
-    """All PushedFilters entries across scans (truncated by Spark's
-    maxToStringFields — prefix-match against these)."""
-    return re.findall(r"PushedFilters: \[([^\]]*)", physical_plan(df))
-
-
-def read_schema(df: DataFrame) -> list[str]:
-    return re.findall(r"ReadSchema: ([^,\n]*)", physical_plan(df))
-
-
-def exchange_count(df: DataFrame) -> int:
-    return physical_plan(df).count("Exchange ")
-
-
-# -- assertions -------------------------------------------------------------
-
-
-def assert_pushed_filters(df: DataFrame, *fragments: str) -> None:
-    joined = "; ".join(pushed_filters(df))
-    for frag in fragments:
-        if frag not in joined:
-            raise AssertionError(f"filter {frag!r} not pushed; got: {joined[:300]}")
-
-
-def assert_broadcast_join(df: DataFrame, forbid_sort_merge: bool = False) -> None:
-    plan = physical_plan(df)
-    if "BroadcastHashJoin" not in plan and "BroadcastNestedLoopJoin" not in plan:
-        raise AssertionError("no broadcast join in plan")
-    if forbid_sort_merge and "SortMergeJoin" in plan:
-        raise AssertionError("unexpected SortMergeJoin in plan")
-
-
-def assert_no_exchange(df: DataFrame) -> None:
-    """The co-located-join guarantee: bucketed/pre-partitioned inputs must
-    join without any shuffle exchange."""
-    plan = physical_plan(df)
-    if "Exchange " in plan:
-        offending = [ln.strip() for ln in plan.splitlines() if "Exchange " in ln][:3]
-        raise AssertionError(f"plan contains exchanges: {offending}")

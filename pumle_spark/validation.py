@@ -55,13 +55,16 @@ class ValidationError(ValueError):
 def with_violations(df: DataFrame, checks: list[Check]) -> DataFrame:
     """Adds a `violations` array column of failed check names (NULL check
     result counts as failed, matching pandera's null handling)."""
-    arr = F.array_compact(
-        F.array(
-            *[
-                F.when(F.coalesce(cond, F.lit(False)), F.lit(None)).otherwise(F.lit(name))
-                for name, cond in checks
-            ]
-        )
+    # concat of per-check singleton-or-empty arrays, not array_compact: the
+    # latter is a filter() lambda, which drops the projection out of
+    # whole-stage codegen
+    empty = F.array().cast("array<string>")
+    arr = F.concat(
+        empty,
+        *[
+            F.when(F.coalesce(cond, F.lit(False)), empty).otherwise(F.array(F.lit(name)))
+            for name, cond in checks
+        ],
     )
     return df.withColumn("violations", arr)
 

@@ -136,12 +136,9 @@ _SQL_SEMDEDUP = f"""
 
 # ---------------------------------------------------------------- Spark side
 
-def _vecd():
-    return F.transform(F.col("embedding"), lambda x: x.cast("double"))
-
-
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+# The vector helpers _vecd/_dot live in workload.similarity and are imported
+# inside each function: a module-level import would register similarity's
+# queries ahead of clustering's and reorder queries().
 
 
 def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -150,6 +147,8 @@ def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumed by every Lloyd-iteration job, so the un-materialized
     # exchange re-executed per job, and the 64-float array payload shuffle
     # costs more than the small HOF dot kernel saves.
+    from pumle_spark.workload.similarity import _vecd
+
     return table(spark, sf_dir, "embeddings").select("vec_id", _vecd().alias("emb"))
 
 
@@ -172,6 +171,8 @@ def _assign(v: DataFrame, cents: DataFrame) -> DataFrame:
     centroid side is always broadcast — the corpus never shuffles. `v` may
     already carry a `vn` squared-norm column (computed once per pipeline,
     not once per iteration)."""
+    from pumle_spark.workload.similarity import _dot
+
     cn = cents.withColumn("cn", _dot(F.col("cemb"), F.col("cemb")))
     vn = v if "vn" in v.columns else v.withColumn("vn", _dot(F.col("emb"), F.col("emb")))
     cos = _dot(F.col("emb"), F.col("cemb")) / F.sqrt(F.col("vn") * F.col("cn"))
@@ -207,6 +208,8 @@ def _update(v: DataFrame, asg: DataFrame, cents_prev: DataFrame) -> DataFrame:
 
 
 def _kmeans_final(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pumle_spark.workload.similarity import _dot
+
     v = _corpus(spark, sf_dir).withColumn("vn", _dot(F.col("emb"), F.col("emb")))
     cents = _init_centroids(v)
     for _ in range(_ITERS):
@@ -257,6 +260,8 @@ def cluster_semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     hold |c| constant (the 100 TB path). Chains collapse leftward like the
     min-label rule in dedup_minhash_clusters: a keeper may itself be dropped
     by a still-smaller keeper."""
+    from pumle_spark.workload.similarity import _dot
+
     v = _corpus(spark, sf_dir)
     # attach embedding + squared norm ONCE per vector before the pair join:
     # per-pair work is then a single dot product, not three (the norms of a
@@ -473,6 +478,8 @@ def cluster_assignment_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment pass the pipeline already pays), plus one rank window per
     vec_id over K rows; nothing quadratic in members.
     """
+    from pumle_spark.workload.similarity import _dot
+
     v = _corpus(spark, sf_dir).withColumn("vn", _dot(F.col("emb"), F.col("emb")))
     cents = _init_centroids(v)
     for _ in range(_ITERS):

@@ -60,8 +60,8 @@ _SQL_SHINGLES = f"""
 
 def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct word-3-gram shingles per document: (doc_id, sh) — delegates
-    to operators.dedup.shingles (exploded tokens + lead() windows; see that
-    module for why the per-row-array formulation loses under Catalyst)."""
+    to operators.dedup.shingles (one explode of each doc's distinct shingle
+    array)."""
     from pumle_spark.operators.dedup import shingles
 
     docs = table(spark, sf_dir, "documents")
@@ -77,9 +77,9 @@ def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     Why (r11 optimization round, guide §2.4): consumers branch over the
     shingle relation many times — sizes, the signature pass, and BOTH verify
     sides — and each branch re-ran the tokenize+shingle construction from
-    the parquet scan (measured: 6 documents scans in dedup_minhash_lsh's
-    before-plan, plans/r11/dedup_minhash_lsh_before.txt). Checkpointing the
-    compact per-doc array makes it ONE scan + one in-memory table; on a
+    the parquet scan (measured: without the checkpoint, dedup_minhash_lsh's
+    plan scanned documents 6 times). Checkpointing the compact per-doc
+    array makes it ONE scan + one in-memory table; on a
     cluster the same role is played by checkpoint() to reliable storage.
     n_sh is the exact distinct-shingle count (sizes twin), so consumers
     need no groupBy to recover it.
@@ -348,9 +348,9 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # r11 optimization-round rework (guide §2.3/§2.4), value-identical:
     # - the shingle relation is built ONCE as a per-doc array and
-    #   checkpointed (_shingle_sets) — the before-plan re-ran the
+    #   checkpointed (_shingle_sets) — without it the plan re-ran the
     #   tokenize+shingle construction 6x (sizes, both band sides, both
-    #   verify sides; plans/r11/dedup_minhash_lsh_before.txt);
+    #   verify sides);
     # - the minhash signature is a map-side projection over that array
     #   (same hash family, min over the same distinct set) instead of an
     #   explode + groupBy(key) shuffle of |shingles| rows;

@@ -22,6 +22,7 @@ from pyspark.sql.functions import broadcast
 from pumle_spark.functions import money
 from pumle_spark.sources.local import local_frame
 from pumle_spark.tables import table
+from pumle_spark.validation import in_range, isin, regex_check, with_violations
 from pumle_spark.workload import register
 
 # --------------------------------------------------------------------------
@@ -458,18 +459,18 @@ def validate_customer_constraints(spark: SparkSession, sf_dir: str) -> DataFrame
     """Constraint validation as column expressions (pandera BASE_SCHEMA,
     metadata.py:30-59 → in_range / regex / isin checks).
 
-    Returns per-row violation counts; the engine's validate() splits valid
-    from violating rows on this. One scan, no UDFs, fully pushed to codegen.
+    Returns per-row violation counts: the size of validation.with_violations'
+    failed-check array, the same array validate() splits valid from violating
+    rows on. One scan, no UDFs, fully pushed to codegen.
     """
-    c = table(spark, sf_dir, "customer")
     checks = [
-        F.col("c_acctbal").between(-1000, 10000),
-        F.col("c_name").startswith("Customer"),
-        F.col("c_nationkey").between(0, 24),
-        F.col("c_mktsegment").isin("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"),
+        in_range("c_acctbal", -1000, 10000),
+        regex_check("c_name", "^Customer"),
+        in_range("c_nationkey", 0, 24),
+        isin("c_mktsegment", ("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")),
     ]
-    n_violations = sum(F.when(chk, 0).otherwise(1) for chk in checks)
-    return c.select("c_custkey", n_violations.cast("int").alias("n_violations"))
+    flagged = with_violations(table(spark, sf_dir, "customer"), checks)
+    return flagged.select("c_custkey", F.size("violations").alias("n_violations"))
 
 
 # --------------------------------------------------------------------------

@@ -13,8 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pumle_spark.sources.local import local_frame
 from pumle_spark.tables import table
 from pumle_spark.workload import register
-
-_SQL_TOKENS = "string_split_regex(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ')"
+from pumle_spark.workload.dedup import _SQL_TOKENS, _tokens_col
 
 _STOPWORDS = {
     "en": ("the", "a", "and", "of", "to", "in"),
@@ -22,13 +21,6 @@ _STOPWORDS = {
     "fr": ("le", "la", "de", "et", "les"),
     "de": ("der", "die", "und", "das", "ist"),
 }
-
-
-def _tokens_col():
-    # single tokenizer definition for the whole engine
-    from pumle_spark.operators.dedup import normalize_text
-
-    return normalize_text("text")
 
 
 def _sql_in(words: tuple[str, ...]) -> str:

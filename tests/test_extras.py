@@ -1,17 +1,15 @@
-"""Schedule generators, tensor scans, SQLite migration, plume analytics,
-bilinear interpolation, cloud helpers, external-simulator interop."""
+"""Schedule generators, tensor scans, plume analytics, bilinear
+interpolation, external-simulator interop."""
 
 from __future__ import annotations
 
 import os
-import sqlite3
 
 import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
 from pumle_spark.catalog import SimulationCatalog
-from pumle_spark.cloud import list_objects, read_dataset, write_dataset
 from pumle_spark.exports import export_tensors
 from pumle_spark.functions.physics import interpolate_bilinear
 from pumle_spark.functions.schedule import full_schedule, rampup_timesteps
@@ -24,7 +22,6 @@ from pumle_spark.plume import (
     trap_volumes,
 )
 from pumle_spark.sources.matfiles import write_section_mats
-from pumle_spark.sources.sqlite_catalog import fluid_params_columns, read_sqlite_catalog
 from pumle_spark.sources.tensors import read_npy_tensors, read_zarr_tensors
 from tests.fixtures import CASE, DIMS, make_bronze
 
@@ -166,38 +163,6 @@ def test_zarr_edge_chunk_padding_roundtrip(spark, tmp_path):
 
 
 # --------------------------------------------------------------------------
-# S7/S8 SQLite migration
-# --------------------------------------------------------------------------
-
-
-def test_sqlite_catalog_migration(spark, tmp_path):
-    db = tmp_path / "pumle.db"
-    con = sqlite3.connect(db)
-    con.execute(
-        """CREATE TABLE simulations (
-            sim_hash TEXT PRIMARY KEY, sim_id INTEGER, fluid_params TEXT,
-            status TEXT, created_at TIMESTAMP DEFAULT CURRENT_TIMESTAMP)"""
-    )  # db.py:15-23 DDL
-    con.execute(
-        "INSERT INTO simulations VALUES ('abcd1234', 1, \"{'pres_ref': 35.0, 'srw': 0.11}\", 'COMPLETED', '2024-01-02 03:04:05')"
-    )
-    con.execute(
-        "INSERT INTO simulations VALUES ('beef5678', 2, \"{'pres_ref': 28.0, 'srw': 0.13}\", 'CREATED', '2024-01-02 03:04:06')"
-    )
-    con.commit()
-    con.close()
-
-    cat = read_sqlite_catalog(spark, str(db))
-    assert cat.count() == 2
-    assert {r.status for r in cat.collect()} == {"COMPLETED", "CREATED"}
-
-    # S8: stringified dicts (str(dict), db.py:214) become typed columns
-    params = fluid_params_columns(cat).orderBy("sim_hash").collect()
-    assert params[0].pres_ref == 35.0 and params[0].srw == 0.11
-    assert params[1].pres_ref == 28.0
-
-
-# --------------------------------------------------------------------------
 # plume analytics
 # --------------------------------------------------------------------------
 
@@ -286,22 +251,6 @@ def test_bilinear_interpolation_edge_and_out_of_grid_clamp(spark):
     # out-of-grid points linearly extrapolate the edge cell (value = 2x+3y
     # is globally linear, so extrapolation is exact here)
     assert out[(99.0, 999.0)] == pytest.approx(2 * 99.0 + 3 * 999.0, rel=1e-12)
-
-
-# --------------------------------------------------------------------------
-# K8 cloud helpers (scheme-transparent; exercised on file://)
-# --------------------------------------------------------------------------
-
-
-def test_cloud_write_read_list(spark, tmp_path):
-    df = spark.range(10).select(F.col("id"), (F.col("id") % 3).alias("g"))
-    uri = str(tmp_path / "ds")
-    write_dataset(df, uri, partition_by=["g"])
-    back = read_dataset(spark, uri)
-    assert back.count() == 10 and set(back.columns) == {"id", "g"}
-    listing = list_objects(spark, uri + "/g=*/*.parquet")
-    assert listing.count() >= 3
-    assert {"path", "length", "modification_time"} == set(listing.columns)
 
 
 # --------------------------------------------------------------------------

@@ -9,20 +9,16 @@ import pytest
 
 from pumle_spark.operators.dedup import (
     connected_components,
-    exact_dedup,
     hamming_pairs,
-    jaccard_verify,
     lsh_candidate_pairs,
     minhash_signatures,
     shingles,
-    simhash64,
 )
 from pumle_spark.operators.joins import asof_join, range_join
 from pumle_spark.operators.multimodal import (
     image_features,
     media_stats,
     sample_frames,
-    thumbnails,
 )
 from pumle_spark.operators.similarity import cosine_topk, cosine_topk_pandas, lsh_topk
 
@@ -79,12 +75,6 @@ def docs(spark):
     )
 
 
-def test_exact_dedup_groups_identical(docs):
-    out = {r.keep_key: r.n_copies for r in exact_dedup(docs, "text", "doc_id").collect()}
-    assert out[0] == 2  # docs 0 and 1 identical
-    assert out[2] == 1 and out[3] == 1
-
-
 def test_minhash_lsh_finds_near_dups(docs):
     sh = shingles(docs, "doc_id").cache()
     sig = minhash_signatures(sh, n_hashes=8)
@@ -92,12 +82,7 @@ def test_minhash_lsh_finds_near_dups(docs):
     cand = lsh_candidate_pairs(sig, n_hashes=8, rows_per_band=2)
     pairs = {(r.key_a, r.key_b) for r in cand.collect()}
     assert (0, 1) in pairs  # identical docs always collide in every band
-    verified = jaccard_verify(cand, sh, threshold=0.5)
-    got = {(r.key_a, r.key_b): r.jaccard for r in verified.collect()}
-    assert got[(0, 1)] == 1.0
-    if (0, 2) in got:
-        assert 0.5 <= got[(0, 2)] < 1.0
-    assert all(3 not in p for p in got)
+    assert all(3 not in p for p in pairs)  # no shingle in common with the rest
 
 
 def test_connected_components_chain_and_islands(spark):
@@ -118,14 +103,15 @@ def test_connected_components_long_path_converges(spark):
     assert len(out) == 13
 
 
-def test_simhash_hamming_pairs(docs):
-    sig = simhash64(docs, "doc_id").cache()
-    sigs = {r.key: r.simhash for r in sig.collect()}
-    assert sigs[0] == sigs[1]  # identical text → identical signature
+def test_simhash_hamming_pairs(spark):
+    base = 0x0123456789ABCDEF
+    sig = spark.createDataFrame(
+        [(0, base), (1, base), (2, base ^ 0b1011), (3, ~base)], "key long, simhash long"
+    )
     pairs = {(r.key_a, r.key_b): r.hamming for r in hamming_pairs(sig, max_distance=16).collect()}
     assert pairs[(0, 1)] == 0
-    # near-dup within distance, unrelated doc far from everything
-    assert (0, 2) in pairs
+    # near-dup within distance, unrelated signature (all 64 bits flipped) far from everything
+    assert pairs[(0, 2)] == 3
     assert all(3 not in p for p in pairs)
 
 
@@ -214,12 +200,6 @@ def test_image_features_strict_mode_raises(media):
 
     with pytest.raises(Exception):  # NotImplementedError inside the executor
         image_features(media, allow_fake=False).collect()
-
-
-def test_thumbnails_shape(media):
-    rows = {r.media_id: r for r in thumbnails(media, max_side=8).collect()}
-    assert rows[2].thumb_w <= 8 and rows[2].thumb_h <= 8
-    assert len(rows[2].thumb) == rows[2].thumb_w * rows[2].thumb_h * 3
 
 
 def test_sample_frames_fanout(media):

@@ -10,7 +10,7 @@ import json
 import random
 
 import pyspark.sql.functions as F
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from pumle_spark.functions.hashing import params_to_filename_string, sim_hash
@@ -44,15 +44,20 @@ def test_hash_key_order_invariance(d, rnd):
 
 
 @given(param_dicts, param_dicts)
+@example({"0": 0.0}, {"0": -0.0})
 @settings(max_examples=100, deadline=None)
 def test_distinct_params_distinct_hash(d1, d2):
-    # contrapositive of cache-hit correctness: equal hash inputs ⇔ equal dicts
-    if json.dumps(d1, sort_keys=True) != json.dumps(d2, sort_keys=True):
-        assert sim_hash(d1) == sim_hash(d1)  # determinism
-        # md5 collisions over 8 hex chars are possible in principle but not
-        # reachable by hypothesis; assert the strong property on equality:
-    if d1 == d2:
+    # cache-hit correctness: equal hash inputs ⇔ equal hashes. The hash input
+    # is the canonical JSON, not Python equality: {"0": 0.0} == {"0": -0.0},
+    # yet the reference hashes "0.0" and "-0.0" apart, and so must sim_hash.
+    k1 = json.dumps(d1, sort_keys=True)
+    k2 = json.dumps(d2, sort_keys=True)
+    assert sim_hash(d1) == sim_hash(d1)  # determinism
+    if k1 == k2:
         assert sim_hash(d1) == sim_hash(d2)
+    else:
+        # an 8-hex md5 collision is ~2**-32 per pair: out of hypothesis' reach
+        assert sim_hash(d1) != sim_hash(d2)
 
 
 # -- F2: filename encoding --------------------------------------------------

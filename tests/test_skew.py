@@ -1,61 +1,9 @@
-"""Bucketed co-located joins: the no-shuffle guarantee, asserted on plans."""
+"""Hot-key skew: salted_join spreads one hot key over several reducers,
+asserted on measured partition-size histograms, not just plan shape."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-import pytest
-
-from pumle_spark.bucketing import colocated_join, read_table, write_bucketed
-from pumle_spark.plans import assert_no_exchange
-from pumle_spark.plans.inspect import exchange_count, physical_plan
-
-
-@pytest.fixture(scope="module")
-def bucketed_tables(spark):
-    # warehouse dir is set to a tempdir at session build (conftest)
-    obs = spark.range(2000).select(
-        (F.col("id") % 50).alias("sim_key"),
-        F.col("id").alias("row_id"),
-        (F.col("id") * 2.5).alias("pressure"),
-    )
-    idx = spark.range(50).select(
-        F.col("id").alias("sim_key"),
-        F.concat(F.lit("h"), F.col("id")).alias("sim_hash"),
-    )
-    write_bucketed(obs, "obs_bucketed", ["sim_key"], n_buckets=8)
-    write_bucketed(idx, "idx_bucketed", ["sim_key"], n_buckets=8)
-    return "obs_bucketed", "idx_bucketed"
-
-
-def test_colocated_join_has_no_exchange(spark, bucketed_tables):
-    left, right = bucketed_tables
-    joined = colocated_join(spark, left, right, on=["sim_key"])
-    assert_no_exchange(joined)  # bucket-driven SMJ: zero shuffles
-    assert "SortMergeJoin" in physical_plan(joined)
-    assert joined.count() == 2000
-
-
-def test_unbucketed_join_does_exchange(spark, bucketed_tables):
-    """Control: the same join without bucketing shuffles at least one side."""
-    left, _ = bucketed_tables
-    plain = spark.range(50).select(
-        F.col("id").alias("sim_key"), F.lit("x").alias("tag")
-    )
-    joined = read_table(spark, left).hint("merge").join(plain.hint("merge"), "sim_key")
-    assert exchange_count(joined) >= 1
-
-
-def test_bucketed_groupby_avoids_exchange(spark, bucketed_tables):
-    left, _ = bucketed_tables
-    agg = read_table(spark, left).groupBy("sim_key").agg(F.sum("pressure").alias("s"))
-    # aggregation on the bucket key also rides the bucketing
-    assert exchange_count(agg) == 0
-    assert agg.count() == 50
-
-
-# --------------------------------------------------------------------------
-# skew: measured partition-size histograms, not just plan shape
-# --------------------------------------------------------------------------
 
 
 def _partition_histogram(df):

@@ -76,3 +76,36 @@ def test_observed_counts_rides_the_write_action(spark, tmp_path):
     assert got["n_rows"] == 4
     assert got["bad_v>=0.0"] == 1  # the -3.0 row (NULL comparison is not a failure here)
     assert got["bad_vnotnull"] == 1
+
+
+def test_base_metadata_checks_on_a_sweep(spark):
+    """The reference BASE_SCHEMA (metadata.py:30-59) over flattened sweep
+    metadata: a valid sweep passes fail-fast; one row pushed out of range
+    fails it, and the error names the failed check."""
+    import pyspark.sql.functions as F
+
+    from pumle_spark.exports import flatten_metadata
+    from pumle_spark.sweep import VariedParam, generate_variations
+    from pumle_spark.validation import base_metadata_checks
+
+    base = {
+        "pres_ref": 35.0, "temp_ref": 95.15, "cp_rock": 4e-05, "srw": 0.11, "src": 0.21,
+        "pe": 5.0, "XNaCl": 0.1, "rho_h2o": 1000.0, "sw_0": 1.0,
+    }
+    sections = {
+        "Fluid": ["pres_ref", "temp_ref", "cp_rock", "srw", "src", "pe", "XNaCl", "rho_h2o"],
+        "Initial Conditions": ["sw_0"],
+    }
+    varied = [VariedParam("pres_ref", 35.0), VariedParam("srw", 0.11)]
+    md = flatten_metadata(generate_variations(spark, base, varied), sections)
+    valid, bad = validate(md, base_metadata_checks(), fail_fast=True)
+    assert valid.count() == 25 and bad.count() == 0
+
+    off = md.withColumn(
+        "fluid__srw", F.when(F.col("sim_id") == "7", 1.5).otherwise(F.col("fluid__srw"))
+    )
+    with pytest.raises(ValidationError) as exc:
+        validate(off, base_metadata_checks(), fail_fast=True)
+    assert exc.value.n_bad == 1
+    assert exc.value.sample == [["fluid__srwin[0,1]"]]
+    assert "fluid__srwin[0,1]" in str(exc.value)
