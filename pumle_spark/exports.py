@@ -2,10 +2,11 @@
 dense-tensor .npy / zarr.
 
 Design stance (SURVEY §7.0): the LONG golden DataFrame is canonical; dense
-(i, j, k, t) tensors exist only at the export boundary. Tensorization is an
-``applyInPandas`` per sim_hash group — each simulation's tensor is built on
-an executor (never the driver) with the exact reference semantics:
-Fortran-order reshape, NaN at inactive cells (arrays.py:88-147).
+(i, j, k, t) tensors exist only at the export boundary. Tensorization runs
+on the driver over one Arrow collect of the export columns (one Spark job,
+no shuffle, no Python worker): the rows split per sim with one argsort and
+each sim's tensor is scattered with NumPy, with the exact reference
+semantics: Fortran-order reshape, NaN at inactive cells (arrays.py:88-147).
 
 The reference's tabular exporter loops (sim, t) with pd.concat in a loop —
 O(n²) (tabular.py:131-135) — and its melt step disappears entirely here
@@ -17,12 +18,15 @@ from __future__ import annotations
 import os
 
 import numpy as np
-import pandas as pd
+import pyarrow.compute as pc
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from pumle_spark.sources.local import local_frame
+
 # zlib level of every zarr chunk (the .zarray "compressor" records it).
 ZARR_ZLIB_LEVEL = 5
+MANIFEST_SCHEMA = "sim_hash string, path string, n_t int"
 
 # --------------------------------------------------------------------------
 # R2 → K4: tabular CSV export
@@ -92,30 +96,25 @@ def write_metadata_csv(metadata: DataFrame, path: str) -> None:
 # --------------------------------------------------------------------------
 
 
-def _tensor_writer(out_dir: str, dims: tuple[int, int, int], attr: str, fmt: str):
+def _write_tensor(
+    path: str, dims: tuple[int, int, int], fmt: str,
+    t: np.ndarray, cell_id: np.ndarray, vals: np.ndarray,
+) -> int:
+    """One sim's rows → its dense (i, j, k, t) tensor file; returns n_t."""
     ni, nj, nk = dims
-
-    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        (sim_hash,) = key
-        n_t = int(pdf["t"].max()) + 1
-        # scatter into (ncells, T) with NaN placeholder, then F-order reshape
-        # — bit-for-bit the reference consolidation (arrays.py:88-143, esp.
-        # :138-140 order='F')
-        flat = np.full((ni * nj * nk, n_t), np.nan, dtype=np.float64)
-        vals = pdf[attr].to_numpy(dtype=np.float64)
-        mask = ~np.isnan(vals)
-        flat[pdf["cell_id"].to_numpy()[mask], pdf["t"].to_numpy()[mask]] = vals[mask]
-        tensor = flat.reshape((ni, nj, nk, n_t), order="F")
-
-        os.makedirs(out_dir, exist_ok=True)
-        path = os.path.join(out_dir, f"{attr}_{sim_hash}.{ 'npy' if fmt == 'npy' else 'zarr'}")
-        if fmt == "npy":
-            np.save(path, tensor)  # K2 (arrays.py:149-169)
-        else:  # K3 (arrays.py:171-197)
-            write_zarr_v2(path, tensor)
-        return pd.DataFrame({"sim_hash": [sim_hash], "path": [path], "n_t": [n_t]})
-
-    return build
+    n_t = int(t.max()) + 1
+    # scatter into (ncells, T) with NaN placeholder, then F-order reshape
+    # — bit-for-bit the reference consolidation (arrays.py:88-143, esp.
+    # :138-140 order='F')
+    flat = np.full((ni * nj * nk, n_t), np.nan, dtype=np.float64)
+    mask = ~np.isnan(vals)
+    flat[cell_id[mask], t[mask]] = vals[mask]
+    tensor = flat.reshape((ni, nj, nk, n_t), order="F")
+    if fmt == "npy":
+        np.save(path, tensor)  # K2 (arrays.py:149-169)
+    else:  # K3 (arrays.py:171-197)
+        write_zarr_v2(path, tensor)
+    return n_t
 
 
 def write_zarr_v2(store_dir: str, tensor: np.ndarray, chunk_t: int = 1) -> None:
@@ -161,22 +160,38 @@ def export_tensors(
     out_dir: str,
     fmt: str = "npy",
 ) -> DataFrame:
-    """K2/K3: per-sim dense (i, j, k, t) tensor written from executors via
-    applyInPandas over groupBy(sim_hash).
+    """K2/K3: one dense (i, j, k, t) tensor file per sim, written on the
+    driver when called (eager, like write_golden); returns the manifest
+    (sim_hash, path, n_t) as a local frame.
 
-    One simulation = one group = one tensor = one file; the groupBy on
-    sim_hash is one shuffle exchange even over golden Parquet partitioned
-    by sim_hash (a directory-partitioned scan reports no output
-    partitioning), so collecting the manifest runs two jobs (traced
-    ``pumle_etl``). Returns a manifest DataFrame (sim_hash, path, n_t).
+    One Spark job collects (sim_hash, t, cell_id, attr) as Arrow, with no
+    exchange and no Python worker. The rows split per sim on the driver:
+    sim_hash is dictionary-encoded and one stable argsort of the codes
+    groups each sim's rows, whatever batches they arrived in. Every
+    exported row transits the driver: 32 B of Arrow (8-char sim_hash and
+    its offset, t, cell_id, value), ~60 B per row at the Python peak with
+    the NumPy copies, plus the JVM's copy of the collected batches; PERF.md
+    gives the UNISIM-grid ceiling. ``out_dir`` is written where the caller
+    runs.
 
     NaN semantics: the long form stores NULL at inactive cells; to_numpy
     maps those to NaN and the scatter skips them, leaving the prefilled NaN
     — exactly arrays.py:90-92.
     """
-    manifest_schema = "sim_hash string, path string, n_t int"
-    return (
-        golden.select("sim_hash", "t", "cell_id", attr)
-        .groupBy("sim_hash")
-        .applyInPandas(_tensor_writer(out_dir, dims, attr, fmt), schema=manifest_schema)
-    )
+    table = golden.select("sim_hash", "t", "cell_id", attr).toArrow()
+    sims = pc.dictionary_encode(table.column("sim_hash")).combine_chunks()
+    t, cell_id, vals = (table.column(c).to_numpy() for c in ("t", "cell_id", attr))
+    del table  # the sim_hash strings are the largest column
+    codes = sims.indices.to_numpy(zero_copy_only=False)
+    order = np.argsort(codes, kind="stable")
+    counts = np.bincount(codes, minlength=len(sims.dictionary))
+    ends = np.cumsum(counts)
+    ext = "npy" if fmt == "npy" else "zarr"
+    manifest = []
+    for sim_hash, lo, hi in zip(sims.dictionary.to_pylist(), ends - counts, ends):
+        rows = order[lo:hi]
+        path = os.path.join(out_dir, f"{attr}_{sim_hash}.{ext}")
+        os.makedirs(out_dir, exist_ok=True)
+        n_t = _write_tensor(path, dims, fmt, t[rows], cell_id[rows], vals[rows])
+        manifest.append((sim_hash, path, n_t))
+    return local_frame(golden.sparkSession, manifest, MANIFEST_SCHEMA)

@@ -662,10 +662,9 @@ def _tensor_roundtrip(spark: SparkSession, attr: str, fmt: str) -> DataFrame:
     )
     tmp = tempfile.mkdtemp(prefix=f"export_{fmt}_")
     try:
-        # the export IS a sink: one action writes every sim's tensor from
-        # executors, then the scan lists the written files (count() is the
-        # manifest materialization, not a data collect)
-        export_tensors(golden, _FDIMS, attr, tmp, fmt=fmt).count()
+        # the export is an eager sink: the call writes every sim's tensor
+        # on the driver, then the scan lists the written files
+        export_tensors(golden, _FDIMS, attr, tmp, fmt=fmt)
         if fmt == "npy":
             longdf = read_npy_tensors(spark, f"{tmp}/{attr}_*.npy")
         else:
@@ -713,8 +712,8 @@ _EXPORT_SUMMARY_SQL = f"""
 def export_tensor_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K2 .npy export + S5 .npy scan, driver-gated end to end: golden →
     per-sim dense (i,j,k,t) saturation tensors written by the REAL
-    applyInPandas export sink (exports.export_tensors, arrays.py:149-169
-    semantics) → read back through the REAL binaryFile+mapInPandas scan
+    export sink (exports.export_tensors, arrays.py:149-169 semantics) →
+    read back through the REAL binaryFile+mapInPandas scan
     (sources/tensors.read_npy_tensors) → per-sim summary with an
     F-order-position-weighted integer checksum.
 
@@ -726,9 +725,9 @@ def export_tensor_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver's cross-engine hash gate too (round-5 scope: the one §2.2 sink
     family the driver record never covered).
 
-    Scale: one sim = one group = one tensor file, written ON the executor
-    (the manifest, not the data, returns to the driver); the read-back
-    fans out one task per file. The checksum aggregation is a plain
+    Scale: one sim = one tensor file, written on the driver from one
+    Arrow collect of the golden rows (no shuffle, no Python worker); the
+    read-back fans out one task per file. The checksum aggregation is a plain
     map-side-combinable groupBy."""
     return _tensor_roundtrip(spark, "sg", "npy")
 

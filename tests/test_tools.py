@@ -55,6 +55,46 @@ def test_plan_shape_counts_each_node_once():
     assert (shape["hashagg"], shape["scans"], shape["exchange"]) == (1, 1, 0)
 
 
+# The two orders Spark's distinct-aggregate rewrite gave q21_waiting_suppliers
+# in two sessions: the groups swap gid literals and column positions.
+_EXPAND = """== Physical Plan ==
+HashAggregate (3)
++- Expand (2)
+   +- Scan parquet  (1)
+
+
+(2) Expand
+Input [2]: [l_suppkey#1L, is_late#2]
+Arguments: [{p}], [{cols}, gid#3]
+
+(3) HashAggregate
+Functions [2]: [partial_count(l_suppkey#4L) FILTER (WHERE (gid#3 = {g1})), \
+partial_count(late#5L) FILTER (WHERE (gid#3 = {g2}))]
+"""
+_SUPP, _LATE = "l_suppkey#1L", "CASE WHEN is_late#2 THEN l_suppkey#1L END"
+
+
+def test_distinct_aggregate_plans_are_marked_unstable(tmp_path, capsys):
+    one = _EXPAND.format(p=f"[{_SUPP}, null, 1], [null, {_LATE}, 2]",
+                         cols="l_suppkey#4L, late#5L", g1=1, g2=2)
+    other = _EXPAND.format(p=f"[{_LATE}, null, 1], [null, {_SUPP}, 2]",
+                           cols="late#5L, l_suppkey#4L", g1=2, g2=1)
+    a, b = probe.plan_shape(one), probe.plan_shape(other)
+    assert a["unstable"] and b["unstable"] and a["fingerprint"] != b["fingerprint"]
+    assert not probe.plan_shape(_plan())["unstable"]
+
+    records = []
+    for i, shape in enumerate((a, b, probe.plan_shape(_plan()), probe.plan_shape(_plan(lit=2)))):
+        records.append(tmp_path / f"{i}.json")
+        records[-1].write_text(json.dumps({"queries": {}, "plans": {"q": shape}}))
+    capsys.readouterr()
+    bench_compare.main([str(records[0]), str(records[1])])
+    out = capsys.readouterr().out
+    assert "PLAN-UNSTABLE q:" in out and "PLAN-CHANGED" not in out
+    bench_compare.main([str(records[2]), str(records[3])])
+    assert "PLAN-CHANGED q" in capsys.readouterr().out.splitlines()
+
+
 def test_probe_record_and_plan_change(spark, tmp_path, capsys):
     from pumle_spark import workload
     from pumle_spark.plans.inspect import formatted_plan

@@ -9,7 +9,9 @@ Usage:
 Accepts either a raw bench line or a driver BENCH_r{N}.json whose "tail"
 holds (possibly truncated) bench output — truncated tails are parsed
 best-effort for whatever per-query numbers survive. When both inputs are
-tools/probe.py records, PLAN-CHANGED marks each query whose plan changed.
+tools/probe.py records, PLAN-CHANGED marks each query whose plan changed,
+and PLAN-UNSTABLE one whose fingerprint differs but can also differ between
+two sessions of the same tree (probe.py marks such records "unstable").
 """
 
 from __future__ import annotations
@@ -102,7 +104,11 @@ def main(argv: list[str] | None = None) -> int:
     pa, pb = load_plans(args.before), load_plans(args.after)
     for q in sorted(set(pa) & set(pb)):
         if pa[q]["fingerprint"] != pb[q]["fingerprint"]:
-            print(f"PLAN-CHANGED {q}")
+            if pa[q].get("unstable") or pb[q].get("unstable"):
+                print(f"PLAN-UNSTABLE {q}: distinct-aggregate order varies by session; "
+                      "re-probe it alone in both trees")
+            else:
+                print(f"PLAN-CHANGED {q}")
 
     regressions = []
     for q in shared:

@@ -73,6 +73,15 @@ _SHAPE = {
 }
 
 
+# Spark's distinct-aggregate rewrite numbers its groups in hash-map order, so
+# the Expand's projections, its gid literals, the column order of every
+# operator above it and the gid filters of the aggregates can all come out
+# permuted between sessions. The gid literals tie each projection to its
+# aggregate, so sorting the projections alone would not be sound: such a
+# plan's fingerprint is marked unstable instead.
+_DISTINCT_EXPAND = re.compile(r"(?m)^\(\d+\) Expand\n(?:.+\n)*?Arguments: .*\bgid#\d+")
+
+
 def canonicalize(plan: str) -> str:
     for pat, rep in _STRIP:
         plan = pat.sub(rep, plan)
@@ -80,13 +89,14 @@ def canonicalize(plan: str) -> str:
 
 
 def plan_shape(plan: str) -> dict:
-    """Fingerprint (sha256 prefix of the canonical text) plus operator counts
-    of one formatted plan."""
+    """Fingerprint (sha256 prefix of the canonical text), whether it can
+    change between sessions with no plan change, and operator counts of one
+    formatted plan."""
     ops = [op.strip() for op in _OP.findall(plan)]
     shape = {k: sum(bool(re.fullmatch(p, op)) for op in ops) for k, p in _SHAPE.items()}
     shape["codegen_spans"] = len(set(re.findall(r"\[codegen id : (\d+)\]", plan)))
     return {"fingerprint": hashlib.sha256(canonicalize(plan).encode()).hexdigest()[:16],
-            **shape}
+            "unstable": bool(_DISTINCT_EXPAND.search(plan)), **shape}
 
 
 def print_stages(spark) -> None:
