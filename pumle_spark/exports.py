@@ -87,10 +87,6 @@ def flatten_metadata(
     return out
 
 
-def write_metadata_csv(metadata: DataFrame, path: str) -> None:
-    metadata.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
-
-
 # --------------------------------------------------------------------------
 # R1 → K2/K3: dense tensor export (npy / zarr)
 # --------------------------------------------------------------------------

@@ -14,7 +14,6 @@ from pyspark.sql import Column
 
 # F14 unit conversion constants (co2lab3DPUMLE.m:368-374, 426, 451-453)
 MEGA = 1e6
-KILO = 1e3
 BAR = 1e5  # Pa
 YEAR_S = 365.2425 * 86400.0
 GRAVITY = 9.80665  # m/s²
@@ -22,10 +21,6 @@ GRAVITY = 9.80665  # m/s²
 
 def mpa_to_pa(p_mpa: Column) -> Column:
     return p_mpa * MEGA
-
-
-def kpa_to_pa(p_kpa: Column) -> Column:
-    return p_kpa * KILO
 
 
 def years_to_seconds(t_years: Column) -> Column:

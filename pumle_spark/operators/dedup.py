@@ -198,9 +198,7 @@ def connected_components(
     al., "Connected Components in MapReduce") halves the rounds.
     """
     # both directions via ONE explode — a union of two selects would run
-    # the (possibly expensive) pairs lineage twice; the eager checkpoint
-    # materializes the edge list once for every propagation step (a lazy
-    # cache would race when two steps share one job)
+    # the (possibly expensive) pairs lineage twice
     sym = pairs.select(
         F.explode(
             F.array(
@@ -213,6 +211,7 @@ def connected_components(
     edges = (
         sym.unionAll(nodes.select("src", F.col("src").alias("dst")))
         .distinct()
+        # pin: every propagation step re-runs the pairs lineage without it (PERF.md "Pins")
         .localCheckpoint(eager=True)
     )
     # the self-loop rows are exactly the node set — initial labels for free
@@ -254,6 +253,7 @@ def connected_components(
         # decimal(38,0) accumulator: a bigint SUM can wrap under non-ANSI
         # arithmetic at extreme scale and a NULL/wrapped sum could fake the
         # fixpoint; 38 digits hold any realistic node-count x key-range.
+        # semantic pin: its eager job is the action that fills obs (PERF.md "Pins")
         labels = stepped.observe(
             obs,
             F.sum(F.col("comp").cast("decimal(38,0)")).alias("s"),

@@ -13,7 +13,6 @@
 
 from __future__ import annotations
 
-import math
 from collections.abc import Iterator
 
 import numpy as np
@@ -21,13 +20,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-
-def _as_double(col: str) -> F.Column:
-    return F.transform(F.col(col), lambda x: x.cast("double"))
-
-
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+from pumle_spark.functions.vectors import as_double, dot
 
 
 def cosine_topk(
@@ -38,10 +31,10 @@ def cosine_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k cosine: (query_id, neighbor_id, cos_sim, rnk)."""
-    e = corpus.select(F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("v"))
-    q = queries.select(F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv"))
-    cos = _dot(F.col("qv"), F.col("v")) / F.sqrt(
-        _dot(F.col("qv"), F.col("qv")) * _dot(F.col("v"), F.col("v"))
+    e = corpus.select(F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("v"))
+    q = queries.select(F.col(id_col).alias("query_id"), as_double(vec_col).alias("qv"))
+    cos = dot(F.col("qv"), F.col("v")) / F.sqrt(
+        dot(F.col("qv"), F.col("qv")) * dot(F.col("v"), F.col("v"))
     )
     scored = (
         e.crossJoin(F.broadcast(q))
@@ -115,13 +108,13 @@ def ivf_assign(
     broadcast crossJoin + per-key argmax — per-row map work; at scale the
     corpus is then repartitioned/bucketed by centroid_id (the 'inverted
     file')."""
-    e = corpus.select(F.col(id_col).alias("id"), _as_double(vec_col).alias("v")).withColumn(
-        "vn", _dot(F.col("v"), F.col("v"))
+    e = corpus.select(F.col(id_col).alias("id"), as_double(vec_col).alias("v")).withColumn(
+        "vn", dot(F.col("v"), F.col("v"))
     )
     c = centroids.select(
-        F.col("centroid_id"), _as_double(vec_col).alias("cv")
-    ).withColumn("cn", _dot(F.col("cv"), F.col("cv")))
-    sim = _dot(F.col("v"), F.col("cv")) / F.sqrt(F.col("vn") * F.col("cn"))
+        F.col("centroid_id"), as_double(vec_col).alias("cv")
+    ).withColumn("cn", dot(F.col("cv"), F.col("cv")))
+    sim = dot(F.col("v"), F.col("cv")) / F.sqrt(F.col("vn") * F.col("cn"))
     scored = e.crossJoin(F.broadcast(c)).select("id", "centroid_id", sim.alias("sim"))
     w = Window.partitionBy("id").orderBy(F.col("sim").desc(), F.col("centroid_id"))
     return (
@@ -148,13 +141,13 @@ def ivf_topk(
         "id", "neighbor_id"
     )
     # query → its n_probe nearest centroids
-    q = queries.select(F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")).withColumn(
-        "qn", _dot(F.col("qv"), F.col("qv"))
+    q = queries.select(F.col(id_col).alias("query_id"), as_double(vec_col).alias("qv")).withColumn(
+        "qn", dot(F.col("qv"), F.col("qv"))
     )
-    c = centroids.select("centroid_id", _as_double(vec_col).alias("cv")).withColumn(
-        "cn", _dot(F.col("cv"), F.col("cv"))
+    c = centroids.select("centroid_id", as_double(vec_col).alias("cv")).withColumn(
+        "cn", dot(F.col("cv"), F.col("cv"))
     )
-    qsim = _dot(F.col("qv"), F.col("cv")) / F.sqrt(F.col("qn") * F.col("cn"))
+    qsim = dot(F.col("qv"), F.col("cv")) / F.sqrt(F.col("qn") * F.col("cn"))
     wq = Window.partitionBy("query_id").orderBy(F.col("qsim").desc(), F.col("centroid_id"))
     probes = (
         q.crossJoin(F.broadcast(c))
@@ -165,10 +158,10 @@ def ivf_topk(
     )
     cand = probes.join(assignments, "centroid_id").select("query_id", "neighbor_id")
 
-    e = corpus.select(F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("v")).withColumn(
-        "vn", _dot(F.col("v"), F.col("v"))
+    e = corpus.select(F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("v")).withColumn(
+        "vn", dot(F.col("v"), F.col("v"))
     )
-    cos = _dot(F.col("qv"), F.col("v")) / F.sqrt(F.col("qn") * F.col("vn"))
+    cos = dot(F.col("qv"), F.col("v")) / F.sqrt(F.col("qn") * F.col("vn"))
     scored = (
         cand.filter(F.col("neighbor_id") != F.col("query_id"))
         .join(e, "neighbor_id")
@@ -214,13 +207,13 @@ def lsh_bucket_codes(
     """(id, bucket_code): sign-bit code over n_planes hyperplanes — a pure
     per-row map (no shuffle)."""
     planes = hyperplanes(dim, n_planes)
-    v = _as_double(vec_col)
+    v = as_double(vec_col)
     code = F.lit(0)
     for p in range(n_planes):
-        dot = F.aggregate(
+        proj = F.aggregate(
             F.zip_with(planes.getItem(p), v, lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x
         )
-        code = code + F.when(dot > 0, F.lit(1 << p)).otherwise(F.lit(0))
+        code = code + F.when(proj > 0, F.lit(1 << p)).otherwise(F.lit(0))
     return df.select(F.col(id_col).alias("id"), code.cast("int").alias("bucket_code"))
 
 
@@ -251,10 +244,10 @@ def lsh_topk(
         )
     cand = q_codes.join(c_codes, "bucket_code").select("query_id", "neighbor_id").distinct()
 
-    e = corpus.select(F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("v"))
-    q = queries.select(F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv"))
-    cos = _dot(F.col("qv"), F.col("v")) / F.sqrt(
-        _dot(F.col("qv"), F.col("qv")) * _dot(F.col("v"), F.col("v"))
+    e = corpus.select(F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("v"))
+    q = queries.select(F.col(id_col).alias("query_id"), as_double(vec_col).alias("qv"))
+    cos = dot(F.col("qv"), F.col("v")) / F.sqrt(
+        dot(F.col("qv"), F.col("qv")) * dot(F.col("v"), F.col("v"))
     )
     scored = (
         cand.filter(F.col("neighbor_id") != F.col("query_id"))

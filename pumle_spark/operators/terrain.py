@@ -83,6 +83,7 @@ def watershed_labels(pointers: DataFrame, max_iter: int = 20) -> DataFrame:
     ptr ← ptr(ptr), doubling the resolved path length, so a migration path
     of length L needs ⌈log₂ L⌉ rounds (each one equi-join + localCheckpoint
     to keep lineage flat). Early-exits when a round changes nothing."""
+    # pin: every round reads the labels twice (PERF.md "Pins")
     labels = pointers.localCheckpoint(eager=True)
     for _ in range(max_iter):
         parent = labels.select(
@@ -100,6 +101,7 @@ def watershed_labels(pointers: DataFrame, max_iter: int = 20) -> DataFrame:
                 F.col("ppi").alias("pi"),
                 F.col("ppj").alias("pj"),
             )
+            # pin: round k+1 and the moved-count both read round k (PERF.md "Pins")
             .localCheckpoint(eager=True)
         )
         n_moved = (

@@ -1,12 +1,10 @@
-"""S10/S11/K1: MATLAB .mat interop, gated on scipy (not in this container).
+"""K1: MATLAB .mat staging write, gated on scipy (the optional `interop` extra).
 
 The reference writes one .mat per INI section into each staging folder
-(mat_files.py:136-159) and the notebook reloads well solutions with
-scipy.io.loadmat (visualize_golden_data.ipynb cell 7). The engine treats
-.mat strictly as an interop format at the external-process boundary: a
-pandas-UDF-wrapped scipy call when scipy exists, a clear gate when not —
-params.json (interop.write_staging) is the engine-native staging format
-either way.
+(mat_files.py:136-159). The engine treats .mat strictly as an interop
+format at the external-process boundary: a driver-side scipy call when
+scipy exists, a clear gate when not — params.json
+(interop.write_staging) is the engine-native staging format either way.
 """
 
 from __future__ import annotations
@@ -14,7 +12,7 @@ from __future__ import annotations
 import os
 import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 _SCIPY_HINT = (
     "scipy is not installed in this environment; .mat interop is gated. "
@@ -50,31 +48,3 @@ def write_section_mats(configs: DataFrame, staging_root: str, sections: dict[str
             safe = _safe_section_name(section)
             sio.savemat(os.path.join(d, f"{safe}_{r.sim_hash}.mat"), content)
 
-
-def read_mat(spark: SparkSession, glob: str, var_names: list[str]) -> DataFrame:
-    """S10/S11: binaryFile scan + scipy parse of selected variables into a
-    long (path, var, values array<double>) DataFrame."""
-    sio = _require_scipy()
-    import io as _io
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    files = spark.read.format("binaryFile").load(glob)
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"path": [], "var": [], "values": []}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                mat = sio.loadmat(_io.BytesIO(bytes(content)), simplify_cells=True)
-                for v in var_names:
-                    if v in mat:
-                        out["path"].append(path)
-                        out["var"].append(v)
-                        out["values"].append(np.asarray(mat[v], dtype=float).ravel().tolist())
-            yield pd.DataFrame(out)
-
-    return files.select("path", "content").mapInPandas(
-        parse, schema="path string, var string, values array<double>"
-    )

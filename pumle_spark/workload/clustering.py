@@ -38,6 +38,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from pumle_spark.functions.vectors import as_double, dot
 from pumle_spark.tables import table
 from pumle_spark.workload import register
 
@@ -136,20 +137,13 @@ _SQL_SEMDEDUP = f"""
 
 # ---------------------------------------------------------------- Spark side
 
-# The vector helpers _vecd/_dot live in workload.similarity and are imported
-# inside each function: a module-level import would register similarity's
-# queries ahead of clustering's and reorder queries().
-
-
 def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r11 negative result: a round-robin repartition here (the
     # _shingle_sets idiom) regressed the whole family ~+1 s each — v is
     # consumed by every Lloyd-iteration job, so the un-materialized
     # exchange re-executed per job, and the 64-float array payload shuffle
     # costs more than the small HOF dot kernel saves.
-    from pumle_spark.workload.similarity import _vecd
-
-    return table(spark, sf_dir, "embeddings").select("vec_id", _vecd().alias("emb"))
+    return table(spark, sf_dir, "embeddings").select("vec_id", as_double("embedding").alias("emb"))
 
 
 def _init_centroids(v: DataFrame) -> DataFrame:
@@ -171,11 +165,9 @@ def _assign(v: DataFrame, cents: DataFrame) -> DataFrame:
     centroid side is always broadcast — the corpus never shuffles. `v` may
     already carry a `vn` squared-norm column (computed once per pipeline,
     not once per iteration)."""
-    from pumle_spark.workload.similarity import _dot
-
-    cn = cents.withColumn("cn", _dot(F.col("cemb"), F.col("cemb")))
-    vn = v if "vn" in v.columns else v.withColumn("vn", _dot(F.col("emb"), F.col("emb")))
-    cos = _dot(F.col("emb"), F.col("cemb")) / F.sqrt(F.col("vn") * F.col("cn"))
+    cn = cents.withColumn("cn", dot(F.col("cemb"), F.col("cemb")))
+    vn = v if "vn" in v.columns else v.withColumn("vn", dot(F.col("emb"), F.col("emb")))
+    cos = dot(F.col("emb"), F.col("cemb")) / F.sqrt(F.col("vn") * F.col("cn"))
     scored = vn.crossJoin(F.broadcast(cn)).select(
         "vec_id", "cid", F.round(cos, 6).alias("cos_sim")
     )
@@ -208,18 +200,11 @@ def _update(v: DataFrame, asg: DataFrame, cents_prev: DataFrame) -> DataFrame:
 
 
 def _kmeans_final(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pumle_spark.workload.similarity import _dot
-
-    v = _corpus(spark, sf_dir).withColumn("vn", _dot(F.col("emb"), F.col("emb")))
+    v = _corpus(spark, sf_dir).withColumn("vn", dot(F.col("emb"), F.col("emb")))
     cents = _init_centroids(v)
     for _ in range(_ITERS):
         asg = _assign(v, cents)
-        # localCheckpoint truncates the per-iteration lineage: without it the
-        # final plan re-executes every earlier assignment once per downstream
-        # use (same pattern as the watershed pointer-jumping loop,
-        # operators/terrain.py). K·D stays tiny next to the corpus, so the
-        # checkpoint is O(K·D) — never collect()ed to the driver, which keeps
-        # the path viable at K=100k on a real cluster.
+        # pin: iteration k+1 re-runs every earlier assignment without it (PERF.md "Pins")
         cents = _update(v, asg, cents).localCheckpoint(eager=True)
     return _assign(v, cents)
 
@@ -260,8 +245,6 @@ def cluster_semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     hold |c| constant (the 100 TB path). Chains collapse leftward like the
     min-label rule in dedup_minhash_clusters: a keeper may itself be dropped
     by a still-smaller keeper."""
-    from pumle_spark.workload.similarity import _dot
-
     v = _corpus(spark, sf_dir)
     # attach embedding + squared norm ONCE per vector before the pair join:
     # per-pair work is then a single dot product, not three (the norms of a
@@ -275,7 +258,7 @@ def cluster_semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         _kmeans_final(spark, sf_dir)
         .select("vec_id", "cid")
         .join(v, "vec_id")
-        .withColumn("nn", _dot(F.col("emb"), F.col("emb")))
+        .withColumn("nn", dot(F.col("emb"), F.col("emb")))
     )
     a = memb.select(
         F.col("cid"),
@@ -292,7 +275,7 @@ def cluster_semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         a.join(b, ["cid"])
         .filter(F.col("ka") < F.col("kb"))
-        .withColumn("cos_raw", _dot(F.col("ea"), F.col("eb")) / F.sqrt(F.col("na") * F.col("nb")))
+        .withColumn("cos_raw", dot(F.col("ea"), F.col("eb")) / F.sqrt(F.col("na") * F.col("nb")))
         .filter(F.col("cos_raw") >= _SEM_THRESHOLD)
         .select(
             F.col("kb").alias("vec_id"),
@@ -408,7 +391,7 @@ def embedding_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("i", "j")
         .agg(F.sum(F.col("xi") * F.col("xj")).alias("s"))
         .select("i", "j", F.expr(_sql_sdiv("s", str(_PI_FP)).replace("//", "div")).alias("g"))
-        .localCheckpoint(eager=True)  # d² rows; every iteration reuses it
+        .localCheckpoint(eager=True)  # pin: d² rows every iteration reads (PERF.md "Pins")
     )
     v = g.select(F.col("i").alias("j")).distinct().withColumn("v", F.lit(_PI_FP).cast("bigint"))
     for _ in range(_PI_ITERS):
@@ -478,15 +461,14 @@ def cluster_assignment_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment pass the pipeline already pays), plus one rank window per
     vec_id over K rows; nothing quadratic in members.
     """
-    from pumle_spark.workload.similarity import _dot
-
-    v = _corpus(spark, sf_dir).withColumn("vn", _dot(F.col("emb"), F.col("emb")))
+    v = _corpus(spark, sf_dir).withColumn("vn", dot(F.col("emb"), F.col("emb")))
     cents = _init_centroids(v)
     for _ in range(_ITERS):
         asg = _assign(v, cents)
+        # pin: iteration k+1 re-runs every earlier assignment without it (PERF.md "Pins")
         cents = _update(v, asg, cents).localCheckpoint(eager=True)
-    cn = cents.withColumn("cn", _dot(F.col("cemb"), F.col("cemb")))
-    cos = _dot(F.col("emb"), F.col("cemb")) / F.sqrt(F.col("vn") * F.col("cn"))
+    cn = cents.withColumn("cn", dot(F.col("cemb"), F.col("cemb")))
+    cos = dot(F.col("emb"), F.col("cemb")) / F.sqrt(F.col("vn") * F.col("cn"))
     scored = v.crossJoin(F.broadcast(cn)).select(
         "vec_id", "cid", F.round(cos, 6).alias("cos_sim")
     )

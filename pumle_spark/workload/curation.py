@@ -588,7 +588,7 @@ def curation_pack_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     sized = docs.select(
         "source", "doc_id", F.size(_tokens_col()).cast("bigint").alias("n_tokens")
-    ).localCheckpoint(eager=False)
+    )
     cap = F.lit(_BIN_CAPACITY).cast("bigint")
 
     def _binstat(assign: DataFrame, label: str) -> DataFrame:
@@ -945,9 +945,7 @@ def split_cluster_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pumle_spark.workload.dedup import dedup_minhash_lsh
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
-    # one LSH chain feeds BOTH consumers (components + leak counting):
-    # lazy localCheckpoint materializes the verified pairs on first action
-    # and every later branch reuses the checkpointed partitions
+    # pin: the components and the leak count both read the LSH pairs (PERF.md "Pins")
     pairs = (
         dedup_minhash_lsh(spark, sf_dir)
         .select("doc_a", "doc_b")
@@ -1817,6 +1815,7 @@ def curation_dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     from pumle_spark.workload.dedup import _tokens_col
 
+    # pins: the keeper pick, stage 1 and the attrition rollup re-read base and s1 (PERF.md "Pins")
     base = docs.select(
         "doc_id",
         F.size(_tokens_col()).alias("n_tokens"),
@@ -1829,6 +1828,7 @@ def curation_dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("doc_id") != F.col("keep_id"), 1).otherwise(0).alias("removed_exact"),
     ).localCheckpoint(eager=False)
 
+    # pin: sizes, signatures and verification all read the shingles (PERF.md "Pins")
     sh = _shingles(spark, sf_dir).localCheckpoint(eager=False)  # (doc_id, sh) distinct
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).cast("bigint").alias("n_sh"))
     sig = minhash_signatures(

@@ -70,19 +70,10 @@ def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sh_set, n_sh): each document's DISTINCT word-3-gram shingle
-    set as ONE per-row array expression, materialized once per invocation
-    with localCheckpoint. Docs with no shingle (< 3 tokens) are dropped —
-    identical to the exploded form, which never emits a row for them.
-
-    Why (r11 optimization round, guide §2.4): consumers branch over the
-    shingle relation many times — sizes, the signature pass, and BOTH verify
-    sides — and each branch re-ran the tokenize+shingle construction from
-    the parquet scan (measured: without the checkpoint, dedup_minhash_lsh's
-    plan scanned documents 6 times). Checkpointing the compact per-doc
-    array makes it ONE scan + one in-memory table; on a
-    cluster the same role is played by checkpoint() to reliable storage.
-    n_sh is the exact distinct-shingle count (sizes twin), so consumers
-    need no groupBy to recover it.
+    set as ONE per-row array expression, pinned. Docs with no shingle
+    (< 3 tokens) are dropped — identical to the exploded form, which never
+    emits a row for them. n_sh is the exact distinct-shingle count (sizes
+    twin), so consumers need no groupBy to recover it.
 
     The round-robin repartition is the repo's standing idiom for CPU-bound
     per-char kernels (text_fingerprint_winnow's class): the tokenize +
@@ -106,6 +97,7 @@ def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("doc_id", sh_set.alias("sh_set"))
         .withColumn("n_sh", F.size("sh_set").cast("bigint"))
         .filter(F.col("n_sh") > 0)
+        # pin: every consumer branch re-runs the tokenize + shingle pass without it (PERF.md "Pins")
         .localCheckpoint(eager=True)
     )
 
@@ -347,10 +339,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pumle_spark.operators.dedup import lsh_band_keys
 
     # r11 optimization-round rework (guide §2.3/§2.4), value-identical:
-    # - the shingle relation is built ONCE as a per-doc array and
-    #   checkpointed (_shingle_sets) — without it the plan re-ran the
-    #   tokenize+shingle construction 6x (sizes, both band sides, both
-    #   verify sides);
+    # - the shingle relation is built ONCE as a per-doc array (_shingle_sets);
     # - the minhash signature is a map-side projection over that array
     #   (same hash family, min over the same distinct set) instead of an
     #   explode + groupBy(key) shuffle of |shingles| rows;
@@ -358,16 +347,14 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     #   pair instead of candidate⋈shingles⋈shingles + regroup — two fewer
     #   keyed shuffles, and the shingle payload crosses the network once
     #   per candidate side instead of once per matching shingle row.
-    dsh = _shingle_sets(spark, sf_dir)  # (doc_id, sh_set, n_sh), checkpointed
+    dsh = _shingle_sets(spark, sf_dir)  # (doc_id, sh_set, n_sh)
     sig = (
         dsh.select("doc_id", *_minhash_sig_cols("sh_set", _N_HASHES))
         .select(
             F.col("doc_id").alias("key"),
             *[F.col(f"_dig{s // 4}.mh{s}").alias(f"mh{s}") for s in range(_N_HASHES)],
         )
-        # bands reference the signature twice (both join sides); checkpoint
-        # the tiny (doc, 8 hex slices) table so the md5-per-shingle pass
-        # runs once, not twice
+        # pin: both band-join sides re-run the md5-per-shingle pass without it (PERF.md "Pins")
         .localCheckpoint(eager=True)
     )
     bands = lsh_band_keys(sig, _N_HASHES, rows_per_band=2).withColumnRenamed("key", "doc_id")
@@ -696,6 +683,7 @@ def dedup_clusters_recursive_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     graphs the pointer-jumping operator with localCheckpoint per round is
     the scale path; this query pins the ENGINE SURFACE, not a new
     algorithm."""
+    # pin: the bound check and the recursive walk both read the pairs (PERF.md "Pins")
     pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b").localCheckpoint(eager=True)
     _assert_walk_bounded(pairs)
     pairs.createOrReplaceTempView("__rc_vpairs")
@@ -790,13 +778,11 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic in cluster size (any exact pair-emitter pays it) — the
     production composition is dedup_exact first, this sweep second.
     """
-    # r12 negative result (measured, r11 shape kept): deriving this query
-    # from the _shingle_sets array front probed 2.84 -> 6.40 s (the cand
-    # bucket join degraded BroadcastHashJoin -> SortMergeJoin on the
-    # Generate-inflated size estimate and the prefix pass re-ran per side),
-    # and additionally checkpointing the prefix relation probed 7.62 s.
-    # The exploded checkpoint below keeps the planner's estimates honest.
-    sh = _shingles(spark, sf_dir).localCheckpoint(eager=True)  # (doc_id, sh), reused 3×
+    # r12 negative result (measured): deriving this query from the
+    # _shingle_sets array front probed 2.84 -> 6.40 s (the cand bucket join
+    # degraded BroadcastHashJoin -> SortMergeJoin on the Generate-inflated
+    # size estimate and the prefix pass re-ran per side).
+    sh = _shingles(spark, sf_dir)  # (doc_id, sh)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     freq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
     prefix_len = F.col("n_sh") - F.expr(
@@ -949,6 +935,50 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
+def _signature_and_truth(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(sizes, sig, truth) over the _shingle_sets front, shared by the two
+    blocking-quality reports: per-doc shingle counts (doc_id, n_sh), the
+    map-side MinHash signature (key, mh0..), and the all-pairs truth set
+    (doc_a < doc_b, Jaccard ≥ _JACCARD_MIN) — the labeled quadratic
+    grading subtree. All three are returned unpinned."""
+    dsh = _shingle_sets(spark, sf_dir)
+    sh = dsh.select("doc_id", F.explode("sh_set").alias("sh"))
+    sizes = dsh.select("doc_id", "n_sh")
+    sig = (
+        dsh.select("doc_id", *_minhash_sig_cols("sh_set", _N_HASHES))
+        .select(
+            F.col("doc_id").alias("key"),
+            *[F.col(f"_dig{s // 4}.mh{s}").alias(f"mh{s}") for s in range(_N_HASHES)],
+        )
+    )
+    a = sh.select(F.col("doc_id").alias("doc_a"), "sh")
+    b = sh.select(F.col("doc_id").alias("doc_b"), "sh")
+    tpairs = (
+        a.join(b, "sh")
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    truth = (
+        tpairs.join(
+            sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na")),
+            "doc_a",
+        )
+        .join(
+            sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb")),
+            "doc_b",
+        )
+        .filter(
+            F.col("c").cast("double") / (F.col("na") + F.col("nb") - F.col("c"))
+            >= _JACCARD_MIN
+        )
+        .select("doc_a", "doc_b")
+    )
+    return sizes, sig, truth
+
+
 @register(
     "dedup_blocking_quality",
     sql=f"""
@@ -1025,24 +1055,7 @@ def dedup_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dedup_blocking_quality (all-pairs truth subtree)",
         "the blocked candidate generator alone (its completeness is what this grades)",
     )
-    # r12 (guide §2.4): share the checkpointed _shingle_sets front and the
-    # map-side signature with dedup_minhash_lsh — the r11 shape re-ran the
-    # tokenize+shingle build for sizes, the signature pass, and both truth
-    # sides, plus an explode+groupBy shuffle for the signature itself.
-    dsh = _shingle_sets(spark, sf_dir)
-    sh = dsh.select("doc_id", F.explode("sh_set").alias("sh"))
-    sizes = dsh.select("doc_id", "n_sh")
-
-    sig = (
-        dsh.select("doc_id", *_minhash_sig_cols("sh_set", _N_HASHES))
-        .select(
-            F.col("doc_id").alias("key"),
-            *[F.col(f"_dig{s // 4}.mh{s}").alias(f"mh{s}") for s in range(_N_HASHES)],
-        )
-        # both band-join sides reference the signature: checkpoint the tiny
-        # (doc, 8 hex slices) table so the md5-per-shingle pass runs once
-        .localCheckpoint(eager=True)
-    )
+    sizes, sig, truth = _signature_and_truth(spark, sf_dir)
     bands = lsh_band_keys(sig, _N_HASHES, rows_per_band=2).withColumnRenamed(
         "key", "doc_id"
     )
@@ -1053,30 +1066,6 @@ def dedup_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b")
         .distinct()
-    )
-
-    a = sh.select(F.col("doc_id").alias("doc_a"), "sh")
-    b = sh.select(F.col("doc_id").alias("doc_b"), "sh")
-    tpairs = (
-        a.join(b, "sh")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    truth = (
-        tpairs.join(
-            sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na")),
-            "doc_a",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb")),
-            "doc_b",
-        )
-        .filter(
-            F.col("c").cast("double") / (F.col("na") + F.col("nb") - F.col("c"))
-            >= _JACCARD_MIN
-        )
-        .select("doc_a", "doc_b")
     )
 
     nd = sizes.agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
@@ -1229,10 +1218,7 @@ def dedup_incremental_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CPU-bound per character, so byte-sized input splits under-parallelize
     # it (see text_fingerprint_winnow's note) — the raw-text shuffle is
     # cheaper than the gram-row shuffle the old window form forced.
-    # r11 (guide §2.4): the normalized corpus (with its content hash) is
-    # materialized ONCE — the before-plan re-ran the tokenize projection
-    # for every consumer (existing-winnow, delta-winnow, exact index,
-    # delta hashes, delta ids: 14 parquet scans).
+    # pin: five consumers re-run the tokenize projection without it (PERF.md "Pins")
     d = (
         docs.repartition(spark.sparkContext.defaultParallelism)
         .select(
@@ -1254,8 +1240,7 @@ def dedup_incremental_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode(winnow_fp_array(_INC_GRAM, _INC_WINNOW)).alias("fp"),
         )
 
-    # fp_e0 feeds both the stop-fingerprint census and the probe index —
-    # checkpoint so the existing-side winnow kernel runs once, not twice
+    # pin: the stop-fingerprint census and the probe index both read it (PERF.md "Pins")
     fp_e0 = winnow_fps(existing).localCheckpoint(eager=True)
     hot = fp_e0.groupBy("fp").agg(F.count(F.lit(1)).alias("df")).filter(
         F.col("df") > _INC_MAXDF
@@ -1400,55 +1385,15 @@ def dedup_lsh_tuning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dedup_lsh_tuning_report (all-pairs truth subtree)",
         "the blocked candidate generators alone (their completeness is what this grades)",
     )
-    # r12 (guide §2.4): checkpointed _shingle_sets front + map-side
-    # signature, as in dedup_minhash_lsh/dedup_blocking_quality — the r11
-    # shape re-ran the tokenize+shingle build for sizes and both truth
-    # sides and shuffled |shingle| rows for the signature groupBy.
-    dsh = _shingle_sets(spark, sf_dir)
-    sh = dsh.select("doc_id", F.explode("sh_set").alias("sh"))
-    sizes = dsh.select("doc_id", "n_sh")
+    _, sig, truth = _signature_and_truth(spark, sf_dir)
+    # pins: without them the six band-join sides re-run the md5-per-shingle
+    # pass and every config's hit join the quadratic truth (PERF.md "Pins")
+    sig = sig.localCheckpoint(eager=True)
+    truth = truth.localCheckpoint(eager=False)
     n_docs_df = table(spark, sf_dir, "documents").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs")
     )
-
-    a = sh.select(F.col("doc_id").alias("doc_a"), "sh")
-    b = sh.select(F.col("doc_id").alias("doc_b"), "sh")
-    tpairs = (
-        a.join(b, "sh")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    truth = (
-        tpairs.join(
-            sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na")),
-            "doc_a",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb")),
-            "doc_b",
-        )
-        .filter(
-            F.col("c").cast("double") / (F.col("na") + F.col("nb") - F.col("c"))
-            >= _JACCARD_MIN
-        )
-        .select("doc_a", "doc_b")
-        # the truth set is joined once per config: pin it so the quadratic
-        # subtree runs once, not len(_TUNE_ROWS) times
-        .localCheckpoint(eager=False)
-    )
     n_truth_df = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_truth"))
-
-    sig = (
-        dsh.select("doc_id", *_minhash_sig_cols("sh_set", _N_HASHES))
-        .select(
-            F.col("doc_id").alias("key"),
-            *[F.col(f"_dig{s // 4}.mh{s}").alias(f"mh{s}") for s in range(_N_HASHES)],
-        )
-        # referenced by both band sides of all three configs (6 consumers):
-        # pin it so the md5-per-shingle pass runs once
-        .localCheckpoint(eager=True)
-    )
 
     out = None
     for r in _TUNE_ROWS:
@@ -1673,9 +1618,7 @@ def dedup_cdc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", "w", "pos",
         F.coalesce(F.sum("boundary").over(wprev), F.lit(0)).cast("bigint").alias("chunk_id"),
     )
-    # lazy checkpoint: chunks feeds BOTH the global frequency table and the
-    # per-source rollup probe — without the pin the whole tokenize + window
-    # + collect pipeline runs once per consumer (measured 2x the plan)
+    # pin: the frequency table and the per-source rollup both read the chunks (PERF.md "Pins")
     chunks = chunked.groupBy("doc_id", "source", "chunk_id").agg(
         F.md5(
             F.array_join(

@@ -1000,9 +1000,7 @@ def drift_embedding_mmd(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("cast(round(v[i] * v[j] * 1000000000) as bigint)").alias("p"),
         )
     )
-    # r11 (guide §2.4): s is both sides of the label-pair join — checkpoint
-    # the ~|labels|·d²/2-row moment table so the O(n·d²/2) explode+sum pass
-    # runs once, not twice (the result is fixed-size regardless of corpus)
+    # pin: both sides of the label-pair join read the moment table (PERF.md "Pins")
     s = (
         t.groupBy("label", "i", "j")
         .agg(F.sum("p").alias("sp"))

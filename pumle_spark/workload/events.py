@@ -1638,6 +1638,7 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )
+    # pin: every power-iteration step reads the transition table (PERF.md "Pins")
     t = tc.withColumn(
         "row_n", F.sum("n").over(Window.partitionBy("from_type")).cast("bigint")
     ).localCheckpoint(eager=True)
@@ -2453,6 +2454,7 @@ def attribution_markov_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("from_type", "to_type")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )
+    # pin: every removal round reads the transition table (PERF.md "Pins")
     t = tc.withColumn(
         "row_n", F.sum("n").over(Window.partitionBy("from_type")).cast("bigint")
     ).localCheckpoint(eager=True)
@@ -2461,7 +2463,7 @@ def attribution_markov_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("removed") != "START")
         .distinct()
         .unionAll(local_frame(spark, [("<none>",)], "removed string"))
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=True)  # pin: every round reads it (PERF.md "Pins")
     )
     conv_rows = rem.select(
         "removed", F.lit("CONV").alias("state"), F.lit(_ATTR_SCALE).cast("bigint").alias("v")
@@ -2482,14 +2484,7 @@ def attribution_markov_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("v"),
             )
         )
-        # localCheckpoint pins each round's (|channels|+1)x|states| value
-        # table (the _ulm_chain/_drm_chain pattern): round k+1 plans
-        # against materialized rows instead of a k-deep union tree — task
-        # binaries stay small, and the CONV seed literal reaches the next
-        # join as DATA, not a foldable expression (a constant-folded join
-        # key made Spark's injected runtime bloom filter generate
-        # `(Long)<negative literal>` which Janino cannot compile,
-        # demoting every round to interpreted evaluation).
+        # pin: round k+1 plans against rows, not a k-deep union tree (PERF.md "Pins")
         vf = nxt.unionAll(conv_rows).localCheckpoint(eager=False)
     pabs = (
         rem.join(

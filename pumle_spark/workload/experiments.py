@@ -1605,8 +1605,8 @@ def abtest_fdr_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined identically on both sides.
 
     Scale: assignment and cents are map work; per_user is ONE
-    hash-partitioned groupBy, lazily checkpointed so the arm-universe
-    count and the per-type rollup share its shuffle; both arms pivot in a
+    hash-partitioned groupBy read by the arm-universe count and the
+    per-type rollup; both arms pivot in a
     single conditional aggregation (a cells self-join would re-evaluate
     per_user per side). The BH windows run over the m-row hypothesis
     table (m = 2·|event types| — bounded, see plan_lint adjudication).
@@ -1632,14 +1632,10 @@ def abtest_fdr_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("arm"),
         )
     )
-    # lazy checkpoint: per_user feeds BOTH the arm-universe count and the
-    # metric rollup — without the pin each consumer would re-run the
-    # events scan + shuffle (the mix_unimax let-binding pattern)
     per_user = (
         e.join(assigned, "user_id")
         .groupBy("event_type", "arm", "user_id")
         .agg(F.sum(F.round(F.col("value") * 100).cast("bigint")).cast("bigint").alias("v"))
-        .localCheckpoint(eager=False)
     )
     # every user has >= 1 event, so the per_user user set IS the assigned
     # universe; counting it here avoids a second events scan

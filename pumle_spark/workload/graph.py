@@ -18,13 +18,11 @@ Graph: bipartite customer↔supplier edges (a distinct (custkey, suppkey)
 pair per order line), symmetrized, so every node has out-degree ≥ 1 and no
 dangling-mass correction is needed.
 
-Scale shape: edges + degrees are computed once and localCheckpoint-ed
-(lineage truncation for the loop — terrain's pattern); each iteration is
-one equi-join on src + one groupBy dst, both hash-partitioned on the node
-id; the node-count scalar is a single-row broadcast. At 100 TB the edge
-list is the big table and it shuffles exactly once per iteration — the same
-economics as every vertex-centric BSP system (Pregel), expressed in plain
-DataFrame ops.
+Scale shape: each iteration is one equi-join on src + one groupBy dst, both
+hash-partitioned on the node id; the node-count scalar is a single-row
+broadcast. At 100 TB the edge list is the big table and it shuffles exactly
+once per iteration — the same economics as every vertex-centric BSP system
+(Pregel), expressed in plain DataFrame ops.
 """
 
 from __future__ import annotations
@@ -180,17 +178,8 @@ def _sparsified_edges(li: DataFrame) -> DataFrame:
     count-histogram (bounded cardinality ≈ max co-order multiplicity),
     cumsum it, and interpolate v[floor(h)] + frac·(v[floor(h)+1] −
     v[floor(h)]) at h = q·(N−1) — bit-identical to DuckDB's
-    quantile_cont on the raw values.
-
-    r11 (guide §2.4): the result is localCheckpoint-ed — both consumers
-    (triangle census, link prediction) reference the edge set 5-6 times
-    (degrees ×3, census count, both wedge-join sides, triangle closure),
-    and each reference re-expanded the whole lineitem self-join +
-    histogram-quantile subtree (measured: 168 parquet scans / 144
-    broadcast exchanges in the census plan; 4 scans after). The edge set
-    is the top co-occurrence decile by construction — bounded and safe to
-    pin at any scale, unlike the raw bipartite edge list (see the
-    PageRank note below)."""
+    quantile_cont on the raw values. The result is pinned: it is the top
+    co-occurrence decile by construction, so bounded at any scale."""
     a = li.alias("a")
     b = li.alias("b")
     pairs = (
@@ -206,9 +195,7 @@ def _sparsified_edges(li: DataFrame) -> DataFrame:
         )
         .distinct()
     )
-    # pc feeds BOTH the histogram/threshold branch and the final filter —
-    # without materialization the lineitem self-join + distinct runs twice
-    # (measured r11: two 1.6s stages shuffling 16 MB each at sf0.1)
+    # pin: the threshold branch and the final filter both read the pair counts (PERF.md "Pins")
     pc = (
         pairs.groupBy("na", "nb")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -239,6 +226,7 @@ def _sparsified_edges(li: DataFrame) -> DataFrame:
         pc.crossJoin(F.broadcast(thr))
         .filter(F.col("c") > F.col("t"))
         .select("na", "nb")
+        # pin: both consumers read the edge set 5-6 times (PERF.md "Pins")
         .localCheckpoint(eager=True)
     )
 
@@ -423,11 +411,9 @@ def graph_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
         .distinct()
     )
-    # r12 (guide §2.4, same stage evidence as graph_pagerank_trade): one
-    # eager checkpoint of the edge list — the unrolled action re-executed
-    # the orders⋈lineitem+distinct subtree per superstep (64-scan
-    # pre-execution plan). The seed derives from the materialized edges
-    # (customer nodes are the even ids, so min(even src) ≡ 2*min(c)).
+    # pin: every superstep re-runs the orders⋈lineitem edge build without it (PERF.md "Pins").
+    # The seed derives from the edges (customer nodes are the even ids, so
+    # min(even src) ≡ 2*min(c)).
     edges = pairs.select((F.col("c") * 2).alias("src"), (F.col("s") * 2 + 1).alias("dst")).unionAll(
         pairs.select((F.col("s") * 2 + 1).alias("src"), (F.col("c") * 2).alias("dst"))
     ).localCheckpoint(eager=True)
@@ -769,7 +755,7 @@ def graph_kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph_bfs_reach): each round is one equi-join of the edge list
     against the surviving node set + one degree count, all hash-
     partitioned on node id; the edge list shuffles once per round and
-    localCheckpoint truncates plan lineage between rounds. Production
+    each round's survivor set is pinned. Production
     loops to convergence with an observe()-fused changed-count; the
     fixed unroll exists for the cross-engine gate."""
     pairs = (
@@ -786,6 +772,7 @@ def graph_kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionAll(
             pairs.select((F.col("s") * 2 + 1).alias("src"), (F.col("c") * 2).alias("dst"))
         )
+        # pin: every peel round re-runs the edge build without it (PERF.md "Pins")
         .localCheckpoint(eager=True)
     )
     alive = edges.select(F.col("src").alias("node")).distinct()
@@ -808,6 +795,7 @@ def graph_kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
         alive = (
             deg.filter(F.col("dg") >= _KC_K)
             .select(F.col("src").alias("node"))
+            # pin: round k+1 reads round k twice, so the lineage doubles per round (PERF.md "Pins")
             .localCheckpoint(eager=True)
         )
     a = alive.withColumnRenamed("node", "src")
@@ -897,6 +885,7 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
         .distinct()
     )
+    # pin: every LPA round re-runs the edge build without it (PERF.md "Pins")
     edges = pairs.select(
         (F.col("c") * 2).alias("src"), (F.col("s") * 2 + 1).alias("dst")
     ).unionAll(
@@ -916,6 +905,7 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("node")
             .agg(F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("nl"))).alias("m"))
             .select("node", (-F.col("m.nl")).alias("label"))
+            # pin: round k+1 re-runs every earlier round without it (PERF.md "Pins")
             .localCheckpoint(eager=False)
         )
     comm = labels.groupBy(F.col("label").alias("community")).agg(
@@ -1274,12 +1264,6 @@ def graph_ppr_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.select((F.col("s") * 2 + 1).alias("src"), (F.col("c") * 2).alias("dst"))
     )
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    # r12: the edge list itself stays UNmaterialized — checkpointing it was
-    # measured slower at both scales (the graph_pagerank_trade note above);
-    # but the SEED set is pinned: it feeds sk, the initial ranks, every
-    # teleport term and the final seed flag (~8 consumers), and each was
-    # re-running the dimension joins + the degree semi-probe (interleaved
-    # A/B at sf0.1: 5.9 -> 4.7 s with the pin).
     sup = table(spark, sf_dir, "supplier")
     nat = table(spark, sf_dir, "nation")
     reg = table(spark, sf_dir, "region")
@@ -1289,7 +1273,6 @@ def graph_ppr_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
               F.col("n_regionkey") == F.col("r_regionkey"))
         .select((F.col("s_suppkey") * 2 + 1).alias("node"))
         .join(deg.select(F.col("src").alias("node")), "node", "left_semi")
-        .localCheckpoint(eager=True)
     )
     sk = seeds.agg(F.count(F.lit(1)).alias("k"))
     ranks = seeds.crossJoin(F.broadcast(sk)).select(
@@ -1599,8 +1582,7 @@ def graph_hyperball_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("s") * 2 + 1).alias("src"), (F.col("c") * 2).alias("dst")
             )
         )
-        # r12: eager — the lazy form raced, re-executing the pairs subtree
-        # per consumer (same stage evidence as graph_pagerank_trade)
+        # pin: both supersteps re-run the edge build without it (PERF.md "Pins")
         .localCheckpoint(eager=True)
     )
     nodes = edges.select(F.col("src").alias("node")).distinct()
@@ -1654,6 +1636,7 @@ def graph_hyperball_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr(pack[0]).alias("w0"),
                 F.expr(pack[1]).alias("w1"),
             )
+            # pin: superstep 2 and both estimates read superstep 1 (PERF.md "Pins")
             .localCheckpoint(eager=False)
         )
         r = grown
@@ -1784,7 +1767,8 @@ def graph_minhash_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.join(li, o["o_orderkey"] == li["l_orderkey"])
         .select(F.col("o_custkey").alias("ck"), F.col("l_partkey").alias("pk"))
         .distinct()
-        .localCheckpoint(eager=False)  # feeds signatures + sizes + two verify probes
+        # pin: signatures, sizes and both verify probes read it (PERF.md "Pins")
+        .localCheckpoint(eager=False)
     )
     sizes = adj.groupBy("ck").agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
     sig = minhash_signatures(

@@ -401,9 +401,6 @@ def layout_curve_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
             zorder_key(F.col("xb"), F.col("yb"), _BITS).alias("zkey"),
             hilbert_key("xb", "yb", _BITS).alias("hkey"),
         )
-        # both curve cuts read this relation: pin it so the scan + Hilbert
-        # fold run once instead of once per union branch
-        .localCheckpoint(eager=False)
     )
     def cut(key: str, curve: str):
         return keys.select(

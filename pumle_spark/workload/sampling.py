@@ -940,17 +940,9 @@ def mix_unimax_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("lang", F.explode(_tokens_col()).alias("w"))
         .filter(F.col("w") != "")
     )
-    # |langs| rows feed BOTH the capped-set scalars and the final allocation:
-    # localCheckpoint pins the token rollup so the corpus is scanned once
-    # (the catalyst let-binding pattern; without it the lineage recomputes
-    # the full token explosion on each branch)
-    a = (
-        toks.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("avail"),
-            (F.lit(_UMX_EPOCH_CAP) * F.count(F.lit(1))).cast("bigint").alias("cap"),
-        )
-        .localCheckpoint(eager=False)
+    a = toks.groupBy("lang").agg(
+        F.count(F.lit(1)).cast("bigint").alias("avail"),
+        (F.lit(_UMX_EPOCH_CAP) * F.count(F.lit(1))).cast("bigint").alias("cap"),
     )
     w_cap = Window.orderBy("cap", "lang")
     rk = a.select(
@@ -1331,6 +1323,7 @@ def _drm_chain(
             F.sum("lc").cast("bigint").alias("lsum"),
         )
     )
+    # pin: every EG round re-runs the token-stream LM joins without it (PERF.md "Pins")
     ex = sc.select(
         "source",
         "n_toks",
@@ -1349,7 +1342,6 @@ def _drm_chain(
             F.expr("1000000 div k").cast("bigint").alias("alpha"),
             "k",
         )
-        .localCheckpoint(eager=False)
     )
     reps = []
     for r in range(1, _DRM_ROUNDS + 1):
@@ -1391,6 +1383,7 @@ def _drm_chain(
                 .alias("alpha"),
                 "k",
             )
+            # pin: round k+1 reads round k several times (PERF.md "Pins")
             .localCheckpoint(eager=False)
         )
         reps.append(

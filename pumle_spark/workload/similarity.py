@@ -17,6 +17,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from pumle_spark.functions.vectors import as_double, dot
 from pumle_spark.tables import table
 from pumle_spark.workload import register
 
@@ -28,15 +29,6 @@ _PQ_M = 8          # subspaces (64 dims → 8 × 8-dim subvectors)
 _PQ_SUB = _DIM // _PQ_M
 _PQ_K = 16         # codewords per subspace
 _PQ_STRIDE = 13    # deterministic codebook = subvectors of strided vec_ids
-
-
-def _vecd():
-    """embedding cast float[]→double[] so both engines accumulate in f64."""
-    return F.transform(F.col("embedding"), lambda x: x.cast("double"))
-
-
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 
 def _sq_l2_u(a, b, dim: int):
@@ -84,12 +76,12 @@ def knn_bruteforce_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # folds instead of |corpus|·|queries| redundant re-folds per pair. The
     # cosine value is bit-identical (same fold order, same sqrt(nq*nv)).
     e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", _vecd().alias("v")
-    ).withColumn("nv", _dot(F.col("v"), F.col("v")))
+        "vec_id", as_double("embedding").alias("v")
+    ).withColumn("nv", dot(F.col("v"), F.col("v")))
     q = e.filter(F.col("vec_id") % _QUERY_STRIDE == 0).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("nv").alias("nq")
     )
-    cos = _dot(F.col("qv"), F.col("v")) / F.sqrt(F.col("nq") * F.col("nv"))
+    cos = dot(F.col("qv"), F.col("v")) / F.sqrt(F.col("nq") * F.col("nv"))
     scored = (
         e.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -158,17 +150,17 @@ def _ivf_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     # method compiles slower than the interpreted HOF executes at this
     # width. The HOF evaluates once per row; only the narrow (8-term) ADC
     # kernels are unrolled (see _sq_l2_u).
-    e = table(spark, sf_dir, "embeddings").select("vec_id", _vecd().alias("emb"))
+    e = table(spark, sf_dir, "embeddings").select("vec_id", as_double("embedding").alias("emb"))
     cents = (
         e.filter(
             (F.col("vec_id") % _CENTROID_STRIDE == 0)
             & (F.col("vec_id") < _N_CENTROIDS * _CENTROID_STRIDE)
         )
         .select(F.col("vec_id").alias("centroid_id"), F.col("emb").alias("cemb"))
-        .withColumn("cn", _dot(F.col("cemb"), F.col("cemb")))
+        .withColumn("cn", dot(F.col("cemb"), F.col("cemb")))
     )
-    ev = e.withColumn("vn", _dot(F.col("emb"), F.col("emb")))
-    sim = _dot(F.col("emb"), F.col("cemb")) / F.sqrt(F.col("vn") * F.col("cn"))
+    ev = e.withColumn("vn", dot(F.col("emb"), F.col("emb")))
+    sim = dot(F.col("emb"), F.col("cemb")) / F.sqrt(F.col("vn") * F.col("cn"))
     scored = ev.crossJoin(F.broadcast(cents)).select(
         "vec_id", "centroid_id", F.round(sim, 6).alias("cos_sim")
     )
@@ -237,24 +229,21 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOTE (r11): an unrolled literal-weight projection was tried here and
     # reverted — see the note in _ivf_ranked (py4j build cost dominates at
     # this width).
-    e = table(spark, sf_dir, "embeddings").select("vec_id", _vecd().alias("emb"))
+    e = table(spark, sf_dir, "embeddings").select("vec_id", as_double("embedding").alias("emb"))
     planes = hyperplanes(_DIM, _N_PLANES)
     code = F.lit(0)
     for p in range(_N_PLANES):
-        dot = F.aggregate(
+        proj = F.aggregate(
             F.zip_with(planes.getItem(p), F.col("emb"), lambda a, b: a * b),
             F.lit(0.0),
             lambda acc, x: acc + x,
         )
-        code = code + F.when(dot > 0, F.lit(1 << p)).otherwise(F.lit(0))
-    # r11: eager checkpoint — both self-join sides consumed this relation,
-    # so the 16 interpreted hyperplane folds (and the norm) ran twice per
-    # vector (4 parquet scans in the before-plan). Materialized once, the
-    # join reads slim cached rows and the code computation is map-only.
+        code = code + F.when(proj > 0, F.lit(1 << p)).otherwise(F.lit(0))
+    # pin: both self-join sides re-run the 16 hyperplane folds without it (PERF.md "Pins")
     ec = (
         e.repartition(spark.sparkContext.defaultParallelism)
         .select("vec_id", "emb", code.cast("int").alias("bucket_code"))
-        .withColumn("n", _dot(F.col("emb"), F.col("emb")))
+        .withColumn("n", dot(F.col("emb"), F.col("emb")))
         .localCheckpoint(eager=True)
     )
 
@@ -270,7 +259,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("emb").alias("eb"),
         F.col("n").alias("nb"),
     )
-    cos = _dot(F.col("ea"), F.col("eb")) / F.sqrt(F.col("na") * F.col("nb"))
+    cos = dot(F.col("ea"), F.col("eb")) / F.sqrt(F.col("na") * F.col("nb"))
     return (
         a.join(b, "bucket_code")
         .filter(F.col("vec_a") < F.col("vec_b"))
@@ -319,15 +308,15 @@ def ann_lsh_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pumle_spark.operators.similarity import hyperplanes
 
     planes = hyperplanes(_DIM, _N_PLANES)
-    v = _vecd()
+    v = as_double("embedding")
     code = F.lit(0)
     for p in range(_N_PLANES):
-        dot = F.aggregate(
+        proj = F.aggregate(
             F.zip_with(planes.getItem(p), v, lambda a, b: a * b),
             F.lit(0.0),
             lambda acc, x: acc + x,
         )
-        code = code + F.when(dot > 0, F.lit(1 << p)).otherwise(F.lit(0))
+        code = code + F.when(proj > 0, F.lit(1 << p)).otherwise(F.lit(0))
     e = table(spark, sf_dir, "embeddings")
     return e.select("vec_id", code.cast("int").alias("bucket_code"))
 
@@ -488,20 +477,18 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ann_recall_report (queries x corpus ground-truth pass)",
         "ann_ivfpq_topk / ann_pq_adc_topk (the paths this report grades)",
     )
-    # r12 (guide §2.4): the decoded corpus feeds ~10 consumers (q, the
-    # exact pass, and every method's rerank join) and each re-ran the
-    # scan + per-element cast transform; materialize it once.
+    # pin: ~10 consumers (queries, exact pass, reranks) read the decoded corpus (PERF.md "Pins")
     e = (
         table(spark, sf_dir, "embeddings")
-        .select("vec_id", _vecd().alias("v"))
-        .withColumn("nv", _dot(F.col("v"), F.col("v")))
+        .select("vec_id", as_double("embedding").alias("v"))
+        .withColumn("nv", dot(F.col("v"), F.col("v")))
         .localCheckpoint(eager=True)
     )
     q = e.filter(F.col("vec_id") % _QUERY_STRIDE == 0).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("nv").alias("nq")
     )
 
-    cos = _dot(F.col("qv"), F.col("v")) / F.sqrt(F.col("nq") * F.col("nv"))
+    cos = dot(F.col("qv"), F.col("v")) / F.sqrt(F.col("nq") * F.col("nv"))
     w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
 
     def topk(cand: DataFrame) -> DataFrame:
@@ -660,7 +647,7 @@ def ann_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles of n·{_PQ_M} and n rows; the n·M·K distance work is map-local.
     Assignment ties and cross-engine float-sum noise resolve on
     (ROUND(d2, 6), cent_id)."""
-    v = table(spark, sf_dir, "embeddings").select("vec_id", _vecd().alias("emb"))
+    v = table(spark, sf_dir, "embeddings").select("vec_id", as_double("embedding").alias("emb"))
     cents = v.filter(
         (F.col("vec_id") % _PQ_STRIDE == 0) & (F.col("vec_id") < _PQ_K * _PQ_STRIDE)
     ).select((F.col("vec_id") / _PQ_STRIDE).cast("bigint").alias("cent_id"), F.col("emb").alias("cemb"))
@@ -771,7 +758,7 @@ def _adc_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared ADC scoring pipeline (query_id, neighbor_id, adc_d2) — the
     Spark mirror of _SQL_ADC_CTES, consumed by ann_pq_adc_topk (ranked
     as-is) and ann_adc_rerank (candidate generation)."""
-    v = table(spark, sf_dir, "embeddings").select("vec_id", _vecd().alias("emb"))
+    v = table(spark, sf_dir, "embeddings").select("vec_id", as_double("embedding").alias("emb"))
     cents = v.filter(
         (F.col("vec_id") % _PQ_STRIDE == 0) & (F.col("vec_id") < _PQ_K * _PQ_STRIDE)
     ).select((F.col("vec_id") / _PQ_STRIDE).cast("bigint").alias("cent_id"), F.col("emb").alias("cemb"))
@@ -880,7 +867,7 @@ def ann_adc_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("crnk") <= _RERANK_C)
         .select("query_id", "neighbor_id", "adc_d2")
     )
-    v = table(spark, sf_dir, "embeddings").select("vec_id", _vecd().alias("emb"))
+    v = table(spark, sf_dir, "embeddings").select("vec_id", as_double("embedding").alias("emb"))
     exact_expr = F.aggregate(
         F.zip_with("qemb", "nemb", lambda x, y: (x - y) * (x - y)),
         F.lit(0.0),
@@ -969,7 +956,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann_ivf_assign's partitioning with ann_pq_adc_topk's scoring; at scale
     the corpus is BUCKETED by centroid_id so the probe never rescans other
     cells, and codes are {_PQ_M * 4} bits per vector in memory."""
-    v = table(spark, sf_dir, "embeddings").select("vec_id", _vecd().alias("emb"))
+    v = table(spark, sf_dir, "embeddings").select("vec_id", as_double("embedding").alias("emb"))
 
     assign = _ivf_ranked(spark, sf_dir).filter(F.col("rn") == 1).select(
         "vec_id", "centroid_id"
@@ -1085,12 +1072,12 @@ def embedding_matryoshka_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant ×{len(_MRL_DIMS)} fan-out and a 3-row aggregate — linear in
     the corpus with sub-vector slices computed JVM-side.
     """
-    e = table(spark, sf_dir, "embeddings").select("vec_id", _vecd().alias("v"))
+    e = table(spark, sf_dir, "embeddings").select("vec_id", as_double("embedding").alias("v"))
     a = e.select(F.col("vec_id").alias("ida"), F.col("v").alias("va"))
     b = e.select((F.col("vec_id") - 1).alias("ida"), F.col("v").alias("vb"))
 
     def cos(x, y):
-        return _dot(x, y) / F.sqrt(_dot(x, x) * _dot(y, y))
+        return dot(x, y) / F.sqrt(dot(x, x) * dot(y, y))
 
     pairs = a.join(b, "ida").select(
         "va", "vb", cos(F.col("va"), F.col("vb")).alias("cos_full")
@@ -1532,8 +1519,8 @@ def retrieval_mmr_diversified(spark: SparkSession, sf_dir: str) -> DataFrame:
     (broadcast query set × corpus — at 100 TB swap in the IVF route the
     `ann_*` family provides); everything after operates on
     |queries| × {_MMR_POOL} rows with broadcast-sized selection state."""
-    v = table(spark, sf_dir, "embeddings").select("vec_id", _vecd().alias("emb"))
-    vn = v.withColumn("nv", _dot(F.col("emb"), F.col("emb")))
+    v = table(spark, sf_dir, "embeddings").select("vec_id", as_double("embedding").alias("emb"))
+    vn = v.withColumn("nv", dot(F.col("emb"), F.col("emb")))
     q = vn.filter(F.col("vec_id") % _QUERY_STRIDE == 0).select(
         F.col("vec_id").alias("qid"), F.col("emb").alias("qemb"), F.col("nv").alias("nq")
     )
@@ -1544,7 +1531,7 @@ def retrieval_mmr_diversified(spark: SparkSession, sf_dir: str) -> DataFrame:
             "qid",
             F.col("vec_id").alias("cand"),
             F.round(
-                _dot(F.col("qemb"), F.col("emb")) / F.sqrt(F.col("nq") * F.col("nv"))
+                dot(F.col("qemb"), F.col("emb")) / F.sqrt(F.col("nq") * F.col("nv"))
                 * 1_000_000
             )
             .cast("bigint")
@@ -1566,14 +1553,16 @@ def retrieval_mmr_diversified(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ca",
             "cb",
             F.round(
-                _dot(F.col("ea"), F.col("eb")) / F.sqrt(F.col("na") * F.col("nb"))
+                dot(F.col("ea"), F.col("eb")) / F.sqrt(F.col("na") * F.col("nb"))
                 * 1_000_000
             )
             .cast("bigint")
             .alias("sim_m"),
         )
+        # pin: every greedy MMR round re-runs the pool's pairwise sims without it (PERF.md "Pins")
         .localCheckpoint(eager=False)
     )
+    # pin: every greedy MMR round re-ranks the candidate pool without it (PERF.md "Pins")
     slim = pool.select("qid", "cand", "rel_m").localCheckpoint(eager=False)
     sel = (
         slim.withColumn(
@@ -1659,15 +1648,15 @@ def mine_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchor probes its top buckets only, with this exact ranking as the
     per-bucket rerank kernel."""
     e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("label").cast("int").alias("label"), _vecd().alias("v")
-    ).withColumn("nv", _dot(F.col("v"), F.col("v")))
+        "vec_id", F.col("label").cast("int").alias("label"), as_double("embedding").alias("v")
+    ).withColumn("nv", dot(F.col("v"), F.col("v")))
     a = e.filter(F.col("vec_id") % _QUERY_STRIDE == 0).select(
         F.col("vec_id").alias("anchor_id"),
         F.col("label").alias("anchor_label"),
         F.col("v").alias("av"),
         F.col("nv").alias("na"),
     )
-    cos = _dot(F.col("av"), F.col("v")) / F.sqrt(F.col("na") * F.col("nv"))
+    cos = dot(F.col("av"), F.col("v")) / F.sqrt(F.col("na") * F.col("nv"))
     scored = (
         e.join(F.broadcast(a), F.col("label") != F.col("anchor_label"))
         .select(
@@ -1760,12 +1749,12 @@ def sample_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per round, one broadcast of a SINGLE center row against the
     corpus — O(k·n·d) total work, the textbook distributed k-center."""
-    v = table(spark, sf_dir, "embeddings").select("vec_id", _vecd().alias("emb"))
-    n = v.withColumn("nv", _dot(F.col("emb"), F.col("emb")))
+    v = table(spark, sf_dir, "embeddings").select("vec_id", as_double("embedding").alias("emb"))
+    n = v.withColumn("nv", dot(F.col("emb"), F.col("emb")))
     seed = n.orderBy("vec_id").limit(1)
 
     def d2m(nv_x, emb_x, nv_c, emb_c):
-        return F.round((nv_x + nv_c - 2 * _dot(emb_x, emb_c)) * 1_000_000).cast("bigint")
+        return F.round((nv_x + nv_c - 2 * dot(emb_x, emb_c)) * 1_000_000).cast("bigint")
 
     c = seed.select(
         F.col("vec_id").alias("cid"), F.col("emb").alias("cemb"), F.col("nv").alias("cnv")
@@ -1870,8 +1859,8 @@ def embedding_knn_label_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit width the same kernel runs per IVF bucket (ann_ivf_assign) —
     nearest positive and impostor are both within-bucket reranks."""
     e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("label").cast("int").alias("label"), _vecd().alias("v")
-    ).withColumn("nv", _dot(F.col("v"), F.col("v")))
+        "vec_id", F.col("label").cast("int").alias("label"), as_double("embedding").alias("v")
+    ).withColumn("nv", dot(F.col("v"), F.col("v")))
     a = e.filter(F.col("vec_id") % _LNA_STRIDE == 0).select(
         F.col("vec_id").alias("aid"),
         F.col("label").alias("alabel"),
@@ -1879,7 +1868,7 @@ def embedding_knn_label_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nv").alias("na"),
     )
     sim_m = F.round(
-        _dot(F.col("av"), F.col("v")) / F.sqrt(F.col("na") * F.col("nv")) * 1_000_000
+        dot(F.col("av"), F.col("v")) / F.sqrt(F.col("na") * F.col("nv")) * 1_000_000
     ).cast("bigint")
     # r11: round-robin repartition of the STREAMED side only — the
     # |anchors|-dots-per-row kernel otherwise pins to the single-row-group
@@ -1998,7 +1987,7 @@ def embedding_sign_hamming_agreement(spark: SparkSession, sf_dir: str) -> DataFr
         "ann_ivfpq_topk / ann_lsh_codes (the production retrieval paths)",
     )
     half = _DIM // 2
-    e = table(spark, sf_dir, "embeddings").select("vec_id", _vecd().alias("v"))
+    e = table(spark, sf_dir, "embeddings").select("vec_id", as_double("embedding").alias("v"))
     hi = F.expr(
         f"aggregate(sequence(0, {half - 1}), cast(0 as bigint),"
         f" (acc, i) -> acc + IF(v[i] > 0d, shiftleft(cast(1 as bigint), {half - 1} - i),"
@@ -2011,7 +2000,7 @@ def embedding_sign_hamming_agreement(spark: SparkSession, sf_dir: str) -> DataFr
     )
     codes = e.select(
         "vec_id", "v", hi.alias("hi"), lo.alias("lo")
-    ).withColumn("nv", _dot(F.col("v"), F.col("v")))
+    ).withColumn("nv", dot(F.col("v"), F.col("v")))
     q = codes.filter(F.col("vec_id") % _QUERY_STRIDE == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
@@ -2019,7 +2008,7 @@ def embedding_sign_hamming_agreement(spark: SparkSession, sf_dir: str) -> DataFr
         F.col("lo").alias("qlo"),
         F.col("nv").alias("nq"),
     )
-    cos = _dot(F.col("qv"), F.col("v")) / F.sqrt(F.col("nq") * F.col("nv"))
+    cos = dot(F.col("qv"), F.col("v")) / F.sqrt(F.col("nq") * F.col("nv"))
     scored = (
         codes.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -2151,7 +2140,7 @@ def embedding_jl_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a single-row broadcast onto the bucket rows (plan_lint class a).
     Reference: no embedding surface in the reference repo (SURVEY §2.13
     beyond-reference family)."""
-    e = table(spark, sf_dir, "embeddings").select("vec_id", _vecd().alias("v"))
+    e = table(spark, sf_dir, "embeddings").select("vec_id", as_double("embedding").alias("v"))
     b = e.select((F.col("vec_id") - 1).alias("vec_id"), F.col("v").alias("w"))
     pairs = e.join(b, "vec_id").select(
         F.col("vec_id").alias("pair_id"),

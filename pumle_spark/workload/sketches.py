@@ -97,11 +97,6 @@ def _q3(col: F.Column) -> F.Column:
     return F.floor(col * F.lit(1000.0) + F.lit(0.5)) / F.lit(1000.0)
 
 
-def _sql_q3(expr: str) -> str:
-    """SQL twin of _q3 — keep the operation order character-identical."""
-    return f"FLOOR(({expr}) * 1000.0 + 0.5) / 1000.0"
-
-
 def _hll_estimates(spark: SparkSession, regs: DataFrame) -> DataFrame:
     """registers -> (tag, n_empty_buckets, chosen_est): harmonic estimate
     with exact integer register sums, linear-counting below 2.5m."""

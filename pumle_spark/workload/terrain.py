@@ -151,6 +151,7 @@ def trap_spill_volumes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pumle_spark.operators.terrain import trap_assignment
     from pumle_spark.operators.terrain import trap_spill_volumes as volumes
 
+    # pin: the volume operator reads the labels three times (PERF.md "Pins")
     labels = trap_assignment(_surface(spark, sf_dir)).localCheckpoint(eager=True)
     out = volumes(labels)
     return out.select(

@@ -179,11 +179,7 @@ def corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )  # parallelize the tokenize kernel off the single-row-group scan
     d = docs.select("doc_id", "lang", _tokens_col().alias("ws"))
     n_tokens = F.size("ws")
-    # r11: materialize the slim scored relation once — the previous
-    # keep→(groupBy ⋈ keep) form consumed `keep` twice (two full scans +
-    # tokenizations), and predicate pushdown inlined the tokenize chain into
-    # the scan filter a further ~4x per row. The checkpoint holds 5 narrow
-    # columns, so one scan + exactly one tokenize+md5 per row.
+    # pin: without it the gate filters inline the tokenize chain per term (PERF.md "Pins")
     scored = d.select(
         "doc_id",
         "lang",
@@ -2201,6 +2197,7 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("bigint").alias("f"))
     )
+    # pin: the first merge round reads the word table twice (PERF.md "Pins")
     words = wf.select(
         F.concat(F.lit("||"), F.regexp_replace("w", "(.)", "$1||")).alias("s"), "f"
     ).localCheckpoint(eager=False)
@@ -2293,6 +2290,7 @@ def text_bpe_encode_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").select(
         "source", _tokens_col().alias("ws")
     )
+    # pins: sw and words each feed two later steps (PERF.md "Pins")
     sw = (
         d.select("source", F.explode("ws").alias("w"))
         .filter(F.col("w") != "")
@@ -2435,6 +2433,7 @@ def text_subword_greedy_vs_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").select(
         "source", _tokens_col().alias("ws")
     )
+    # pins: sw, wf, words and vocab each feed several later steps (PERF.md "Pins")
     sw = (
         d.select("source", F.explode("ws").alias("w"))
         .filter(F.col("w") != "")
@@ -2489,6 +2488,7 @@ def text_subword_greedy_vs_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("w", "sfx", "n")
             .agg(F.max(F.length("piece")).alias("bl"))
         )
+        # pin: step k+1 reads step k twice (PERF.md "Pins")
         state = (
             matched.select(
                 "w",
@@ -2698,6 +2698,7 @@ def _ulm_chain(
         .groupBy("piece")
         .agg(F.sum("f").cast("bigint").alias("cnt"))
     )
+    # pin: the seed and every round's M-step read the single chars (PERF.md "Pins")
     chars = pc0.filter(F.length("piece") == 1).localCheckpoint(eager=False)
     # top-_ULM_SEED multi-char prune: orderBy+limit is TakeOrderedAndProject
     # (per-partition top-k, one bounded merge) — the distinct-piece table is
@@ -3387,11 +3388,7 @@ def text_keyword_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("u", "v")
         .agg(F.count(F.lit(1)).alias("wt"))
     )
-    # r11: eager checkpoint — every unrolled PageRank iteration references
-    # the edge list (and deg derives from it); measured before the fix, each
-    # iteration re-ran the corpus-level adjacency extraction as its own
-    # single-task stage (~0.7 s × {_TR_ITERS} sequential). Materialized once,
-    # the loop iterates over a broadcast-sized in-memory table.
+    # pin: every PageRank iteration re-runs the adjacency extraction without it (PERF.md "Pins")
     edges = (
         ewc.select(F.col("u").alias("src"), F.col("v").alias("dst"), "wt")
         .unionAll(ewc.select(F.col("v").alias("src"), F.col("u").alias("dst"), "wt"))
@@ -4435,6 +4432,7 @@ def text_tokenizer_shootout(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
         .localCheckpoint(eager=False)
     )
+    # pins: sw, wf and words each feed both trainers and the report (PERF.md "Pins")
     wf = sw.groupBy("w").agg(F.sum("cnt").cast("bigint").alias("f")).localCheckpoint(
         eager=False
     )

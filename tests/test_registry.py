@@ -183,3 +183,76 @@ def test_readme_query_count_matches_registry():
     assert f"({n} queries, every one DuckDB-oracle-paired" in readme, (
         f"README query count is stale: registry has {n}"
     )
+
+
+# Every localCheckpoint call under pumle_spark/, per (module, function):
+# each one has a row in PERF.md "Pins" (class, on/off A/B at sf0.1 and sf1,
+# decision). A new barrier needs its own measured row there and an edit here.
+_AUDITED_PINS = {
+("pumle_spark.operators.dedup", "connected_components"): 2,
+    ("pumle_spark.operators.terrain", "watershed_labels"): 2,
+    ("pumle_spark.streaming.pipeline", "complete"): 1,
+    ("pumle_spark.workload.clustering", "_kmeans_final"): 1,
+    ("pumle_spark.workload.clustering", "cluster_assignment_margin"): 1,
+    ("pumle_spark.workload.clustering", "embedding_power_iteration"): 1,
+    ("pumle_spark.workload.curation", "curation_dedup_cascade"): 3,
+    ("pumle_spark.workload.curation", "split_cluster_aware"): 1,
+    ("pumle_spark.workload.dedup", "_shingle_sets"): 1,
+    ("pumle_spark.workload.dedup", "dedup_cdc_chunking"): 1,
+    ("pumle_spark.workload.dedup", "dedup_clusters_recursive_sql"): 1,
+    ("pumle_spark.workload.dedup", "dedup_incremental_delta"): 2,
+    ("pumle_spark.workload.dedup", "dedup_lsh_tuning_report"): 2,
+    ("pumle_spark.workload.dedup", "dedup_minhash_lsh"): 1,
+    ("pumle_spark.workload.drift", "drift_embedding_mmd"): 1,
+    ("pumle_spark.workload.events", "attribution_markov_removal"): 3,
+    ("pumle_spark.workload.events", "events_markov_stationary"): 1,
+    ("pumle_spark.workload.graph", "_sparsified_edges"): 2,
+    ("pumle_spark.workload.graph", "graph_bfs_reach"): 1,
+    ("pumle_spark.workload.graph", "graph_hyperball_reach"): 2,
+    ("pumle_spark.workload.graph", "graph_kcore_membership"): 2,
+    ("pumle_spark.workload.graph", "graph_lpa_communities"): 2,
+    ("pumle_spark.workload.graph", "graph_minhash_neighbors"): 1,
+    ("pumle_spark.workload.pipeline", "_tensor_roundtrip"): 1,
+    ("pumle_spark.workload.sampling", "_drm_chain"): 2,
+    ("pumle_spark.workload.similarity", "ann_recall_report"): 1,
+    ("pumle_spark.workload.similarity", "dedup_embedding_lsh"): 1,
+    ("pumle_spark.workload.similarity", "retrieval_mmr_diversified"): 2,
+    ("pumle_spark.workload.terrain", "trap_spill_volumes"): 1,
+    ("pumle_spark.workload.text", "_bpe_chain"): 2,
+    ("pumle_spark.workload.text", "_ulm_chain"): 4,
+    ("pumle_spark.workload.text", "_ulm_wf"): 1,
+    ("pumle_spark.workload.text", "corpus_clean_pipeline"): 1,
+    ("pumle_spark.workload.text", "text_bpe_encode_fertility"): 2,
+    ("pumle_spark.workload.text", "text_bpe_train_merges"): 1,
+    ("pumle_spark.workload.text", "text_keyword_textrank"): 1,
+    ("pumle_spark.workload.text", "text_subword_greedy_vs_merge"): 5,
+    ("pumle_spark.workload.text", "text_tokenizer_shootout"): 3,
+}
+
+
+def test_localcheckpoint_sites_are_the_audited_set():
+    import ast
+    from collections import Counter
+
+    class Pins(ast.NodeVisitor):
+        def __init__(self, module: str):
+            self.module, self.scope, self.found = module, [], Counter()
+
+        def visit_FunctionDef(self, node):
+            self.scope.append(node.name)
+            self.generic_visit(node)
+            self.scope.pop()
+
+        def visit_Call(self, node):
+            if isinstance(node.func, ast.Attribute) and node.func.attr == "localCheckpoint":
+                self.found[(self.module, self.scope[-1] if self.scope else "<module>")] += 1
+            self.generic_visit(node)
+
+    found: Counter = Counter()
+    for path in glob.glob(os.path.join(REPO, "pumle_spark", "**", "*.py"), recursive=True):
+        module = os.path.relpath(path, REPO)[: -len(".py")].replace(os.sep, ".")
+        with open(path) as fh:
+            visitor = Pins(module)
+            visitor.visit(ast.parse(fh.read()))
+        found.update(visitor.found)
+    assert dict(found) == _AUDITED_PINS
