@@ -32,7 +32,7 @@ def cmd_sweep(args) -> int:
     """Menu 1a: generate the parameter sweep and register it (SURVEY §3.1)."""
     from pumle_spark.catalog import SimulationCatalog
     from pumle_spark.sources.ini import read_ini
-    from pumle_spark.sweep import VariedParam, generate_variations
+    from pumle_spark.sweep import VariedParam, generate_variations, variation_summary
 
     spark = _spark(args)
     base = read_ini(args.ini).section("Fluid")
@@ -47,7 +47,8 @@ def cmd_sweep(args) -> int:
     cat = SimulationCatalog(spark, args.catalog)
     n_new = cat.register(sweep)
     total = cat.load().count()
-    print(f"sweep: {sweep.count()} combinations, {n_new} newly registered, catalog total {total}")
+    n = variation_summary(varied)["total_combinations"]
+    print(f"sweep: {n} combinations, {n_new} newly registered, catalog total {total}")
     return 0
 
 

@@ -21,9 +21,10 @@ The canonical store is the LONG format (sim_hash, t, cell_id, i, j, k,
 pressure, sw, sg); NULL = inactive cell (the reference's NaN). Dense
 tensors exist only in export sinks (exports.py). Partitioning by sim_hash
 makes per-sim queries partition-pruned scans; within a partition rows are
-sorted by (t, cell_id) for row-group skipping on timestep predicates —
-streamed golden (streaming/pipeline.py, the same scatter) only once
-maintenance.compact_golden rewrites it, as a file sink cannot sort.
+sorted by (t, cell_id) for row-group skipping on timestep predicates.
+The golden stream (streaming/pipeline.py) runs ingest_golden and
+write_golden on the sims each micro-batch completes, so streamed and batch
+golden are one store.
 
 Scale: no driver-side loops, no collect, no shuffle. Every input is already
 grouped by sim (one states file, one ACTNUM file), so the scatter is the
@@ -58,14 +59,12 @@ def _layout(cell_id: str, row_idx: str) -> str:
     return f"named_struct('cell_id', {cell_id}, 'row_idx', {row_idx})"
 
 
-def cell_layout(actnum: DataFrame, ncells: str) -> DataFrame:
-    """P2: (sim_hash, actnum, cells), one row per sim. ``ncells`` is the
-    sim's cell count as a SQL expression over its ACTNUM row. ``cells``
-    lists every cell id in 0..ncells-1 in order, each with its row_idx: the
-    cell's position among the sim's active cells — np.where(actnum)[0]
+def cell_layout(actnum: DataFrame, ncells: int) -> DataFrame:
+    """P2: (sim_hash, cells), one row per sim. ``cells`` lists every cell id
+    in 0..ncells-1 in order, each with its row_idx: the cell's position
+    among the sim's active cells — np.where(actnum)[0]
     (sim_results_parser.py:216), the order the simulator emits state arrays
-    in — or NULL when inactive. ``actnum`` stays for scatter's no-ACTNUM
-    case; a plan that does not read it prunes it.
+    in — or NULL when inactive.
 
     ACTNUM entries past ncells are ignored and missing ones are inactive.
     The two ordered id lists are merged by one sort per sim; a map lookup
@@ -79,20 +78,27 @@ def cell_layout(actnum: DataFrame, ncells: str) -> DataFrame:
         f"transform({active}, (c, r) -> {_layout('c', 'r')}), "
         f"transform({inactive}, c -> {_layout('c', 'CAST(NULL AS INT)')})))"
     )
-    return actnum.select("sim_hash", "actnum", F.expr(cells).alias("cells"))
+    return actnum.select("sim_hash", F.expr(cells).alias("cells"))
 
 
-def scatter(states: DataFrame, actnum: DataFrame, ncells: str) -> DataFrame:
-    """J1/J2/P3: (sim_hash, t, cell_id, pressure, sw, sg) of parse_states
-    rows, batch or stream, against each sim's broadcast cell_layout.
-    ``ncells``: the grid-dims product for ingest, ``size(actnum)`` for the
-    plume monitor, which has no dims file.
+def ingest_golden(
+    spark: SparkSession,
+    states_glob: str | list[str],
+    actnum_glob: str | list[str],
+    dims_path: str,
+) -> DataFrame:
+    """Full bronze→golden plan: golden long rows (sim_hash, t, cell_id, i,
+    j, k, pressure, sw, sg) of the states files against each sim's
+    broadcast cell_layout — dense over cells × timesteps per sim,
+    NULL-valued at inactive cells (arrays.py:90-92 NaN). Each glob may also
+    be a list of paths, as the streams in streaming/pipeline.py pass.
 
     A timestep is emitted when both arrays are present and not both empty.
-    A sim with no ACTNUM row joins a NULL actnum and gets ``ncells`` of it
-    all-inactive cells: every grid cell for ingest, none for the monitor.
+    A sim with no ACTNUM row gets every grid cell all-inactive.
     """
-    states = states.filter(
+    ni, nj, nk = read_grid_dims(spark, dims_path)
+    ncells = ni * nj * nk
+    states = read_states(spark, states_glob).filter(
         F.col("pressure").isNotNull()
         & F.col("s").isNotNull()
         & (F.greatest(F.size("pressure"), F.size("s")) > 0)
@@ -110,37 +116,28 @@ def scatter(states: DataFrame, actnum: DataFrame, ncells: str) -> DataFrame:
         f"'sw', {value.format('s')}[0], "
         f"'sg', {value.format('s')}[1])))"
     )
-    layouts = F.broadcast(cell_layout(actnum, ncells))
-    return states.join(layouts, "sim_hash", "left").select("sim_hash", "t", F.expr(rows))
-
-
-def golden_rows(
-    spark: SparkSession, states: DataFrame, actnum_glob: str, dims_path: str
-) -> DataFrame:
-    """Golden long rows (sim_hash, t, cell_id, i, j, k, pressure, sw, sg) of
-    parse_states rows, batch or stream — dense over cells × timesteps per
-    sim, NULL-valued at inactive cells (arrays.py:90-92 NaN)."""
-    ni, nj, nk = read_grid_dims(spark, dims_path)
-    golden = scatter(states, read_actnum(spark, actnum_glob), str(ni * nj * nk))
+    layouts = F.broadcast(cell_layout(read_actnum(spark, actnum_glob), ncells))
     i, j, k = ijk_exprs(F.col("cell_id"), ni, nj)
-    return golden.select("sim_hash", "t", "cell_id", i, j, k, "pressure", "sw", "sg")
-
-
-def ingest_golden(
-    spark: SparkSession, states_glob: str, actnum_glob: str, dims_path: str
-) -> DataFrame:
-    """Full bronze→golden batch plan: golden_rows over the states scan."""
-    return golden_rows(spark, read_states(spark, states_glob), actnum_glob, dims_path)
+    return (
+        states.join(layouts, "sim_hash", "left")
+        .select("sim_hash", "t", F.expr(rows))
+        .select("sim_hash", "t", "cell_id", i, j, k, "pressure", "sw", "sg")
+    )
 
 
 def write_golden(golden: DataFrame, path: str) -> None:
     """Persist golden as Parquet partitioned by sim_hash, sorted by
     (t, cell_id) within each sim → partition pruning on sim_hash, row-group
     skipping on t. The sort is task-local: ingest_golden emits each sim's
-    rows from one task, so every sim gets one file without a shuffle."""
+    rows from one task, so every sim gets one file without a shuffle.
+
+    The overwrite is dynamic: a write replaces the sims it carries and
+    keeps every other sim in the store, so landings accumulate and a
+    replayed write (a restarted stream's batch) is idempotent."""
     (
         golden.sortWithinPartitions("sim_hash", "t", "cell_id")
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("sim_hash")
         .parquet(path)
     )

@@ -1,4 +1,4 @@
-"""External-simulator interop (X1/X2/X5/X6/X7; reference simulation.cpp +
+"""External-simulator interop (X1/X2/X5/X6; reference simulation.cpp +
 simulation_script.sh + pumle.py:242-262).
 
 The reference fans out with OpenMP over staging folders, each thread
@@ -116,21 +116,3 @@ def dispatch(
     if bad:
         catalog.update_status(bad, "FAILED")
     return local_frame(spark, collected, RESULT_SCHEMA)
-
-
-def clean_staging(staging_root: str, sim_hashes: list[str] | None = None) -> int:
-    """X7 layer cleanup (pumle.py:333-385): remove staging folders (all, or
-    the listed hashes). Returns the number removed."""
-    import shutil
-
-    if not os.path.isdir(staging_root):
-        return 0
-    removed = 0
-    for name in os.listdir(staging_root):
-        if not name.startswith("staging_"):
-            continue
-        h = name[len("staging_") :]
-        if sim_hashes is None or h in sim_hashes:
-            shutil.rmtree(os.path.join(staging_root, name))
-            removed += 1
-    return removed

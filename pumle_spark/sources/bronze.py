@@ -49,22 +49,14 @@ _HASH_FROM_STATES = r"states_[^_/]+_([0-9a-f]+)\.json$"
 _HASH_FROM_GRDECL = r"grdecl_[^_/]+_([0-9a-f]+)\.json$"
 
 
-def read_states(spark: SparkSession, glob: str) -> DataFrame:
+def read_states(spark: SparkSession, glob: str | list[str]) -> DataFrame:
     """S2: states scan → (sim_hash, t, pressure array, s array-of-pairs).
 
-    wholetext read (one row per file) → parse_states.
+    A wholetext read gives one whole file per row; the file name gives
+    sim_hash, from_json with the explicit element schema parses the series,
+    and posexplode gives the exact timestep index t.
     """
-    return parse_states(spark.read.text(glob, wholetext=True))
-
-
-def parse_states(raw_text: DataFrame) -> DataFrame:
-    """How a bronze states file becomes rows, for the batch scan and the
-    file stream alike: ``raw_text`` holds one whole file per row in
-    ``value``; the file name gives sim_hash, from_json with the explicit
-    element schema parses the series, and posexplode gives the exact
-    timestep index t.
-    """
-    raw = raw_text.select(
+    raw = spark.read.text(glob, wholetext=True).select(
         F.regexp_extract(F.input_file_name(), _HASH_FROM_STATES, 1).alias("sim_hash"),
         F.from_json("value", ArrayType(STATE_SCHEMA)).alias("states"),
     )
@@ -93,7 +85,7 @@ def read_grid_dims(spark: SparkSession, path: str) -> tuple[int, int, int]:
     return int(dims[0]), int(dims[1]), int(dims[2])
 
 
-def read_actnum(spark: SparkSession, glob: str) -> DataFrame:
+def read_actnum(spark: SparkSession, glob: str | list[str]) -> DataFrame:
     """S4: ACTNUM scan → (sim_hash, actnum array<double>), one row per sim.
 
     The grdecl JSON is a flat 0/1 array whose position IS the F-order

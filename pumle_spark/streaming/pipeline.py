@@ -3,12 +3,11 @@
 A stream here is the batch query run incrementally, so each stream reuses
 its batch code:
 
-1. ``start_bronze_to_golden`` / ``start_plume_monitor``: each states_*.json
-   file landing in the bronze directory is parsed by parse_states and
-   scattered by ingest.scatter, exactly as batch ingest; the first appends
-   the golden rows to Parquet — the reference's "menu option 2" manual
-   persist (main.py:108-122) as continuous, exactly-once ingestion — and
-   the second reduces them to plume cell counts.
+1. ``start_bronze_to_golden`` / ``start_plume_monitor``: a file stream on
+   the ACTNUM files, the simulator's last write per sim; each micro-batch
+   runs batch ingest.ingest_golden on the sims it completes. The first
+   writes them into the golden store with ingest.write_golden, the second
+   appends their plume cell counts.
 
 2. ``stream_events_hourly``: watermarked tumbling-window aggregation over an
    event stream — the streaming twin of workload.events.events_hourly_rollup
@@ -27,6 +26,7 @@ import contextlib
 import os
 import shutil
 import tempfile
+import urllib.parse
 import uuid
 from collections.abc import Callable, Iterator
 
@@ -102,48 +102,65 @@ def closed_stream(spark: SparkSession, prefix: str) -> Iterator[ClosedStream]:
         shutil.rmtree(run.dir, ignore_errors=True)
 
 
-def _arriving_states(spark: SparkSession, landing_dir: str) -> DataFrame:
-    """parse_states rows of each states file as it lands: wholetext keeps
-    one file per row, so the timestep indices are the batch scan's."""
-    from pumle_spark.sources.bronze import parse_states
+def _ingest_completed_sims(
+    spark: SparkSession,
+    landing_dir: str,
+    actnum_glob: str,
+    checkpoint_dir: str,
+    sink: Callable[[DataFrame], None],
+) -> StreamingQuery:
+    """Run ``sink`` on ingest_golden of the sims that each micro-batch of a
+    file stream on ``actnum_glob`` completes. ACTNUM is the simulator's last
+    write per sim (co2lab3DPUMLE.m:532-534), so grdecl_{case}_{hash}.json
+    marks ``landing_dir``/states_{case}_{hash}.json and the g_{case}.json
+    beside it complete. A sim whose ACTNUM never lands is never streamed; a
+    missing states file (P7) or a batch spanning two dims files fails the
+    query before ``sink`` writes anything."""
+    from pumle_spark.ingest import ingest_golden
 
-    raw = (
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        # inputFiles() is empty inside foreachBatch: one small job collects
+        # the batch's ACTNUM paths (input_file_name gives escaped URIs)
+        files = batch_df.select(F.input_file_name()).collect()
+        actnum_paths = sorted({urllib.parse.unquote(r[0]) for r in files})
+        states_paths, dims_paths = [], set()
+        for path in actnum_paths:
+            name = os.path.basename(path)  # grdecl_{case}_{hash}.json
+            states_paths.append(os.path.join(landing_dir, "states" + name.removeprefix("grdecl")))
+            dims_paths.add(f"{os.path.dirname(path)}/g_{name.split('_')[1]}.json")
+        if len(dims_paths) != 1:
+            raise ValueError(f"one micro-batch spans several grid dims files: {sorted(dims_paths)}")
+        sink(ingest_golden(spark, states_paths, actnum_paths, dims_paths.pop()))
+
+    return (
         spark.readStream.format("text")
         .option("wholetext", "true")
         .option("maxFilesPerTrigger", 8)  # bounded micro-batches under burst
-        .load(landing_dir)
+        .load(actnum_glob)
+        .writeStream.foreachBatch(run)
+        .option("checkpointLocation", checkpoint_dir)
+        .start()
     )
-    return parse_states(raw)
 
 
 def start_bronze_to_golden(
     spark: SparkSession,
     landing_dir: str,
     actnum_glob: str,
-    dims_path: str,
     out_dir: str,
     checkpoint_dir: str,
 ) -> StreamingQuery:
-    """Append stream → golden Parquet partitioned by sim_hash: the
-    ingest.golden_rows (GOLDEN_SCHEMA) of each states file as it lands.
-    The ACTNUM glob is a static side listed once, at start: a sim whose
-    ACTNUM is missing then streams all-NULL rows, as in batch ingest.
+    """Golden stream: ingest.write_golden of each sim once its ACTNUM lands
+    — the reference's "menu option 2" manual persist (main.py:108-122) as
+    continuous ingestion into the batch golden store. The dynamic partition
+    overwrite makes a replayed batch rewrite the same sims: exactly-once
+    with the checkpointed file source."""
+    from pumle_spark.ingest import write_golden
 
-    File-source offsets + the Parquet file sink give exactly-once per input
-    file. A sink cannot sort a stream; maintenance.compact_golden restores
-    the (t, cell_id) order.
-    """
-    from pumle_spark.ingest import golden_rows
+    def write(golden: DataFrame) -> None:
+        write_golden(golden, out_dir)
 
-    return (
-        golden_rows(spark, _arriving_states(spark, landing_dir), actnum_glob, dims_path)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("sim_hash")
-        .outputMode("append")
-        .start()
-    )
+    return _ingest_completed_sims(spark, landing_dir, actnum_glob, checkpoint_dir, write)
 
 
 def start_plume_monitor(
@@ -154,36 +171,17 @@ def start_plume_monitor(
     checkpoint_dir: str,
     threshold: float = 0.05,
 ) -> StreamingQuery:
-    """Continuous plume monitoring: as each simulation's states JSON lands,
-    emit (sim_hash, t, n_plume_cells) — the reference's headline metric
-    (SURVEY §7.2), computed the moment results arrive instead of in a
-    nightly batch.
-
-    Each micro-batch runs batch ingest's ingest.scatter (and P3 bounds
-    rule) against the ACTNUM glob, listed anew per batch so a late ACTNUM
-    still counts. With no dims file, a sim's cells are its ACTNUM array:
-    extra active entries past the grid count, where batch ingest ignores
-    them, and a sim without ACTNUM has none. One bronze file carries a
-    sim's complete state series, so every per-(sim, t) aggregate closes
-    within its micro-batch; foreachBatch runs the batch
-    plume.plume_size_over_time on it and appends. Exactly-once per input
-    file comes from the checkpointed file source; a mid-write crash can
-    duplicate a batch's output rows on restart (standard foreachBatch
-    at-least-once residue), so downstream readers key by (sim_hash, t)."""
-    from pumle_spark.ingest import scatter
+    """Continuous plume monitoring: as each simulation completes, append
+    the batch plume.plume_size_over_time (sim_hash, t, n_plume_cells) of its
+    golden rows — the reference's headline metric (SURVEY §7.2) the moment
+    results arrive. A crash mid-append can duplicate a batch's rows on
+    restart, so readers key by (sim_hash, t)."""
     from pumle_spark.plume import plume_size_over_time
-    from pumle_spark.sources.bronze import read_actnum
 
-    def emit(batch_df: DataFrame, batch_id: int) -> None:
-        golden = scatter(batch_df, read_actnum(spark, actnum_glob), "size(actnum)")
+    def append(golden: DataFrame) -> None:
         plume_size_over_time(golden, threshold).write.mode("append").parquet(out_dir)
 
-    return (
-        _arriving_states(spark, landing_dir)
-        .writeStream.foreachBatch(emit)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _ingest_completed_sims(spark, landing_dir, actnum_glob, checkpoint_dir, append)
 
 
 def stream_dedup_events(events: DataFrame, watermark: str = "1 hour") -> DataFrame:

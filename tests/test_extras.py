@@ -14,7 +14,7 @@ from pumle_spark.exports import export_tensors
 from pumle_spark.functions.physics import interpolate_bilinear
 from pumle_spark.functions.schedule import full_schedule, rampup_timesteps
 from pumle_spark.ingest import ingest_golden
-from pumle_spark.interop import clean_staging, dispatch, write_staging
+from pumle_spark.interop import dispatch, write_staging
 from pumle_spark.plume import (
     boundary_vertical_faces,
     plume_size_over_time,
@@ -285,30 +285,6 @@ def test_dispatch_runs_skips_and_records_status(spark, tmp_path):
     hashes2 = {r.sim_hash for r in res2.collect()}
     assert hashes2 == {"cccc0003"}
 
-    assert clean_staging(staging, ["aaaa0001"]) == 1
-    assert clean_staging(staging) == 2
-
-
-def test_compact_golden_clears_a_stale_old_tree(spark, tmp_path):
-    """A compaction killed after its renames leaves ``golden._old`` behind;
-    the next one clears it instead of failing on the rename into it."""
-    from pumle_spark.ingest import read_golden
-    from pumle_spark.maintenance import compact_golden
-
-    path = str(tmp_path / "golden")
-    spark.range(6).selectExpr(
-        "CAST(id AS INT) AS t", "id AS cell_id", "0 AS i", "0 AS j", "0 AS k",
-        "CAST(id AS DOUBLE) AS pressure", "0.5D AS sw", "0.5D AS sg", "CAST(id % 2 AS STRING) AS sim_hash",
-    ).write.partitionBy("sim_hash").parquet(path)
-    rows_before = sorted(map(tuple, read_golden(spark, path).collect()), key=str)
-    stale = tmp_path / "golden._old" / "sim_hash=0"
-    stale.mkdir(parents=True)
-    (stale / "part-0.parquet").write_bytes(b"left by a killed run")
-
-    compact_golden(spark, path)
-    assert sorted(map(tuple, read_golden(spark, path).collect()), key=str) == rows_before
-    assert not list(tmp_path.glob("golden._*"))
-
 
 def test_matfiles_gated_without_scipy(spark):
     configs = spark.createDataFrame([("h1", 35.0)], "sim_hash string, pres_ref double")
@@ -355,49 +331,6 @@ def test_shingle_array_in_place_consumption(spark):
     ).select("doc_id", normalize_text("text").alias("ws"))
     out = {r.doc_id: r.n for r in df.select("doc_id", F.size(shingle_array("ws", 3)).alias("n")).collect()}
     assert out == {1: 2, 2: 0, 3: 0}  # 'a b c','b c d'; too short; empty
-
-
-def test_compact_golden_merges_small_files_preserves_rows(spark, tmp_path):
-    """Compaction merges micro-batch file litter, keeps the exact rowset,
-    and the compacted store still partition-prunes on sim_hash."""
-    import glob
-
-    import pyspark.sql.functions as F
-
-    from pumle_spark.ingest import ingest_golden, read_golden
-    from pumle_spark.maintenance import compact_golden, golden_file_stats
-    from tests.fixtures import CASE, make_bronze
-
-    sims = make_bronze(tmp_path / "b", n_sims=3, n_t=3, seed=55)
-    g = ingest_golden(
-        spark,
-        str(tmp_path / f"b/states_{CASE}_*.json"),
-        str(tmp_path / f"b/grdecl_{CASE}_*.json"),
-        str(tmp_path / f"b/g_{CASE}.json"),
-    )
-    path = str(tmp_path / "golden")
-    # simulate micro-batch litter: many tiny files per partition
-    g.repartition(12).write.partitionBy("sim_hash").parquet(path)
-
-    before = {r.sim_hash: r.n_files for r in golden_file_stats(spark, path).collect()}
-    assert max(before.values()) > 3
-
-    rows_before = sorted(map(tuple, read_golden(spark, path).collect()), key=str)
-    compact_golden(spark, path)
-    after = {r.sim_hash: r.n_files for r in golden_file_stats(spark, path).collect()}
-    rows_after = sorted(map(tuple, read_golden(spark, path).collect()), key=str)
-
-    assert rows_before == rows_after
-    assert all(n == 1 for n in after.values())  # litter merged per partition
-    assert not glob.glob(path + "._*")  # no temp trees left behind
-
-    h = next(iter(sims))
-    plan = (
-        read_golden(spark, path)
-        .filter(F.col("sim_hash") == h)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "PartitionFilters: [isnotnull(sim_hash" in plan
 
 
 def test_funnel_is_strictly_ordered(spark, tmp_path):

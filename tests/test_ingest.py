@@ -183,6 +183,35 @@ def test_write_golden_writes_one_file_per_sim(golden, tmp_path):
     assert {h: len(fs) for h, fs in files.items()} == {h: 1 for h in sims}
 
 
+def test_golden_store_accumulates_landings(spark, tmp_path):
+    """write_golden replaces only the sims it carries: two landings written
+    one after the other read back as one ingest of both, and re-landing a
+    sim replaces its rows instead of adding to them."""
+    first, second, both = (tmp_path / d for d in ("first", "second", "both"))
+    make_bronze(first, n_sims=2, n_t=N_T, seed=61)
+    make_bronze(second, n_sims=2, n_t=N_T, seed=62)
+    both.mkdir()
+    for f in [*first.iterdir(), *second.iterdir()]:
+        (both / f.name).write_text(f.read_text())
+    path = str(tmp_path / "golden")
+    write_golden(_ingest(spark, first), path)
+    write_golden(_ingest(spark, second), path)
+    want = _ingest(spark, both)
+    store = read_golden(spark, path).select(*want.columns)
+    assert store.count() == want.count() == 4 * N_T * DIMS[0] * DIMS[1] * DIMS[2]
+    assert store.exceptAll(want).count() == 0 and want.exceptAll(store).count() == 0
+
+    resent = tmp_path / "resent"
+    resent.mkdir()
+    h = sorted(first.glob(f"states_{CASE}_*.json"))[0].name[len(f"states_{CASE}_") : -len(".json")]
+    for name in (f"g_{CASE}.json", f"grdecl_{CASE}_{h}.json", f"states_{CASE}_{h}.json"):
+        (resent / name).write_text((first / name).read_text())
+    write_golden(_ingest(spark, resent), path)
+    again = read_golden(spark, path).select(*want.columns)
+    assert again.count() == want.count()
+    assert again.exceptAll(want).count() == 0
+
+
 def test_read_golden_keeps_all_digit_sim_hash_a_string(spark, tmp_path):
     """Partition inference would read sim_hash "00123456" back as the
     integer 123456; the declared schema keeps it the string it was."""

@@ -6,13 +6,17 @@ import json
 import time
 from pathlib import Path
 
-import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
 from pumle_spark.functions import money
 from pumle_spark.ingest import read_golden
-from pumle_spark.streaming.pipeline import start_bronze_to_golden, stream_events_hourly
+from pumle_spark.plume import plume_size_over_time
+from pumle_spark.streaming.pipeline import (
+    start_bronze_to_golden,
+    start_plume_monitor,
+    stream_events_hourly,
+)
 from pumle_spark.tables import DEFAULT_SF_DIR
 from tests.fixtures import CASE, DIMS, make_bronze
 from tests.test_ingest import _EDGE, _ingest
@@ -33,17 +37,44 @@ STREAM_FINALS = (
 
 
 NCELLS = DIMS[0] * DIMS[1] * DIMS[2]
+_INGEST_COLS = ("sim_hash", "t", "cell_id", "i", "j", "k", "pressure", "sw", "sg")
 
 
 def _start_golden_stream(spark, landing, out, ckpt):
     return start_bronze_to_golden(
-        spark,
-        str(landing),
-        str(landing / f"grdecl_{CASE}_*.json"),
-        str(landing / f"g_{CASE}.json"),
-        str(out),
-        str(ckpt),
+        spark, str(landing), str(landing / f"grdecl_{CASE}_*.json"), str(out), str(ckpt)
     )
+
+
+def _start_monitor(spark, landing, out, ckpt):
+    return start_plume_monitor(
+        spark, str(landing), str(landing / f"grdecl_{CASE}_*.json"), str(out), str(ckpt)
+    )
+
+
+def _monitored(spark, out):
+    return spark.read.parquet(str(out)).select(
+        "sim_hash", F.col("t").cast("int").alias("t"), "n_plume_cells"
+    )
+
+
+def _batch_plume(spark, landing):
+    return plume_size_over_time(_ingest(spark, landing)).select(
+        "sim_hash", F.col("t").cast("int").alias("t"), "n_plume_cells"
+    )
+
+
+def _assert_same_rows(got, want):
+    assert got.count() == want.count() > 0
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+
+def _land(src, dst):
+    """write-then-rename: a running stream never lists a partly written file"""
+    staged = dst.parent / f".incoming_{src.name}"
+    staged.write_text(src.read_text())
+    staged.rename(dst / src.name)
 
 
 def _dense_rows(*sims) -> int:
@@ -59,49 +90,72 @@ def _write_edge_bronze(root):
         (root / f"states_{CASE}_{h}.json").write_text(json.dumps(states))
 
 
-def test_bronze_stream_ingests_incrementally(spark, tmp_path):
+def _ingests_in_write_order(spark, tmp_path, start, result, batch):
+    """The simulator's write order: two complete sims stream; a third sim's
+    states land alone (nothing streams), the query stops and restarts from
+    its checkpoint, then its ACTNUM lands and the sim streams with its real
+    values. ``result(out)`` must equal ``batch(landing)`` over the complete
+    sims after every step."""
     landing = tmp_path / "landing"
-    out = tmp_path / "golden"
+    out = tmp_path / "out"
     ckpt = tmp_path / "ckpt"
-    landing.mkdir()
+    make_bronze(landing, n_sims=2, n_t=2, seed=21)
+    more = make_bronze(tmp_path / "stage2", n_sims=3, n_t=2, seed=22)
+    newest = list(more)[-1]
 
-    # batch 1: two sims arrive
-    sims = make_bronze(landing, n_sims=2, n_t=2, seed=21)
-    q = _start_golden_stream(spark, landing, out, ckpt)
+    q = start(spark, landing, out, ckpt)
     try:
         q.processAllAvailable()
-        n1 = read_golden(spark, str(out)).count()
-        assert n1 == _dense_rows(sims)
-        # the files hold GOLDEN_SCHEMA's columns and types
-        files = spark.read.parquet(str(out)).drop("sim_hash")
-        assert files.dtypes == read_golden(spark, str(out)).drop("sim_hash").dtypes
-
-        # batch 2: a THIRD sim lands later → incremental, exactly-once. Its
-        # ACTNUM never lands, so its dense rows are all NULL.
-        more = make_bronze(tmp_path / "stage2", n_sims=3, n_t=2, seed=22)
-        newest = list(more)[-1]
-        src = tmp_path / "stage2" / f"states_{CASE}_{newest}.json"
-        # write-then-rename: the running stream must never list a
-        # partially-written JSON file
-        staged = tmp_path / "stage2" / f".incoming_{src.name}"
-        staged.write_text(src.read_text())
-        staged.rename(landing / src.name)
+        first = batch(spark, landing)
+        _assert_same_rows(result(spark, out), first)
+        _land(tmp_path / "stage2" / f"states_{CASE}_{newest}.json", landing)
         q.processAllAvailable()
-        golden = read_golden(spark, str(out))
-        assert golden.count() == n1 + _dense_rows({newest: more[newest]})
-        assert golden.filter(F.col("sim_hash") == newest).dropna(subset=["sg"]).count() == 0
+        _assert_same_rows(result(spark, out), first.filter(F.col("sim_hash") != newest))
+    finally:
+        q.stop()
 
+    q = start(spark, landing, out, ckpt)
+    try:
+        _land(tmp_path / "stage2" / f"grdecl_{CASE}_{newest}.json", landing)
+        q.processAllAvailable()
+        got = result(spark, out)
+        _assert_same_rows(got, batch(spark, landing))
+        assert got.filter(F.col("sim_hash") == newest).count() > 0
         # re-trigger with no new files: no duplicates (checkpointed offsets)
         q.processAllAvailable()
-        assert read_golden(spark, str(out)).count() == golden.count()
+        assert result(spark, out).count() == got.count()
     finally:
         q.stop()
 
 
+def test_bronze_stream_ingests_incrementally(spark, tmp_path):
+    """Golden stream in write order: every streamed sim has real values and
+    one file in the golden store, with GOLDEN_SCHEMA's types."""
+    _ingests_in_write_order(
+        spark,
+        tmp_path,
+        _start_golden_stream,
+        lambda spark, out: read_golden(spark, str(out)).select(*_INGEST_COLS),
+        _ingest,
+    )
+    golden = read_golden(spark, str(tmp_path / "out"))
+    assert golden.filter(F.col("sg").isNotNull()).select("sim_hash").distinct().count() == 3
+    parts = sorted((tmp_path / "out").glob("sim_hash=*"))
+    assert [len(list(p.glob("*.parquet"))) for p in parts] == [1, 1, 1]
+    files = spark.read.parquet(str(tmp_path / "out")).drop("sim_hash")
+    assert files.dtypes == golden.drop("sim_hash").dtypes
+
+
+def test_plume_monitor_ingests_incrementally(spark, tmp_path):
+    """The plume monitor in the same write order, with the same restart."""
+    _ingests_in_write_order(spark, tmp_path, _start_monitor, _monitored, _batch_plume)
+
+
 def test_bronze_stream_equals_batch_ingest(spark, tmp_path):
     """Streamed golden is batch ingest's golden, row for row, on the scatter
-    edge cases (short states, no ACTNUM, short and long ACTNUM, an empty
-    timestep) and on make_bronze (oversized state arrays)."""
+    edge cases (short states, short and long ACTNUM, an empty timestep) and
+    on make_bronze (oversized state arrays). The sim with no ACTNUM file
+    never completes, so it is not streamed."""
     landing = tmp_path / "landing"
     make_bronze(landing, n_sims=3, n_t=4, seed=77)
     _write_edge_bronze(landing)
@@ -112,31 +166,62 @@ def test_bronze_stream_equals_batch_ingest(spark, tmp_path):
         q.stop()
 
     streamed = read_golden(spark, str(tmp_path / "out"))
+    assert streamed.filter(F.col("sim_hash") == "0000000b").count() == 0
     batch = _ingest(spark, landing).select(*streamed.columns)
-    assert streamed.count() == batch.count() > 0
-    assert streamed.exceptAll(batch).count() == 0
-    assert batch.exceptAll(streamed).count() == 0
+    _assert_same_rows(streamed, batch.filter(F.col("sim_hash") != "0000000b"))
 
 
-def test_compact_golden_keeps_streamed_rows(spark, tmp_path):
-    """Compaction rewrites streamed golden with every row still placed in
-    the grid (non-NULL cell_id) and equal to batch ingest."""
-    from pumle_spark.maintenance import compact_golden
+def test_actnum_without_states_fails_the_stream(spark, tmp_path):
+    """P7: an ACTNUM whose states file is missing fails the query with the
+    missing path, and the batch writes no golden, not even its complete
+    sim's."""
+    from pyspark.errors import StreamingQueryException
 
     landing = tmp_path / "landing"
-    out = tmp_path / "out"
-    sims = make_bronze(landing, n_sims=3, n_t=4, seed=77)
-    q = _start_golden_stream(spark, landing, out, tmp_path / "ckpt")
+    make_bronze(landing, n_sims=2, n_t=2, seed=41)
+    orphan = sorted(landing.glob(f"states_{CASE}_*.json"))[-1]
+    orphan.unlink()
+    q = _start_golden_stream(spark, landing, tmp_path / "out", tmp_path / "ckpt")
+    try:
+        with pytest.raises(StreamingQueryException, match=orphan.name):
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    assert not list((tmp_path / "out").glob("sim_hash=*"))
+
+
+def test_stream_batch_spanning_two_grids_fails(spark, tmp_path):
+    """Each micro-batch has one grid-dims file: ACTNUM files of two cases in
+    one batch fail the query."""
+    from pyspark.errors import StreamingQueryException
+
+    landing = tmp_path / "landing"
+    make_bronze(landing, n_sims=1, n_t=2, seed=42)
+    for f in list(landing.iterdir()):
+        f.with_name(f.name.replace(CASE, "OTHER")).write_text(f.read_text())
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    q = start_bronze_to_golden(spark, str(landing), str(landing / "grdecl_*.json"), out, ckpt)
+    try:
+        with pytest.raises(StreamingQueryException, match="several grid dims files"):
+            q.processAllAvailable()
+    finally:
+        q.stop()
+
+
+def test_plume_monitor_batch_job_count(spark, tmp_path):
+    """One monitor micro-batch over a make_bronze fleet runs 4 Spark jobs:
+    the ACTNUM path collect and the 3 of the batch ingest plus plume
+    append. The stream runs its jobs in a job group named by its runId."""
+    landing = tmp_path / "landing"
+    make_bronze(landing, n_sims=3, n_t=4, seed=77)
+    q = _start_monitor(spark, landing, tmp_path / "out", tmp_path / "ckpt")
     try:
         q.processAllAvailable()
     finally:
         q.stop()
-
-    compact_golden(spark, str(out))
-    compacted = read_golden(spark, str(out))
-    assert compacted.filter(F.col("cell_id").isNotNull()).count() == _dense_rows(sims)
-    batch = _ingest(spark, landing).select(*compacted.columns)
-    assert compacted.exceptAll(batch).count() == 0
+    assert [p["batchId"] for p in q.recentProgress if p["numInputRows"]] == [0]
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) == 4
 
 
 def test_events_hourly_stream_matches_batch(spark, tmp_path):
@@ -372,46 +457,19 @@ def test_stream_hourly_rollup_matches_batch(spark, tmp_path):
 def test_plume_monitor_matches_batch_pipeline(spark, tmp_path):
     """Streaming plume monitor == batch plume_size_over_time on the same
     bronze set: make_bronze (sim #0's oversized state rows drop in both
-    paths) plus the scatter edge cases. The monitor has no dims file, so
-    the long-ACTNUM sim counts over its whole ACTNUM array instead."""
-    from pumle_spark.plume import plume_size_over_time
-    from pumle_spark.streaming.pipeline import start_plume_monitor
-
+    paths) plus the scatter edge cases, whose sim without ACTNUM has no
+    plume cell in either path."""
     landing = tmp_path / "plm_landing"
     out = tmp_path / "plm_out"
-    ckpt = tmp_path / "plm_ckpt"
-    landing.mkdir()
     make_bronze(landing, n_sims=3, n_t=4, seed=77)
     _write_edge_bronze(landing)
 
-    q = start_plume_monitor(
-        spark,
-        str(landing),
-        actnum_glob=str(landing / f"grdecl_{CASE}_*.json"),
-        out_dir=str(out),
-        checkpoint_dir=str(ckpt),
-        threshold=0.05,
-    )
+    q = _start_monitor(spark, landing, out, tmp_path / "plm_ckpt")
     try:
         q.processAllAvailable()
     finally:
         q.stop()
-
-    got = {
-        (r.sim_hash, r.t): r.n_plume_cells
-        for r in spark.read.parquet(str(out)).collect()
-    }
-    want = {
-        (r.sim_hash, r.t): r.n_plume_cells
-        for r in plume_size_over_time(_ingest(spark, landing), threshold=0.05).collect()
-    }
-    long_actnum = "0000000d"
-    actnum, _, states = _EDGE[long_actnum]
-    assert len(actnum) > NCELLS
-    n_active = int(np.count_nonzero(actnum))
-    for t, st in enumerate(states):
-        want[(long_actnum, t)] = sum(1 for _, sg in st["s"][:n_active] if sg > 0.05)
-    assert got == want and len(got) > 0
+    _assert_same_rows(_monitored(spark, out), _batch_plume(spark, landing))
 
 
 def test_stateful_sessionize_matches_batch_windows(spark, tmp_path):
